@@ -53,7 +53,7 @@ object Inspector {
   /** Capture files under `path` → decoded, client-keyed TCP segments. */
   def segments(spark: SparkSession, path: String,
                ports: Set[Int] = HbasePorts): Dataset[KeyedSegment] = {
-    import spark.implicits._
+    import RecordEncoders._
     spark.read.format("binaryFile").load(path)
       .select(col("path"), col("content")).as[(String, Array[Byte])]
       .flatMap { case (name, bytes) => decodeFile(name, bytes, ports) }
@@ -63,8 +63,7 @@ object Inspector {
     * each connection's run, walk the state machine per partition.
     */
   def records(segs: Dataset[KeyedSegment]): Dataset[RecordInfo] = {
-    val spark = segs.sparkSession
-    import spark.implicits._
+    import RecordEncoders._
     segs
       .repartition(col("client"), col("port"))
       .sortWithinPartitions(col("client"), col("port"),
@@ -165,7 +164,7 @@ object Inspector {
     * questions (retransmits, same-ms bursts at rotation boundaries).
     */
   def packets(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
+    import RecordEncoders._
     spark.read.format("binaryFile").load(path)
       .select(col("path"), col("content")).as[(String, Array[Byte])]
       .flatMap { case (name, bytes) =>

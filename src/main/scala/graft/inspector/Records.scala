@@ -1,5 +1,7 @@
 package graft.inspector
 
+import org.apache.spark.sql.{Encoder, Encoders}
+
 /** The inspector data model (reference: sink/db.clj:8-37 schema; SURVEY §3).
   *
   * `RecordInfo` is the shaped record `send!` emits: a request or response
@@ -121,3 +123,16 @@ final case class KeyedSegment(
     order: Long,
     seq: Long,
     payload: Array[Byte])
+
+/** The pipeline's typed encoders, derived once. Deriving one reflects over
+  * the type; through `import spark.implicits._` every call that built a
+  * plan did it again.
+  */
+object RecordEncoders {
+  implicit lazy val fileEncoder: Encoder[(String, Array[Byte])] = Encoders.product[(String, Array[Byte])]
+  implicit lazy val segmentEncoder: Encoder[KeyedSegment] = Encoders.product[KeyedSegment]
+  implicit lazy val recordEncoder: Encoder[RecordInfo] = Encoders.product[RecordInfo]
+  implicit lazy val connKeyEncoder: Encoder[(String, Int)] = Encoders.product[(String, Int)]
+  implicit lazy val packetEncoder: Encoder[(Long, String, Int, String, Int, Long, Int)] =
+    Encoders.product[(Long, String, Int, String, Int, Long, Int)]
+}

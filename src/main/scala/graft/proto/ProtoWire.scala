@@ -12,6 +12,10 @@ import scala.collection.mutable.ArrayBuffer
   * (https://protobuf.dev/programming-guides/encoding/): no generated code,
   * no external dependency, safe to ship inside executor tasks.
   *
+  * Two read forms share one field loop ([[FieldCursor]]): a [[Slice]]
+  * reads a message in place (the HBase RPC decode), a [[Msg]] is the
+  * walked message copied into a field map (TFRecord examples).
+  *
   * The writer half exists so tests and the synthetic-traffic generator can
   * hand-encode messages (SURVEY §6: "protobuf messages hand-encoded via
   * ProtoWire writer").
@@ -27,7 +31,7 @@ object ProtoWire {
   final class TruncatedException(msg: String) extends RuntimeException(msg)
 
   /** Cursor over a byte slice. */
-  final class Reader(val buf: Array[Byte], var pos: Int, val end: Int) {
+  class Reader(val buf: Array[Byte], var pos: Int, val end: Int) {
     def this(buf: Array[Byte]) = this(buf, 0, buf.length)
 
     def hasRemaining: Boolean = pos < end
@@ -79,19 +83,124 @@ object ProtoWire {
       r
     }
 
-    def readBytes(len: Int): Array[Byte] = {
-      if (len < 0 || remaining < len)
-        throw new TruncatedException(s"bytes $len > $remaining")
-      val out = java.util.Arrays.copyOfRange(buf, pos, pos + len)
-      pos += len
-      out
-    }
-
     /** Reads one varint-length-prefixed message slice (= protobuf-java
       * `parseDelimitedFrom`, reference hbase.clj:88,92,96 etc.).
       */
     def readDelimited(): Reader = readSlice(readVarint().toInt)
+
+    /** [[readDelimited]] as a checked message [[Slice]]. */
+    def readMessage(): Slice = {
+      val r = readDelimited()
+      new Slice(buf, r.pos, r.end)
+    }
   }
+
+  /** Steps over the fields of one message slice in encoding order, in
+    * place. After `next()` returns true, `field` and `wireType` describe
+    * the field just passed; its value is `value` (varint, fixed64, or
+    * fixed32 sign-extended) or, when length-delimited, the byte range
+    * `[valueStart, pos)`. This is the only tag and wire-type loop in the
+    * codec: truncation, field 0 and the group/reserved wire types
+    * (3/4/6/7 — HBase protos never use groups) throw here.
+    */
+  final class FieldCursor(buf: Array[Byte], start: Int, end: Int)
+      extends Reader(buf, start, end) {
+    var field = 0
+    var wireType = 0
+    var value = 0L
+    var valueStart = 0
+
+    def next(): Boolean =
+      if (pos >= end) false
+      else {
+        val tag = readVarint()
+        field = (tag >>> 3).toInt
+        wireType = (tag & 0x7).toInt
+        if (field == 0) throw new TruncatedException("field 0")
+        wireType match {
+          case WtVarint  => value = readVarint()
+          case WtFixed64 => value = readFixed64()
+          case WtLenDelim =>
+            val len = readVarint().toInt
+            if (len < 0 || remaining < len)
+              throw new TruncatedException(s"bytes $len > $remaining")
+            valueStart = pos
+            pos += len
+          case WtFixed32 => value = readFixed32().toLong
+          case other     => throw new TruncatedException(s"wire type $other")
+        }
+        true
+      }
+  }
+
+  /** One message read in place: the range `[start, end)` of `buf`. Making
+    * a slice walks every field once, so it throws exactly where [[parse]]
+    * would; the accessors walk it again and copy nothing but the strings
+    * they return. A nested message is sliced (and so checked) only when
+    * read. Scalar accessors are last-wins, like [[Msg]]'s.
+    */
+  final class Slice(val buf: Array[Byte], val start: Int, val end: Int) {
+    locally { val c = cursor; while (c.next()) () }
+
+    private def cursor: FieldCursor = new FieldCursor(buf, start, end)
+
+    /** Any occurrence of `f`, whatever its wire type. */
+    def has(f: Int): Boolean = {
+      val c = cursor
+      while (c.next()) if (c.field == f) return true
+      false
+    }
+    def varintOr(f: Int, dflt: Long): Long = {
+      val c = cursor
+      var v = dflt
+      while (c.next()) if (c.field == f && c.wireType == WtVarint) v = c.value
+      v
+    }
+    def bool(f: Int): Boolean = varintOr(f, 0L) != 0L
+
+    /** `read(buf, offset, length)` over the last length-delimited
+      * occurrence of `f`.
+      */
+    def lastBytes[A](f: Int)(read: (Array[Byte], Int, Int) => A): Option[A] = {
+      val c = cursor
+      var from = -1
+      var until = 0
+      while (c.next()) if (c.field == f && c.wireType == WtLenDelim) {
+        from = c.valueStart; until = c.pos
+      }
+      if (from < 0) None else Some(read(buf, from, until - from))
+    }
+    def string(f: Int): Option[String] =
+      lastBytes(f)(new String(_, _, _, java.nio.charset.StandardCharsets.UTF_8))
+    def msg(f: Int): Option[Slice] = lastBytes(f)((b, off, len) => new Slice(b, off, off + len))
+
+    /** Number of length-delimited occurrences of `f` (none is parsed). */
+    def bytesCount(f: Int): Int = {
+      val c = cursor
+      var n = 0
+      while (c.next()) if (c.field == f && c.wireType == WtLenDelim) n += 1
+      n
+    }
+    /** Every length-delimited occurrence of `f` as a message, in order. */
+    def foreachMsg(f: Int)(fn: Slice => Unit): Unit = {
+      val c = cursor
+      while (c.next()) if (c.field == f && c.wireType == WtLenDelim)
+        fn(new Slice(buf, c.valueStart, c.pos))
+    }
+    /** Every value of a repeated varint field `f`, packed or not. */
+    def foreachVarint(f: Int)(fn: Long => Unit): Unit = {
+      val c = cursor
+      while (c.next()) if (c.field == f) {
+        if (c.wireType == WtVarint) fn(c.value)
+        else if (c.wireType == WtLenDelim) {
+          val packed = new Reader(buf, c.valueStart, c.pos)
+          while (packed.hasRemaining) fn(packed.readVarint())
+        }
+      }
+    }
+  }
+
+  val EmptySlice: Slice = new Slice(Array.emptyByteArray, 0, 0)
 
   def zigzagDecode(v: Long): Long = (v >>> 1) ^ -(v & 1)
   def zigzagEncode(v: Long): Long = (v << 1) ^ (v >> 63)
@@ -128,26 +237,23 @@ object ProtoWire {
     def msgs(f: Int): Vector[Msg] = bytesList(f).map(parse)
   }
 
-  /** Walks every field of the message slice. Unknown fields are retained
-    * (we dispatch on field numbers); groups (deprecated wire types 3/4) are
-    * rejected — HBase protos never use them.
+  /** Walks every field of the message slice into a [[Msg]], copying each
+    * length-delimited value. Unknown fields are retained (we dispatch on
+    * field numbers).
     */
   def parse(r: Reader): Msg = {
+    val c = new FieldCursor(r.buf, r.pos, r.end)
     val acc = scala.collection.mutable.LinkedHashMap.empty[Int, ArrayBuffer[Value]]
-    while (r.hasRemaining) {
-      val tag = r.readVarint()
-      val field = (tag >>> 3).toInt
-      val wt = (tag & 0x7).toInt
-      if (field == 0) throw new TruncatedException("field 0")
-      val v: Value = wt match {
-        case WtVarint   => VarintV(r.readVarint())
-        case WtFixed64  => Fixed64V(r.readFixed64())
-        case WtLenDelim => BytesV(r.readBytes(r.readVarint().toInt))
-        case WtFixed32  => Fixed32V(r.readFixed32())
-        case other      => throw new TruncatedException(s"wire type $other")
+    while (c.next()) {
+      val v: Value = c.wireType match {
+        case WtVarint   => VarintV(c.value)
+        case WtFixed64  => Fixed64V(c.value)
+        case WtLenDelim => BytesV(java.util.Arrays.copyOfRange(c.buf, c.valueStart, c.pos))
+        case _          => Fixed32V(c.value.toInt)
       }
-      acc.getOrElseUpdate(field, ArrayBuffer.empty) += v
+      acc.getOrElseUpdate(c.field, ArrayBuffer.empty) += v
     }
+    r.pos = c.pos
     new Msg(acc.view.mapValues(_.toVector).toMap)
   }
 

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.inspector.{ConnSnapshot, ConnTracker, Inspector, KeyedSegment, RecordInfo, StateEnvelope}
+import graft.inspector.{ConnSnapshot, ConnTracker, Inspector, KeyedSegment, RecordEncoders, RecordInfo,
+  StateEnvelope}
 
 /** Streaming packet→record pipeline (reference: core.clj:356-394
   * start-handler — the background loop over a packet channel — plus its
@@ -67,7 +68,7 @@ object InspectorStream {
                           ports: Set[Int] = Inspector.HbasePorts,
                           maxFilesPerTrigger: Option[Int] = None): Dataset[KeyedSegment] = {
     import org.apache.spark.sql.types._
-    import spark.implicits._
+    import RecordEncoders._
     // the binaryFile source's fixed schema; streaming sources require it
     // stated explicitly
     val schema = StructType(Seq(
@@ -214,8 +215,7 @@ chmod +x ${shq(rotate)} && tcpdump ${flags.mkString(" ")} ${shq(bpf)}"""
               maxBufferBytes: Long = DefaultMaxBufferBytes,
               withIdleTimeout: Boolean = true,
               maxStateEntries: Int = DefaultMaxStateEntries): Dataset[RecordInfo] = {
-    val spark = segments.sparkSession
-    import spark.implicits._
+    import RecordEncoders._
     // The state rides as kryo-serialized bytes (a product encoder for the
     // deeply nested ConnSnapshot would make per-micro-batch analysis
     // quadratic-slow), wrapped in the version-tagged StateEnvelope so an

@@ -179,6 +179,27 @@ class HbaseRpcSpec extends AnyFunSuite {
       parseRequest(frame(reqHeader(1, "not a method!"))))
   }
 
+  test("10k distinct letter-only method names each decode to their keyword") {
+    val rnd = new scala.util.Random(10000)
+    val letters = ('a' to 'z') ++ ('A' to 'Z')
+    val names = Iterator.continually(
+      Seq.fill(1 + rnd.nextInt(24))(letters(rnd.nextInt(letters.size))).mkString)
+      .distinct.take(10000).toVector
+    names.zipWithIndex.foreach { case (name, i) =>
+      val info = parseRequest(frame(reqHeader(i, name, hasParam = false)))
+      assert(info.method === toKeyword(name), name)
+      assert(info.callId === i)
+    }
+    // names outside the fixed table decode the same as names in it
+    assert(names.count(n => KnownMethods.exists(_._2 == toKeyword(n))) < 10)
+    // the [a-zA-Z]+ rule holds byte by byte: empty, digits, non-ASCII
+    // letters and an absent name are all rejected
+    Seq("", "Get1", "Gét", "Get\u0000").foreach { bad =>
+      withClue(bad)(assertThrows[DecodeException](parseRequest(frame(reqHeader(1, bad)))))
+    }
+    assertThrows[DecodeException](parseRequest(frame(writer.varint(1, 1L))))
+  }
+
   // --- responses --------------------------------------------------------
 
   private def finderFor(infos: RpcInfo*): Int => Option[RpcInfo] =
