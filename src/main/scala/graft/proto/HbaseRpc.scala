@@ -132,30 +132,8 @@ object HbaseRpc {
     (table, encoded)
   }
 
-  /** The public HBase ClientService and AdminService method names with
-    * their keywords, matched against the header bytes before any string is
-    * built. A fixed table: other names are converted on every call, so
-    * nothing here grows with the traffic.
-    */
-  private[proto] val KnownMethods: Array[(Array[Byte], String)] = Array(
-    "Get", "Mutate", "Scan", "Multi", "BulkLoadHFile", "PrepareBulkLoad",
-    "CleanupBulkLoad", "ExecService", "ExecRegionServerService",
-    "GetRegionInfo", "GetStoreFile", "GetOnlineRegion", "OpenRegion",
-    "WarmupRegion", "CloseRegion", "FlushRegion", "SplitRegion",
-    "CompactRegion", "MergeRegions", "ReplicateWALEntry", "Replay",
-    "RollWALWriter", "GetServerInfo", "StopServer", "UpdateFavoredNodes",
-    "UpdateConfiguration", "GetRegionLoad", "ClearCompactionQueues",
-    "ClearRegionBlockCache", "ExecuteProcedures", "GetSpaceQuotaSnapshots")
-    .map(n => (n.getBytes(UTF_8), toKeyword(n)))
-
   /** Keyword of a method name, which must match `[a-zA-Z]+`. */
   private def methodKeyword(b: Array[Byte], off: Int, len: Int): String = {
-    var k = 0
-    while (k < KnownMethods.length) {
-      val (name, keyword) = KnownMethods(k)
-      if (java.util.Arrays.equals(name, 0, name.length, b, off, off + len)) return keyword
-      k += 1
-    }
     // checked on the bytes: a byte outside the ASCII letters decodes to a
     // char outside [a-zA-Z] as well
     var letters = len > 0
