@@ -10,17 +10,18 @@ import graft.inspector.SyntheticTraffic
 import graft.streaming.{InspectorStream, StreamingOps}
 
 /** Streaming throughput benchmark (r16 verdict item 4: the streaming rows
-  * were spec-green but carried no committed scaled bench — the batch side
-  * has PcapBench and the 10x gate; streaming had nothing).
+  * were spec-green but carried no committed scaled bench). The batch
+  * packet pipeline is measured, stage by stage and checked against ground
+  * truth, by `python3 perfbench/run.py --workload rpc_mix --trace 1`.
   *
   * Four legs, each a bounded replay measured end to end:
   *
   *  1. `inspector` — the full streaming packet pipeline
   *     ([[InspectorStream.recordsFromPcapDir]]): synthetic rotated pcap
-  *     files ([[SyntheticTraffic.bulkPcapDir]], the PcapBench generator)
-  *     replayed with `Trigger.AvailableNow` through the stateful
+  *     files ([[SyntheticTraffic.bulkPcapDir]]) replayed with
+  *     `Trigger.AvailableNow` through the stateful
   *     flatMapGroupsWithState correlate → noop sink. Decode loss is a
-  *     hard failure, like PcapBench.
+  *     hard failure.
   *  2. `exact_dedup` — [[StreamingOps.exactDedup]]
   *     (dropDuplicatesWithinWatermark on (xxhash64, len)) over the
   *     documents corpus replayed as micro-batches through the FILE

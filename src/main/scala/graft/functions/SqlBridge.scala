@@ -24,4 +24,12 @@ object Bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(id, info, builder)
+
+  /** The session's Hadoop conf (SQL-conf overrides applied), broadcast
+    * the way Spark's own file scans ship it to their tasks.
+    */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] =
+    org.apache.spark.util.SerializableConfiguration.broadcast(spark.sparkContext,
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf())
 }

@@ -1,9 +1,12 @@
 package graft.inspector
 
+import java.io.InputStream
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pcap.{LinkDecode, PcapFile}
+import graft.sources.FileRecords
 
 /** Batch packet→record pipeline: pcap files → typed TCP segments →
   * per-connection reassembly/decode/correlation → the reference's 4-table
@@ -11,8 +14,12 @@ import graft.pcap.{LinkDecode, PcapFile}
   * send!; sink/db.clj:8-37 schema).
   *
   * Scale posture (100 TB of rotated capture files):
-  *   - one pcap file = one input task (`binaryFile` source, flatMap per
-  *     file); no driver-side byte handling;
+  *   - one pcap file = one input task, streamed through
+  *     [[graft.sources.FileRecords]]: the `binaryFile` source lists the
+  *     files and contributes only their paths, each task reads its file
+  *     one record at a time, so no whole-file array and no 2 GiB ceiling
+  *     exist, and gzip is detected by its magic, as in every source; no
+  *     driver-side byte handling;
   *   - the only shuffle moves segments to their `(client, port)` owner;
   *     `sortWithinPartitions` gives each connection an ordered run, and a
   *     single `mapPartitions` pass walks many connections per task with
@@ -26,14 +33,14 @@ object Inspector {
   /** Default RegionServer ports (reference core.clj:65-67 hbase-ports). */
   val HbasePorts: Set[Int] = Set(16020, 60020)
 
-  /** One capture file (pcap / pcapng / either gzipped) → decoded,
+  /** One decompressed capture stream (pcap or pcapng) → decoded,
     * client-keyed TCP segments (shared by the batch source and the
     * streaming directory source). Each segment carries the file's
     * first-record ts (`fileTs`): rotation order across files, used to
     * resolve millisecond ties at file boundaries (see [[KeyedSegment]]).
     */
-  def decodeFile(name: String, bytes: Array[Byte], ports: Set[Int]): Iterator[KeyedSegment] = {
-    val recs = PcapFile.recordsAuto(name, bytes).buffered
+  def decodeFile(in: InputStream, ports: Set[Int]): Iterator[KeyedSegment] = {
+    val recs = PcapFile.capture(in).buffered
     val fileTs = if (recs.hasNext) recs.head.tsMicros / 1000L else 0L
     recs.zipWithIndex.flatMap { case (r, i) =>
       LinkDecode.decode(r.data).flatMap { s =>
@@ -54,9 +61,7 @@ object Inspector {
   def segments(spark: SparkSession, path: String,
                ports: Set[Int] = HbasePorts): Dataset[KeyedSegment] = {
     import RecordEncoders._
-    spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (name, bytes) => decodeFile(name, bytes, ports) }
+    FileRecords.read(spark.read.format("binaryFile").load(path))((_, in) => decodeFile(in, ports))
   }
 
   /** Segments → shaped records: shuffle once on the connection key, order
@@ -165,16 +170,13 @@ object Inspector {
     */
   def packets(spark: SparkSession, path: String): DataFrame = {
     import RecordEncoders._
-    spark.read.format("binaryFile").load(path)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (name, bytes) =>
-        PcapFile.recordsAuto(name, bytes).flatMap { r =>
-          LinkDecode.decode(r.data).map(s =>
-            (r.tsMicros / 1000L, s.srcAddr, s.srcPort, s.dstAddr, s.dstPort,
-              s.seq, s.payload.length))
-        }
+    FileRecords.read(spark.read.format("binaryFile").load(path)) { (_, in) =>
+      PcapFile.capture(in).flatMap { r =>
+        LinkDecode.decode(r.data).map(s =>
+          (r.tsMicros / 1000L, s.srcAddr, s.srcPort, s.dstAddr, s.dstPort,
+            s.seq, s.payload.length))
       }
-      .toDF("ts_ms", "src_addr", "src_port", "dst_addr", "dst_port", "seq", "length")
+    }.toDF("ts_ms", "src_addr", "src_port", "dst_addr", "dst_port", "seq", "length")
   }
 
   // --- driver-contract queries -------------------------------------------

@@ -129,7 +129,6 @@ final case class KeyedSegment(
   * plan did it again.
   */
 object RecordEncoders {
-  implicit lazy val fileEncoder: Encoder[(String, Array[Byte])] = Encoders.product[(String, Array[Byte])]
   implicit lazy val segmentEncoder: Encoder[KeyedSegment] = Encoders.product[KeyedSegment]
   implicit lazy val recordEncoder: Encoder[RecordInfo] = Encoders.product[RecordInfo]
   implicit lazy val connKeyEncoder: Encoder[(String, Int)] = Encoders.product[(String, Int)]

@@ -539,11 +539,12 @@ object SyntheticTraffic {
   }
 
   /** Bulk capture generator for pipeline throughput benchmarking
-    * ([[graft.PcapBench]]): `conns` connections, each running `calls`
-    * generator iterations — a get/put mix where every 16th iteration
-    * emits a full scan open→next→close (3 round-trips), so a connection
-    * carries `calls + 2*(calls/16)` round-trips total — split round-robin
-    * by CONNECTION across `files` rotated captures. Returns (dir, request
+    * ([[graft.StreamBench]]) and the decoder differential: `conns`
+    * connections, each running `calls` generator iterations — a get/put
+    * mix where every 16th iteration emits a full scan open→next→close
+    * (3 round-trips), so a connection carries `calls + 2*(calls/16)`
+    * round-trips total — split round-robin by CONNECTION across `files`
+    * rotated captures. Returns (dir, request
     * count, response count); the CALLER owns deleting the directory.
     */
   def bulkPcapDir(conns: Int, calls: Int, files: Int): (String, Long, Long) = {

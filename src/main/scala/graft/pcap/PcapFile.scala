@@ -1,6 +1,8 @@
 package graft.pcap
 
-import java.io.ByteArrayOutputStream
+import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream, EOFException, InputStream}
+
+import graft.sources.FileRecords
 
 /** Classic libpcap file codec (the public tcpdump/libpcap format:
   * 24-byte global header + per-record 16-byte headers). Replaces the
@@ -24,97 +26,73 @@ object PcapFile {
   final class FormatException(msg: String) extends RuntimeException(msg)
 
   /** Shared with [[Pcapng]] — one copy of the endian-sensitive read. */
-  private[pcap] def readU32(b: Array[Byte], off: Int, le: Boolean): Long = {
+  private[pcap] def u32(b: Array[Byte], off: Int, le: Boolean): Long = {
     val (a0, a1, a2, a3) =
       if (le) (b(off), b(off + 1), b(off + 2), b(off + 3))
       else (b(off + 3), b(off + 2), b(off + 1), b(off))
     ((a3 & 0xffL) << 24) | ((a2 & 0xffL) << 16) | ((a1 & 0xffL) << 8) | (a0 & 0xffL)
   }
-  private def u32(b: Array[Byte], off: Int, le: Boolean): Long = readU32(b, off, le)
 
-  /** Lazily iterates records of one pcap file body. Truncated trailing
-    * records are dropped (a live capture can be cut mid-record).
+  /** Lazily iterates the records of one classic pcap stream: a 16-byte
+    * record header, then `inclLen` bytes. A truncated trailing record is
+    * dropped (a live capture can be cut mid-record).
     */
-  def records(bytes: Array[Byte]): Iterator[PcapRecord] = {
-    if (bytes.length < 24) return Iterator.empty
-    val magicBE = ((bytes(0) & 0xff) << 24) | ((bytes(1) & 0xff) << 16) |
-      ((bytes(2) & 0xff) << 8) | (bytes(3) & 0xff)
-    val (le, nanos) = magicBE match {
+  def records(in: InputStream): Iterator[PcapRecord] = {
+    val header = FileRecords.readFully(in, 24)
+    val (le, nanos) = u32(header, 0, le = false).toInt match {
       case MagicMicros => (false, false)
       case MagicNanos  => (false, true)
       case 0xD4C3B2A1  => (true, false)
       case 0x4D3CB2A1  => (true, true)
       case other => throw new FormatException(f"bad pcap magic 0x$other%08X")
     }
-    val linkType = u32(bytes, 20, le).toInt
+    val linkType = u32(header, 20, le).toInt
     if (linkType != LinkEthernet) return Iterator.empty
 
-    new Iterator[PcapRecord] {
-      private var pos = 24
-      private var nextRec: PcapRecord = advance()
-      private def advance(): PcapRecord = {
-        if (pos + 16 > bytes.length) return null
-        val tsSec   = u32(bytes, pos, le)
-        val tsFrac  = u32(bytes, pos + 4, le)
-        val inclLen = u32(bytes, pos + 8, le).toInt
-        val origLen = u32(bytes, pos + 12, le).toInt
-        // compare in Long: a crafted inclLen near Int.MaxValue would wrap
-        // `pos + 16 + inclLen` negative and bypass the truncation guard
-        if (inclLen < 0 || pos.toLong + 16L + inclLen > bytes.length) return null
-        val data = java.util.Arrays.copyOfRange(bytes, pos + 16, pos + 16 + inclLen)
-        pos += 16 + inclLen
-        val micros = tsSec * 1000000L + (if (nanos) tsFrac / 1000L else tsFrac)
-        PcapRecord(micros, origLen, data)
-      }
-      def hasNext: Boolean = nextRec != null
-      def next(): PcapRecord = {
-        val r = nextRec; nextRec = advance(); r
-      }
-    }
+    def advance(): PcapRecord =
+      try {
+        val h = FileRecords.readFully(in, 16)
+        val inclLen = u32(h, 8, le).toInt
+        if (inclLen < 0) null
+        else {
+          val data = FileRecords.readFully(in, inclLen)
+          val tsFrac = u32(h, 4, le)
+          val micros = u32(h, 0, le) * 1000000L + (if (nanos) tsFrac / 1000L else tsFrac)
+          PcapRecord(micros, u32(h, 12, le).toInt, data)
+        }
+      } catch { case _: EOFException => null }
+    Iterator.continually(advance()).takeWhile(_ != null)
   }
 
   def isGzip(bytes: Array[Byte]): Boolean =
     bytes.length >= 2 && (bytes(0) & 0xff) == 0x1f && (bytes(1) & 0xff) == 0x8b
 
-  private def isClassic(bytes: Array[Byte]): Boolean =
-    bytes.length >= 4 && {
-      val magicBE = ((bytes(0) & 0xff) << 24) | ((bytes(1) & 0xff) << 16) |
-        ((bytes(2) & 0xff) << 8) | (bytes(3) & 0xff)
-      magicBE == MagicMicros || magicBE == MagicNanos ||
-        magicBE == 0xD4C3B2A1 || magicBE == 0x4D3CB2A1
-    }
-
-  /** Format/compression dispatch for a capture file: gunzip by MAGIC
-    * (rotated captures are routinely compressed, whatever their name),
-    * then choose classic pcap vs pcapng. A file that is neither — a
-    * stray index/log in the capture directory, or a half-written gzip
-    * picked up by the streaming source — yields NO records instead of
-    * killing the job (`name` is kept for diagnostics only).
+  /** Records of a decompressed capture stream, pcapng or classic by its
+    * magic; anything else throws [[FormatException]].
     */
-  def recordsAuto(name: String, bytes: Array[Byte]): Iterator[PcapRecord] = {
-    val inner =
-      try {
-        val raw = if (isGzip(bytes)) gunzip(bytes) else bytes
-        if (Pcapng.isPcapng(raw)) Pcapng.records(raw)
-        else if (isClassic(raw)) records(raw)
-        else Iterator.empty
-      } catch { case scala.util.control.NonFatal(_) => Iterator.empty }
-    // the construction try only covers the FIRST advance; wrap so a
-    // NonFatal from any later advance (a record deep inside a hostile
-    // file) ends the iteration instead of failing the executor task
-    new Iterator[PcapRecord] {
-      private var nextRec: PcapRecord = fetch()
-      private def fetch(): PcapRecord =
-        try { if (inner.hasNext) inner.next() else null }
-        catch { case scala.util.control.NonFatal(_) => null }
-      def hasNext: Boolean = nextRec != null
-      def next(): PcapRecord = { val r = nextRec; nextRec = fetch(); r }
-    }
+  def capture(stream: InputStream): Iterator[PcapRecord] = {
+    val in = if (stream.markSupported) stream else new BufferedInputStream(stream)
+    in.mark(4)
+    val head = FileRecords.readFully(in, 4)
+    in.reset()
+    if (Pcapng.isPcapng(head)) Pcapng.records(in) else records(in)
   }
 
+  /** A capture file's records through [[FileRecords.records]]: gunzipped
+    * by magic (rotated captures are routinely compressed, whatever their
+    * name), either format. A file that is corrupt, half-written (a gzip
+    * picked up by the streaming source) or not a capture at all (a stray
+    * index/log in the capture directory) yields its complete leading
+    * records, never an exception (`name` is kept for diagnostics only).
+    */
+  def recordsAuto(name: String, in: InputStream): Iterator[PcapRecord] =
+    FileRecords.records(in)(capture)
+
+  def recordsAuto(name: String, bytes: Array[Byte]): Iterator[PcapRecord] =
+    recordsAuto(name, new ByteArrayInputStream(bytes))
+
   def gunzip(bytes: Array[Byte]): Array[Byte] = {
-    val in = new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(bytes))
+    val in = FileRecords.decompressed(new ByteArrayInputStream(bytes))
     try in.readAllBytes() finally in.close()
   }
 

@@ -1,6 +1,9 @@
 package graft.pcap
 
-import PcapFile.PcapRecord
+import java.io.{EOFException, InputStream}
+
+import PcapFile.{u32, PcapRecord}
+import graft.sources.FileRecords
 
 /** pcapng (the modern capture format, wireshark/tcpdump default) reader —
   * the public block structure: Section Header (0x0A0D0D0A, byte-order
@@ -51,88 +54,76 @@ object Pcapng {
 
   private final case class Iface(linkType: Int, tps: Long)
 
-  /** Lazily iterates packet records; truncated/garbled tails end the
+  /** Lazily iterates packet records of a pcapng stream: an 8-byte block
+    * header, then the block body; truncated/garbled tails end the
     * iteration (mirrors the classic reader's drop semantics).
     */
-  def records(bytes: Array[Byte]): Iterator[PcapRecord] =
-    new Iterator[PcapRecord] {
-      private var pos = 0
-      private var le = true
-      private var ifaces = Vector.empty[Iface]
-      private var nextRec: PcapRecord = advance()
+  def records(in: InputStream): Iterator[PcapRecord] = {
+    var le = true
+    var ifaces = Vector.empty[Iface]
 
-      private def tsResolOf(body: Array[Byte], optOff: Int, end: Int): Int = {
-        // walk options: code(2) len(2) value(padded to 4); if_tsresol = 9
-        var o = optOff
-        var resol = 6 // default 10^-6
-        while (o + 4 <= end) {
-          val code = u16(body, o, le)
-          val len = u16(body, o + 2, le)
-          if (code == 0) o = end
-          else {
-            if (code == 9 && len >= 1 && o + 4 < end) resol = body(o + 4) & 0xff
-            o += 4 + ((len + 3) & ~3)
-          }
+    def tsResolOf(body: Array[Byte], optOff: Int, end: Int): Int = {
+      // walk options: code(2) len(2) value(padded to 4); if_tsresol = 9
+      var o = optOff
+      var resol = 6 // default 10^-6
+      while (o + 4 <= end) {
+        val code = u16(body, o, le)
+        val len = u16(body, o + 2, le)
+        if (code == 0) o = end
+        else {
+          if (code == 9 && len >= 1 && o + 4 < end) resol = body(o + 4) & 0xff
+          o += 4 + ((len + 3) & ~3)
         }
-        resol
       }
+      resol
+    }
 
-      private def advance(): PcapRecord = {
-        while (pos + 12 <= bytes.length) {
-          if (u32(bytes, pos, le = true) == (SectionHeader & 0xFFFFFFFFL)) {
-            // byte order determined by the magic INSIDE the section header
-            le = u32(bytes, pos + 8, le = true) == ByteOrderMagic
+    def advance(): PcapRecord =
+      try {
+        while (true) {
+          val head = FileRecords.readFully(in, 8)
+          var consumed = 8
+          if (u32(head, 0, le = true) == (SectionHeader & 0xFFFFFFFFL)) {
+            // byte order determined by the magic opening the section body
+            le = u32(FileRecords.readFully(in, 4), 0, le = true) == ByteOrderMagic
             ifaces = Vector.empty
+            consumed = 12
           }
-          val blockType = u32(bytes, pos, le)
-          val totalLen = u32(bytes, pos + 4, le).toInt
-          if (totalLen < 12 || (totalLen & 3) != 0 ||
-            pos.toLong + totalLen > bytes.length) return null
-          val bodyStart = pos + 8
-          val bodyEnd = pos + totalLen - 4
+          val blockType = u32(head, 0, le)
+          val totalLen = u32(head, 4, le).toInt
+          if (totalLen < 12 || (totalLen & 3) != 0) return null
+          // the rest of the block: its body, then the 4-byte trailing length
+          val body = FileRecords.readFully(in, totalLen - consumed)
+          val bodyEnd = body.length - 4
           blockType match {
             case 1 => // IDB
-              if (bodyEnd - bodyStart >= 8) {
-                val link = u16(bytes, bodyStart, le)
-                val tps = ticksPerSecond(tsResolOf(bytes, bodyStart + 8, bodyEnd))
-                ifaces :+= Iface(link, tps)
+              if (bodyEnd >= 8) {
+                val tps = ticksPerSecond(tsResolOf(body, 8, bodyEnd))
+                ifaces :+= Iface(u16(body, 0, le), tps)
               }
             case 6 => // EPB
-              if (bodyEnd - bodyStart >= 20) {
-                val ifId = u32(bytes, bodyStart, le).toInt
-                val tsHigh = u32(bytes, bodyStart + 4, le)
-                val tsLow = u32(bytes, bodyStart + 8, le)
-                val capLen = u32(bytes, bodyStart + 12, le).toInt
-                val origLen = u32(bytes, bodyStart + 16, le).toInt
+              if (bodyEnd >= 20) {
+                val ifId = u32(body, 0, le).toInt
+                val capLen = u32(body, 12, le).toInt
                 // must reference a defined, Ethernet interface (an EPB
                 // before its IDB would otherwise be decoded under guessed
-                // link type and resolution)
+                // link type and resolution); compare in Long: a crafted
+                // capLen near Int.MaxValue would wrap `20 + capLen`
+                // negative and slip past the bound
                 ifaces.lift(ifId) match {
-                  // compare in Long: a crafted capLen near Int.MaxValue
-                  // would wrap `bodyStart + 20 + capLen` negative and slip
-                  // past the bound (same hostile-file case the classic
-                  // reader guards in PcapFile.records)
                   case Some(iface) if iface.linkType == PcapFile.LinkEthernet &&
-                    capLen >= 0 && bodyStart.toLong + 20L + capLen <= bodyEnd =>
-                    val data = java.util.Arrays.copyOfRange(
-                      bytes, bodyStart + 20, bodyStart + 20 + capLen)
-                    val ticks = (tsHigh << 32) | tsLow
-                    pos += totalLen
-                    return PcapRecord(toMicros(ticks, iface.tps), origLen, data)
+                    capLen >= 0 && 20L + capLen <= bodyEnd =>
+                    val ticks = (u32(body, 4, le) << 32) | u32(body, 8, le)
+                    return PcapRecord(toMicros(ticks, iface.tps), u32(body, 16, le).toInt,
+                      java.util.Arrays.copyOfRange(body, 20, 20 + capLen))
                   case _ => ()
                 }
               }
             case _ => () // SHB handled above; SPB (no timestamp) + rest skipped
           }
-          pos += totalLen
         }
         null
-      }
-
-      def hasNext: Boolean = nextRec != null
-      def next(): PcapRecord = { val r = nextRec; nextRec = advance(); r }
-    }
-
-  private def u32(b: Array[Byte], off: Int, le: Boolean): Long =
-    PcapFile.readU32(b, off, le)
+      } catch { case _: EOFException => null }
+    Iterator.continually(advance()).takeWhile(_ != null)
+  }
 }

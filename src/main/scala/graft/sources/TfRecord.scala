@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, EOFException, InputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 import java.util.zip.CRC32C
@@ -29,8 +29,8 @@ import graft.proto.ProtoWire
   * unpacked repeated encodings (protobuf parsers must); the writer emits
   * packed, matching protoc.
   *
-  * Scale posture: one file = one task via the binaryFile source (the
-  * pcap/WARC ingest shape — framing is sequential, files are the parallel
+  * Scale posture: one file = one task streamed through [[FileRecords]]
+  * (the pcap/WARC ingest shape — framing is sequential, files are the parallel
   * unit; a training corpus is thousands of shards). Hostile-input
   * hardened: a corrupt length, failed CRC, or truncated record ends the
   * file's iteration instead of throwing or over-allocating.
@@ -72,100 +72,40 @@ object TfRecord {
     * on EOF, truncation, bad length, or CRC mismatch — one corrupt shard
     * must not kill a 1000-shard read job.
     */
-  def records(in: InputStream): Iterator[Array[Byte]] =
-    new Iterator[Array[Byte]] {
-      private var nextRec: Array[Byte] = null
-      private var done = false
+  def records(in: InputStream): Iterator[Array[Byte]] = {
+    def le32(b: Array[Byte]): Int =
+      ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt
 
-      // grow in bounded chunks: a forged length header (its CRC covers
-      // only the attacker-supplied length bytes) must not drive a 1 GiB
-      // upfront allocation for payload bytes that never arrive
-      private def readFully(n: Int): Array[Byte] = {
-        val chunk = 1 << 20
-        if (n <= chunk) {
-          val out = new Array[Byte](n)
-          var off = 0
-          while (off < n) {
-            val r = in.read(out, off, n - off)
-            if (r < 0) throw new EOFException
-            off += r
-          }
-          out
-        } else {
-          // chunk list + one final assembly: peak memory ~2n (the previous
-          // ByteArrayOutputStream peaked at ~3n near the cap from growth
-          // doubling plus the toByteArray copy), while a forged length
-          // still only allocates what actually arrives before EOF
-          val chunks = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-          var remaining = n
-          while (remaining > 0) {
-            val buf = new Array[Byte](math.min(chunk, remaining))
-            var off = 0
-            while (off < buf.length) {
-              val r = in.read(buf, off, buf.length - off)
-              if (r < 0) throw new EOFException
-              off += r
-            }
-            chunks += buf
-            remaining -= buf.length
-          }
-          val out = new Array[Byte](n)
-          var pos = 0
-          chunks.foreach { b => System.arraycopy(b, 0, out, pos, b.length); pos += b.length }
-          out
-        }
+    def advance(): Array[Byte] =
+      try {
+        val first = in.read()
+        if (first < 0) return null // clean EOF at boundary
+        val lenBytes = new Array[Byte](8)
+        lenBytes(0) = first.toByte
+        System.arraycopy(FileRecords.readFully(in, 7), 0, lenBytes, 1, 7)
+        val len =
+          ByteBuffer.wrap(lenBytes).order(ByteOrder.LITTLE_ENDIAN).getLong
+        if (le32(FileRecords.readFully(in, 4)) != maskedCrc(lenBytes)) return null
+        if (len < 0 || len > MaxRecordLength) return null
+        // a forged length (its CRC covers only the attacker-supplied
+        // length bytes) allocates only what actually arrives before EOF
+        val data = FileRecords.readFully(in, len.toInt)
+        if (le32(FileRecords.readFully(in, 4)) != maskedCrc(data)) null else data
+      } catch {
+        // EOF, truncation, AND stream-level corruption (a bad gzip
+        // member throws ZipException ⊂ IOException): one corrupt shard
+        // ends ITS iteration — it must not kill a 1000-shard read job
+        case _: java.io.IOException => null
       }
-
-      private def le32(b: Array[Byte]): Int =
-        ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt
-
-      private def advance(): Unit = {
-        nextRec = null
-        try {
-          val first = in.read()
-          if (first < 0) { done = true; return } // clean EOF at boundary
-          val lenBytes = new Array[Byte](8)
-          lenBytes(0) = first.toByte
-          System.arraycopy(readFully(7), 0, lenBytes, 1, 7)
-          val len =
-            ByteBuffer.wrap(lenBytes).order(ByteOrder.LITTLE_ENDIAN).getLong
-          if (le32(readFully(4)) != maskedCrc(lenBytes)) { done = true; return }
-          if (len < 0 || len > MaxRecordLength) { done = true; return }
-          val data = readFully(len.toInt)
-          if (le32(readFully(4)) != maskedCrc(data)) { done = true; return }
-          nextRec = data
-        } catch {
-          // EOF, truncation, AND stream-level corruption (a bad gzip
-          // member throws ZipException ⊂ IOException): one corrupt shard
-          // ends ITS iteration — it must not kill a 1000-shard read job
-          case _: java.io.IOException => done = true
-        }
-      }
-
-      override def hasNext: Boolean = {
-        if (nextRec == null && !done) advance()
-        nextRec != null
-      }
-
-      override def next(): Array[Byte] = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = nextRec
-        nextRec = null
-        r
-      }
-    }
-
-  /** Records of in-memory TFRecord bytes; `.gz` names get a gzip wrapper.
-    * A destroyed gzip header throws at STREAM CONSTRUCTION — caught here
-    * so a corrupt shard yields an empty iteration, not a dead job.
-    */
-  def recordsAuto(name: String, bytes: Array[Byte]): Iterator[Array[Byte]] = {
-    val base = new java.io.ByteArrayInputStream(bytes)
-    try records(
-      if (name.endsWith(".gz")) new java.util.zip.GZIPInputStream(base)
-      else base)
-    catch { case _: java.io.IOException => Iterator.empty }
+    Iterator.continually(advance()).takeWhile(_ != null)
   }
+
+  /** Records of TFRecord bytes through [[FileRecords.records]]: gunzipped
+    * by magic, whatever the name; a corrupt shard yields its complete
+    * leading records, never a dead job.
+    */
+  def recordsAuto(name: String, bytes: Array[Byte]): Iterator[Array[Byte]] =
+    FileRecords.records(new ByteArrayInputStream(bytes))(records)
 
   /** Render records with TFRecord framing (+ optional whole-file gzip —
     * TFRecord has no per-record compression; .tfrecord.gz is file-level).
@@ -271,18 +211,14 @@ object TfRecord {
       case _ => Vector.empty
     }
 
-  /** TFRecord files → one row per record (binaryFile source, one file =
-    * one task, `.tfrecord` / `.tfrecord.gz` both handled).
+  /** TFRecord files → one row per record (one file = one task, streamed
+    * through [[FileRecords.read]], plain or gzipped).
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.tfrecord*")
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (p, bytes) => recordsAuto(p, bytes).map((p, _)) }
-      .toDF("path", "record")
+    FileRecords.read(spark.read.format("binaryFile").option("pathGlobFilter", "*.tfrecord*").load(path)) {
+      (p, in) => records(in).map((p, _))
+    }.toDF("path", "record")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

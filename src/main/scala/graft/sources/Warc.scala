@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, EOFException, InputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, EOFException, InputStream}
 import java.nio.charset.StandardCharsets
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * CONCATENATED gzip members (usually one per record);
   * `java.util.zip.GZIPInputStream` consumes member sequences natively.
   *
-  * Scale posture: one WARC file = one task ([[read]] uses the binaryFile
-  * source exactly like the pcap pipeline — record framing is sequential,
-  * files are the parallel unit, and a crawl is millions of files). The
-  * iterator is streaming and hostile-input hardened: a corrupt
+  * Scale posture: one WARC file = one task ([[read]] streams each file
+  * through [[FileRecords]] exactly like the pcap pipeline — record
+  * framing is sequential, files are the parallel unit, and a crawl is
+  * millions of files). The iterator is hostile-input hardened: a corrupt
   * Content-Length, truncated payload, or missing version line ends the
   * file's iteration instead of throwing or over-allocating.
   */
@@ -43,11 +43,8 @@ object Warc {
   /** Streaming record iterator over a (possibly multi-member-gzip) WARC
     * stream. Returns records until the stream ends or framing breaks.
     */
-  def records(in: InputStream): Iterator[WarcRecord] = new Iterator[WarcRecord] {
-    private var nextRec: WarcRecord = null
-    private var done = false
-
-    private def readLine(): String = {
+  def records(in: InputStream): Iterator[WarcRecord] = {
+    def readLine(): String = {
       // CRLF-terminated header line, ISO-8859-1 (headers are ASCII; the
       // spec forbids raw non-ASCII — 8859-1 keeps bytes 1:1 if violated)
       val buf = new ByteArrayOutputStream(64)
@@ -61,45 +58,17 @@ object Warc {
       if (s.endsWith("\r")) s.substring(0, s.length - 1) else s
     }
 
-    // grow in bounded chunks: a forged Content-Length must not drive a
-    // 1 GiB upfront allocation for payload bytes that never arrive
-    private def readFully(n: Int): Array[Byte] = {
-      val chunk = 1 << 20
-      if (n <= chunk) {
-        val out = new Array[Byte](n)
-        var off = 0
-        while (off < n) {
-          val r = in.read(out, off, n - off)
-          if (r < 0) throw new EOFException
-          off += r
-        }
-        out
-      } else {
-        val out = new ByteArrayOutputStream(chunk)
-        val buf = new Array[Byte](chunk)
-        var remaining = n
-        while (remaining > 0) {
-          val r = in.read(buf, 0, math.min(chunk, remaining))
-          if (r < 0) throw new EOFException
-          out.write(buf, 0, r)
-          remaining -= r
-        }
-        out.toByteArray
-      }
-    }
-
-    private def advance(): Unit = {
-      nextRec = null
+    def advance(): WarcRecord =
       try {
         // seek the version line (tolerates inter-record CRLF padding)
         var line = readLine()
         var guard = 0
         while (!line.startsWith("WARC/") && guard < 16) {
-          if (line.nonEmpty) { done = true; return } // garbage, stop
+          if (line.nonEmpty) return null // garbage, stop
           line = readLine()
           guard += 1
         }
-        if (!line.startsWith("WARC/")) { done = true; return }
+        if (!line.startsWith("WARC/")) return null
         var warcType, recordId, targetUri, date, contentType = ""
         var contentLength = -1L
         line = readLine()
@@ -121,43 +90,26 @@ object Warc {
           }
           line = readLine()
         }
-        if (contentLength < 0 || contentLength > MaxContentLength) {
-          done = true; return // unframed/hostile: cannot resync, stop
-        }
-        val body = readFully(contentLength.toInt)
-        nextRec = WarcRecord(warcType, recordId, targetUri, date, contentType, body)
+        // unframed/hostile: cannot resync, stop
+        if (contentLength < 0 || contentLength > MaxContentLength) return null
+        val body = FileRecords.readFully(in, contentLength.toInt)
+        WarcRecord(warcType, recordId, targetUri, date, contentType, body)
       } catch {
         // EOF, truncation, AND stream-level corruption (a bad gzip member
         // throws ZipException ⊂ IOException): one corrupt capture ends
         // ITS iteration, never the read job
-        case _: java.io.IOException => done = true
+        case _: java.io.IOException => null
       }
-    }
-
-    override def hasNext: Boolean = {
-      if (nextRec == null && !done) advance()
-      nextRec != null
-    }
-
-    override def next(): WarcRecord = {
-      if (!hasNext) throw new NoSuchElementException
-      val r = nextRec
-      nextRec = null
-      r
-    }
+    Iterator.continually(advance()).takeWhile(_ != null)
   }
 
-  /** Records of in-memory WARC bytes; `.gz` names get a gzip wrapper
-    * (multi-member safe — GZIPInputStream reads concatenated members).
-    * A destroyed gzip header throws at STREAM CONSTRUCTION — caught here
-    * so a corrupt capture yields an empty iteration, not a dead job.
+  /** Records of WARC bytes through [[FileRecords.records]]: gunzipped by
+    * magic (multi-member safe — GZIPInputStream reads concatenated
+    * members), whatever the name; a corrupt file yields its complete
+    * leading records, never a dead job.
     */
-  def recordsAuto(name: String, bytes: Array[Byte]): Iterator[WarcRecord] = {
-    val base = new java.io.ByteArrayInputStream(bytes)
-    try records(
-      if (name.endsWith(".gz")) new java.util.zip.GZIPInputStream(base) else base)
-    catch { case _: java.io.IOException => Iterator.empty }
-  }
+  def recordsAuto(name: String, bytes: Array[Byte]): Iterator[WarcRecord] =
+    FileRecords.records(new ByteArrayInputStream(bytes))(records)
 
   /** Render records as WARC bytes; `gzipPerRecord` writes one gzip member
     * per record (the Common Crawl layout, enables per-record skipping).
@@ -217,21 +169,16 @@ object Warc {
     out.write(trailer.array())
   }
 
-  /** WARC files → one row per record (binaryFile source, one file = one
-    * task, `.warc` / `.warc.gz` both handled — the pcap ingest shape).
+  /** WARC files → one row per record (one file = one task, streamed
+    * through [[FileRecords.read]], plain or gzipped — the pcap ingest
+    * shape).
     */
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc*")
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (p, bytes) =>
-        recordsAuto(p, bytes).map(r =>
-          (r.warcType, r.recordId, r.targetUri, r.date, r.contentType, r.content))
-      }
-      .toDF("warc_type", "record_id", "target_uri", "date", "content_type", "content")
+    FileRecords.read(spark.read.format("binaryFile").option("pathGlobFilter", "*.warc*").load(path)) {
+      (_, in) => records(in).map(r =>
+        (r.warcType, r.recordId, r.targetUri, r.date, r.contentType, r.content))
+    }.toDF("warc_type", "record_id", "target_uri", "date", "content_type", "content")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

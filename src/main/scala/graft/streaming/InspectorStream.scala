@@ -1,11 +1,12 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.inspector.{ConnSnapshot, ConnTracker, Inspector, KeyedSegment, RecordEncoders, RecordInfo,
   StateEnvelope}
+import graft.sources.FileRecords
 
 /** Streaming packet→record pipeline (reference: core.clj:356-394
   * start-handler — the background loop over a packet channel — plus its
@@ -67,20 +68,11 @@ object InspectorStream {
   def segmentsFromPcapDir(spark: SparkSession, path: String,
                           ports: Set[Int] = Inspector.HbasePorts,
                           maxFilesPerTrigger: Option[Int] = None): Dataset[KeyedSegment] = {
-    import org.apache.spark.sql.types._
     import RecordEncoders._
-    // the binaryFile source's fixed schema; streaming sources require it
-    // stated explicitly
-    val schema = StructType(Seq(
-      StructField("path", StringType),
-      StructField("modificationTime", TimestampType),
-      StructField("length", LongType),
-      StructField("content", BinaryType)))
-    val reader = spark.readStream.format("binaryFile").schema(schema)
-    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
-      .load(path)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (name, bytes) => Inspector.decodeFile(name, bytes, ports) }
+    // streaming sources require the binaryFile source's fixed schema stated
+    val reader = spark.readStream.format("binaryFile").schema(BinaryFileFormat.schema)
+    val files = maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
+    FileRecords.read(files.load(path))((_, in) => Inspector.decodeFile(in, ports))
   }
 
   /** readStream pcap dir → shaped records, end to end. */

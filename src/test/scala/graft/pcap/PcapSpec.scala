@@ -1,6 +1,6 @@
 package graft.pcap
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +13,7 @@ class PcapSpec extends AnyFunSuite {
       .record(1600000000123456L, f1)
       .record(1600000001000001L, f2)
       .toBytes
-    val recs = PcapFile.records(bytes).toVector
+    val recs = PcapFile.records(new ByteArrayInputStream(bytes)).toVector
     assert(recs.map(_.tsMicros) === Vector(1600000000123456L, 1600000001000001L))
     assert(recs(0).data.toSeq === f1.toSeq)
     assert(recs(1).data.length === 60)
@@ -30,18 +30,24 @@ class PcapSpec extends AnyFunSuite {
       out.write(data, 0, data.length)
       out.toByteArray
     }
-    val micros = PcapFile.records(be((100L, 250L, Array[Byte](9)), PcapFile.MagicMicros)).toVector
+    val micros = PcapFile.records(new ByteArrayInputStream(be((100L, 250L, Array[Byte](9)), PcapFile.MagicMicros))).toVector
     assert(micros.head.tsMicros === 100L * 1000000 + 250)
-    val nanos = PcapFile.records(be((100L, 250000L, Array[Byte](9)), PcapFile.MagicNanos)).toVector
+    val nanos = PcapFile.records(new ByteArrayInputStream(be((100L, 250000L, Array[Byte](9)), PcapFile.MagicNanos))).toVector
     assert(nanos.head.tsMicros === 100L * 1000000 + 250)
   }
 
   test("truncated trailing record is dropped; bad magic throws") {
     val good = (new PcapFile.Writer).record(1L, Array[Byte](1, 2, 3, 4)).toBytes
     val cut = good.take(good.length - 2)
-    assert(PcapFile.records(cut).isEmpty)
+    assert(PcapFile.records(new ByteArrayInputStream(cut)).isEmpty)
+    // a forged inclLen of 0x7FFFFFFF with a few bytes behind it: no
+    // record, and no 2 GiB allocation for bytes that never arrive
+    val forged = (new PcapFile.Writer).toBytes ++
+      Array[Byte](1, 0, 0, 0, 0, 0, 0, 0, -1, -1, -1, 0x7f, -1, -1, -1, 0x7f, 1, 2, 3)
+    assert(PcapFile.records(new ByteArrayInputStream(forged)).isEmpty)
+    assert(PcapFile.recordsAuto("forged.pcap", forged).isEmpty)
     assertThrows[PcapFile.FormatException](
-      PcapFile.records(Array.fill[Byte](24)(0x42)).toVector)
+      PcapFile.records(new ByteArrayInputStream(Array.fill[Byte](24)(0x42))).toVector)
   }
 
   test("LinkDecode encode/decode round-trip") {

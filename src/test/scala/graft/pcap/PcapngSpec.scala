@@ -1,6 +1,6 @@
 package graft.pcap
 
-import java.io.ByteArrayOutputStream
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -62,7 +62,7 @@ class PcapngSpec extends AnyFunSuite {
     val bytes = new Builder().shb().idb(1).epb(0, 1600000000123456L, d1)
       .epb(0, 1600000001000000L, d2).bytes
     assert(Pcapng.isPcapng(bytes))
-    val recs = Pcapng.records(bytes).toVector
+    val recs = Pcapng.records(new ByteArrayInputStream(bytes)).toVector
     assert(recs.map(_.tsMicros) === Vector(1600000000123456L, 1600000001000000L))
     assert(recs(0).data.toSeq === d1.toSeq)
     assert(recs(1).origLen === 5)
@@ -71,14 +71,14 @@ class PcapngSpec extends AnyFunSuite {
   test("nanosecond if_tsresol normalizes to micros") {
     val bytes = new Builder().shb().idb(1, tsresol = Some(9))
       .epb(0, 1600000000123456789L, Array[Byte](9)).bytes
-    val recs = Pcapng.records(bytes).toVector
+    val recs = Pcapng.records(new ByteArrayInputStream(bytes)).toVector
     assert(recs.head.tsMicros === 1600000000123456L)
   }
 
   test("big-endian section parses identically") {
     val bytes = new Builder(le = false).shb().idb(1)
       .epb(0, 42000000L, Array[Byte](1, 2)).bytes
-    val recs = Pcapng.records(bytes).toVector
+    val recs = Pcapng.records(new ByteArrayInputStream(bytes)).toVector
     assert(recs.head.tsMicros === 42000000L)
     assert(recs.head.data.toSeq === Seq[Byte](1, 2))
   }
@@ -86,30 +86,36 @@ class PcapngSpec extends AnyFunSuite {
   test("non-ethernet, undefined-interface, and SPB blocks skipped; garbage tail dropped") {
     val bytes = new Builder().shb().idb(101) // LINKTYPE_RAW, not ethernet
       .epb(0, 1L, Array[Byte](1)).bytes
-    assert(Pcapng.records(bytes).isEmpty)
+    assert(Pcapng.records(new ByteArrayInputStream(bytes)).isEmpty)
 
     // EPB referencing an interface with no IDB: skipped, not guessed
     val orphan = new Builder().shb().epb(0, 1L, Array[Byte](1)).bytes
-    assert(Pcapng.records(orphan).isEmpty)
+    assert(Pcapng.records(new ByteArrayInputStream(orphan)).isEmpty)
 
     // SPB carries no timestamp -> unusable for reassembly ordering: skipped
     val spb = new Builder().shb().idb(1).spb(Array[Byte](7, 7)).bytes
-    assert(Pcapng.records(spb).isEmpty)
+    assert(Pcapng.records(new ByteArrayInputStream(spb)).isEmpty)
 
     val truncated = new Builder().shb().idb(1)
       .epb(0, 1L, Array[Byte](1)).bytes.dropRight(3)
-    assert(Pcapng.records(truncated).isEmpty) // block guard drops the tail
+    assert(Pcapng.records(new ByteArrayInputStream(truncated)).isEmpty) // block guard drops the tail
+
+    // a forged block length of 0xFFFFFFFC with a few bytes behind it
+    val forged = new Builder().shb().idb(1).bytes ++
+      Array[Byte](6, 0, 0, 0, -4, -1, -1, -1, 1, 2, 3)
+    assert(Pcapng.records(new ByteArrayInputStream(forged)).isEmpty)
+    assert(PcapFile.recordsAuto("forged.pcapng", forged).isEmpty)
   }
 
   test("millisecond and binary if_tsresol values normalize correctly") {
     // tsresol=3: ticks are milliseconds
     val ms = new Builder().shb().idb(1, tsresol = Some(3))
       .epb(0, 1600000000123L, Array[Byte](1)).bytes
-    assert(Pcapng.records(ms).toVector.head.tsMicros === 1600000000123000L)
+    assert(Pcapng.records(new ByteArrayInputStream(ms)).toVector.head.tsMicros === 1600000000123000L)
     // tsresol=0x87: 2^-7 seconds per tick -> 128 ticks = 1s
     val bin = new Builder().shb().idb(1, tsresol = Some(0x87))
       .epb(0, 128L, Array[Byte](1)).bytes
-    assert(Pcapng.records(bin).toVector.head.tsMicros === 1000000L)
+    assert(Pcapng.records(new ByteArrayInputStream(bin)).toVector.head.tsMicros === 1000000L)
   }
 
   test("recordsAuto never throws on stray or corrupt files") {
@@ -123,6 +129,18 @@ class PcapngSpec extends AnyFunSuite {
     val bos = new ByteArrayOutputStream()
     val g = new java.util.zip.GZIPOutputStream(bos); g.write(pcap); g.close()
     assert(PcapFile.recordsAuto("misnamed.pcap", bos.toByteArray).size === 1)
+    // gzip cut off mid-stream: the complete records before the cut stay
+    // (a sync flush makes the first three decodable from the prefix)
+    val five = new ByteArrayOutputStream()
+    val sync = new java.util.zip.GZIPOutputStream(five, true)
+    val w = new PcapFile.Writer
+    (1 to 3).foreach(i => w.record(i.toLong, Array.fill[Byte](40)(i.toByte)))
+    sync.write(w.toBytes); sync.flush()
+    val cutAt = five.size() + 4
+    sync.write((new PcapFile.Writer).record(4L, Array.fill[Byte](40)(4)).toBytes.drop(24))
+    sync.close()
+    val cut = five.toByteArray.take(cutAt)
+    assert(PcapFile.recordsAuto("cut.pcap.gz", cut).map(_.tsMicros).toSeq === Seq(1L, 2L, 3L))
   }
 
   test("recordsAuto: gzip + format dispatch, end to end through the pipeline") {

@@ -1,5 +1,6 @@
 package graft.proto
 
+import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
@@ -53,7 +54,7 @@ class HbaseRpcDifferentialSpec extends AnyFunSuite {
     val files = Files.list(Paths.get(dir))
     val segs =
       try files.iterator().asScala.filter(Files.isRegularFile(_)).toVector.sortBy(_.toString).flatMap { p =>
-          Inspector.decodeFile(p.toString, Files.readAllBytes(p), Inspector.HbasePorts)
+          Inspector.decodeFile(new ByteArrayInputStream(Files.readAllBytes(p)), Inspector.HbasePorts)
         }
       finally files.close()
     segs.groupBy(s => (s.client, s.port)).toVector.sortBy(_._1).flatMap { case (_, conn) =>

@@ -30,8 +30,8 @@ class TfRecordSpec extends SparkSpec {
       Array.emptyByteArray, // zero-length record is legal
       Array.tabulate[Byte](1000)(i => (i % 251).toByte),
       { val b = new Array[Byte](257); rnd.nextBytes(b); b })
-    for (gz <- Seq(false, true)) {
-      val name = if (gz) "t.tfrecord.gz" else "t.tfrecord"
+    // gzip is found by its magic, so a gzipped `x.tfrecord` decodes
+    for ((name, gz) <- Seq("t.tfrecord" -> false, "t.tfrecord.gz" -> true, "x.tfrecord" -> true)) {
       val back = recordsAuto(name, render(recs, gzip = gz)).toSeq
       assert(back.length === recs.length, s"gz=$gz")
       back.zip(recs).foreach { case (b, r) => assert(b.toSeq === r.toSeq) }

@@ -19,8 +19,8 @@ class WarcSpec extends SparkSpec {
       rec(2, "unicode payload: éü中文 🙂"),
       rec(3, ""), // zero-length payload is legal
       rec(4, "embedded\r\nCRLF and\n\nblank lines inside the body"))
-    for (gz <- Seq(false, true)) {
-      val name = if (gz) "t.warc.gz" else "t.warc"
+    // gzip is found by its magic, so a gzipped file named `x.warc` decodes
+    for ((name, gz) <- Seq("t.warc" -> false, "t.warc.gz" -> true, "x.warc" -> true)) {
       val back = Warc.recordsAuto(name, Warc.render(recs, gzipPerRecord = gz)).toSeq
       assert(back.length === 4, s"gz=$gz")
       back.zip(recs).foreach { case (b, r) =>
