@@ -50,7 +50,7 @@ final case class RecordInfo(
   * inside [[StateEnvelope]] — a `(version, payload-bytes)` wrapper whose own
   * shape never changes — so a checkpoint written by a build with a different
   * snapshot layout fails on restore with an actionable version message
-  * instead of a raw kryo deserialization error. Bump
+  * instead of a raw deserialization error. Bump
   * [[ConnSnapshot.Version]] whenever any of these case classes changes.
   */
 final case class PendingEntry(callId: Int, ts: Long, info: graft.proto.HbaseRpc.RpcInfo)
@@ -71,9 +71,9 @@ object ConnSnapshot {
 }
 
 /** Stable serialization envelope for the streaming state: an int version
-  * tag plus the JDK-serialized snapshot. Only this two-field shape is ever
-  * kryo-encoded by the state store, so version checks run BEFORE the
-  * layout-sensitive decode.
+  * tag plus the JDK-serialized snapshot. The state store holds only this
+  * two-field shape, as one flat product row (`version int, payload
+  * binary`), so version checks run BEFORE the layout-sensitive decode.
   */
 final case class StateEnvelope(version: Int, payload: Array[Byte])
 
@@ -132,6 +132,7 @@ object RecordEncoders {
   implicit lazy val segmentEncoder: Encoder[KeyedSegment] = Encoders.product[KeyedSegment]
   implicit lazy val recordEncoder: Encoder[RecordInfo] = Encoders.product[RecordInfo]
   implicit lazy val connKeyEncoder: Encoder[(String, Int)] = Encoders.product[(String, Int)]
+  implicit lazy val envelopeEncoder: Encoder[StateEnvelope] = Encoders.product[StateEnvelope]
   implicit lazy val packetEncoder: Encoder[(Long, String, Int, String, Int, Long, Int)] =
     Encoders.product[(Long, String, Int, String, Int, Long, Int)]
 }

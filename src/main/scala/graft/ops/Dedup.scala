@@ -757,7 +757,7 @@ object Dedup {
     // instead of two plus a join.
     //
     // MATERIALIZED because relying on AQE stage reuse between the two ggd
-    // consumers does not work (measured r21, Q70PlanCheck): column
+    // consumers does not work (measured r21, `Probe final`): column
     // pruning strips `cnt` out of the gdf branch, the two aggregate
     // subtrees stop being canonically identical, and each consumer
     // replays the gram pipeline — the checkpoint pins it to one pass.

@@ -1,6 +1,8 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage-breaking materialization for multiply-consumed intermediates
   * (minhash/simhash signatures, LSH-bucketed vectors, posting lists): the
@@ -20,53 +22,51 @@ import org.apache.spark.sql.DataFrame
   * Both are LAZY (`eager = false`): plan construction stays job-free — the
   * materialization runs as part of the query's own first execution, and the
   * persisted blocks are shared by every consumer from then on.
+  *
+  * Every checkpoint is taken: there is no session switch that turns them
+  * off. Plan evidence for the pipeline a checkpoint hides behind its
+  * `Scan ExistingRDD` stub comes from [[sources]] instead.
   */
 private[graft] object Materialize {
 
   /** Session conf key; see class doc. */
   val ReliableFlag = "spark.graft.reliableCheckpoint"
 
-  /** Plan-evidence escape hatch (dev tooling only — [[graft.PlanDump]]):
-    * `true` returns the frame un-checkpointed so `explain` shows the FULL
-    * pipeline instead of `Scan ExistingRDD` stubs at every checkpoint
-    * boundary. Never set in query/bench/verify paths: without the
-    * checkpoint each consumer replays the shared lineage.
+  // The frame behind each checkpoint, in both modes, keyed by the
+  // checkpoint's RDD: identity-equal, and shared by every copy the
+  // analyzer makes of the returned LogicalRDD (a self-join re-instances
+  // its attributes, not its RDD). Weak keys: a dropped result frame lets
+  // its entry be collected.
+  private val behind = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[RDD[_], DataFrame]())
+
+  def apply(df: DataFrame): DataFrame = {
+    val out =
+      if (df.sparkSession.conf.getOption(ReliableFlag).exists(_.toBoolean))
+        // persist first: an unpersisted reliable checkpoint re-executes the
+        // whole lineage in the checkpoint-write job (Spark's documented
+        // recompute behavior) — exactly the double-compute this class
+        // exists to prevent. The write job then reads the cached blocks.
+        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .checkpoint(eager = false)
+      else df.localCheckpoint(eager = false)
+    checkpointRdds(out).foreach(behind.put(_, df))
+    out
+  }
+
+  private def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
+    df.queryExecution.analyzed.collectWithSubqueries { case lr: LogicalRDD => lr.rdd }
+
+  private def behindOf(df: DataFrame): Seq[DataFrame] =
+    checkpointRdds(df).flatMap(r => Option(behind.get(r)))
+
+  /** The frames behind every checkpoint `df` reads, transitively, nearest
+    * first — read-only plan evidence: `explain` on them shows the
+    * pipeline each checkpoint replaced.
     */
-  val PassthroughFlag = "spark.graft.materialize.passthrough"
-
-  // reliable mode: the pre-checkpoint CACHED frame, keyed by the returned
-  // frame's logical plan (a LogicalRDD wrapping a unique RDD — structural
-  // equality is effectively identity). [[free]] needs it because the cache
-  // lives in the plan-level CacheManager, invisible to RDD-level unpersist.
-  // Weak keys: a dropped result frame lets both entries be collected.
-  private val preCheckpoint = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame]())
-
-  /** Fail fast when the dev-only passthrough flag is set in a session
-    * that produces graded artifacts (r21 advice): with every checkpoint
-    * silently disabled, iterative constructions (q45/q128/q132) would
-    * replay uncheckpointed and results/timings would be wrong without a
-    * trace. Bench and Verify call this right after session creation.
-    */
-  def assertNotPassthrough(spark: org.apache.spark.sql.SparkSession,
-                           who: String): Unit =
-    require(!spark.conf.getOption(PassthroughFlag).exists(_.toBoolean),
-      s"$PassthroughFlag is set in a $who session: the flag is PlanDump-" +
-        "only dev tooling (it disables every checkpoint) and must never " +
-        "be active for graded runs")
-
-  def apply(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption(PassthroughFlag).exists(_.toBoolean)) df
-    else if (df.sparkSession.conf.getOption(ReliableFlag).exists(_.toBoolean)) {
-      // persist first: an unpersisted reliable checkpoint re-executes the
-      // whole lineage in the checkpoint-write job (Spark's documented
-      // recompute behavior) — exactly the double-compute this class exists
-      // to prevent. The write job then reads the cached blocks instead.
-      val out = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        .checkpoint(eager = false)
-      preCheckpoint.put(out.queryExecution.logical, df)
-      out
-    } else df.localCheckpoint(eager = false)
+  def sources(df: DataFrame): Seq[DataFrame] =
+    Iterator.iterate(Seq(df))(_.flatMap(behindOf)).drop(1).takeWhile(_.nonEmpty)
+      .flatten.toSeq.distinct
 
   /** Eagerly free the block storage behind a frame returned by [[apply]]
     * once NO later computation will read it — e.g. the previous iteration's
@@ -75,15 +75,14 @@ private[graft] object Materialize {
     * blocks ARE the data, so the frame is unusable afterwards — callers
     * must drop every reference. In reliable mode the checkpoint FILES stay
     * the source of truth, and both the pre-checkpoint cache entry and any
-    * post-checkpoint blocks are released. No-op for non-checkpointed plans.
+    * post-checkpoint blocks are released. Either way the frame drops out
+    * of [[sources]]. No-op for non-checkpointed plans.
     */
-  def free(df: DataFrame): Unit = {
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-    Option(preCheckpoint.remove(df.queryExecution.logical))
-      .foreach(_.unpersist(blocking = false))
+  def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: LogicalRDD =>
+      lr.rdd.unpersist(blocking = false)
+      // never cached in local mode, so unpersist is a no-op there
+      Option(behind.remove(lr.rdd)).foreach(_.unpersist(blocking = false))
+    case _ => ()
   }
 }

@@ -368,23 +368,7 @@ object Sampling {
     val tokenBuckets = firstBuckets(live
       .select(col("doc_id"), explode(Dedup.tokens).as("tok"))
       .groupBy(col("tok")).agg(min(col("doc_id")).as("first_id")))
-    // array_remove ≡ filter(_ =!= "") on a no-null token array, and it is
-    // codegen where the filter lambda was CodegenFallback (r21)
-    val filtered = array_remove(Dedup.tokens, "")
-    // r21: adjacent pairs via a position generator + two element_at
-    // lookups — explode and element_at are codegen, where the old
-    // zip_with(slice, slice) lambda was CodegenFallback and materialized
-    // a struct ARRAY per doc before exploding it (guide §1.2 step 2 /
-    // §4.1: prefer codegen-capable spellings). Same (w1, w2) string
-    // pairs, same min(doc_id) aggregation, bit-identical buckets.
-    val bigramBuckets = firstBuckets(live
-      .select(col("doc_id"), filtered.as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"),
-        explode(sequence(lit(1), size(col("t")) - 1)).as("i"), col("t"))
-      .select(col("doc_id"),
-        element_at(col("t"), col("i")).as("w1"),
-        element_at(col("t"), col("i") + 1).as("w2"))
+    val bigramBuckets = firstBuckets(bigrams(live)
       .groupBy(col("w1"), col("w2"))
       .agg(min(col("doc_id")).as("first_id")))
     val docBuckets = live
@@ -397,6 +381,29 @@ object Sampling {
       .join(cum(bigramBuckets, "bigram_types"), Seq("k"))
       .select(col("k").as("checkpoint"), col("n_docs"), col("vocab"),
         col("bigram_types"))
+  }
+
+  /** [[vocabGrowth]]'s bigrams: one (doc_id, w1, w2) row per adjacent
+    * pair of non-empty whitespace tokens.
+    */
+  private[ops] def bigrams(docs: DataFrame): DataFrame = {
+    // array_remove ≡ filter(_ =!= "") on a no-null token array, and it is
+    // codegen where the filter lambda was CodegenFallback (r21)
+    val filtered = array_remove(Dedup.tokens, "")
+    // r21: adjacent pairs via a position generator + two element_at
+    // lookups — explode and element_at are codegen, where the old
+    // zip_with(slice, slice) lambda was CodegenFallback and materialized
+    // a struct ARRAY per doc before exploding it (guide §1.2 step 2 /
+    // §4.1: prefer codegen-capable spellings). Same (w1, w2) string
+    // pairs, same min(doc_id) aggregation, bit-identical buckets.
+    docs
+      .select(col("doc_id"), filtered.as("t"))
+      .filter(size(col("t")) >= 2)
+      .select(col("doc_id"),
+        explode(sequence(lit(1), size(col("t")) - 1)).as("i"), col("t"))
+      .select(col("doc_id"),
+        element_at(col("t"), col("i")).as("w1"),
+        element_at(col("t"), col("i") + 1).as("w2"))
   }
 
   /** k = ⌈checkpoints·id/max_id⌉ clamped to ≥ 1: the intake-checkpoint

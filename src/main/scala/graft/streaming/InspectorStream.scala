@@ -22,6 +22,13 @@ import graft.sources.FileRecords
   *   - reassembly buffers above `maxBufferBytes` are dropped (per-key form
   *     of the reference's global 50%-heap cap — per-key is the bound that
   *     exists in a distributed setting).
+  *
+  * Checkpoint compatibility: the state schema is one flat
+  * `(version int, payload binary)` row ([[StateEnvelope]]). Builds that
+  * stored the envelope through a kryo encoder wrote a single `value
+  * binary` column instead, so Spark's state-schema check refuses their
+  * checkpoints at restart; restart such a query with a fresh checkpoint
+  * directory.
   */
 object InspectorStream {
 
@@ -207,15 +214,11 @@ chmod +x ${shq(rotate)} && tcpdump ${flags.mkString(" ")} ${shq(bpf)}"""
               maxBufferBytes: Long = DefaultMaxBufferBytes,
               withIdleTimeout: Boolean = true,
               maxStateEntries: Int = DefaultMaxStateEntries): Dataset[RecordInfo] = {
+    // The state row is the flat StateEnvelope (version int, payload
+    // binary): the snapshot is already serialized inside it, and a product
+    // encoder for the deeply nested ConnSnapshot itself would make
+    // per-micro-batch analysis quadratic-slow.
     import RecordEncoders._
-    // The state rides as kryo-serialized bytes (a product encoder for the
-    // deeply nested ConnSnapshot would make per-micro-batch analysis
-    // quadratic-slow), wrapped in the version-tagged StateEnvelope so an
-    // incompatible checkpoint fails with an actionable message instead of
-    // a raw kryo error; the envelope's own (Int, Array[Byte]) shape is
-    // stable across builds.
-    implicit val envelopeEncoder: org.apache.spark.sql.Encoder[StateEnvelope] =
-      org.apache.spark.sql.Encoders.kryo[StateEnvelope]
     val timeoutConf =
       if (withIdleTimeout) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout

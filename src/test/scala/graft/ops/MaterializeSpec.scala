@@ -26,6 +26,40 @@ class MaterializeSpec extends SparkSpec {
     Materialize.free((1 to 3).toDF("x")) // non-checkpointed: must not throw
   }
 
+  /** Two nested checkpoints over a plain frame: `sources` walks from a
+    * consumer of the outer one down to both frames behind them, a
+    * self-join (which re-instances the checkpoint's attributes) finds the
+    * same frames, and `free` drops each record.
+    */
+  private def checkSources(): Unit = {
+    val s = spark
+    import s.implicits._
+    val base = (1 to 20).toDF("x")
+    val inner = Materialize(base)
+    val mid = inner.select(($"x" * 2).as("y"))
+    val outer = Materialize(mid)
+    val q = outer.filter($"y" > 3)
+    assert(Materialize.sources(inner) === Seq(base))
+    assert(Materialize.sources(q) === Seq(mid, base))
+    assert(Materialize.sources(outer.as("a").join(outer.as("b"), "y")) === Seq(mid, base))
+    assert(Materialize.sources(base).isEmpty)
+    assert(q.count() === 19)
+    assert(Materialize.sources(q) === Seq(mid, base))
+    Materialize.free(outer)
+    assert(Materialize.sources(q).isEmpty)
+    assert(Materialize.sources(inner) === Seq(base))
+    Materialize.free(inner)
+    assert(Materialize.sources(inner).isEmpty)
+  }
+
+  test("sources lists the frames behind nested checkpoints in both modes; free drops them") {
+    checkSources()
+    spark.sparkContext.setCheckpointDir(Files.createTempDirectory("graft_ckpt").toString)
+    spark.conf.set(Materialize.ReliableFlag, "true")
+    try checkSources()
+    finally spark.conf.unset(Materialize.ReliableFlag)
+  }
+
   test("connectedComponents frees superseded iteration frames as it runs") {
     val s = spark
     import s.implicits._

@@ -25,17 +25,16 @@ class PlanAuditSpec extends SparkSpec {
     df.queryExecution.executedPlan.toString
   }
 
-  /** [[planString]] with [[Materialize]] in passthrough mode, so guards
-    * that audit the PRE-checkpoint part of a pipeline (the gram-space
-    * aggregates q69/q70 hide behind their r21 checkpoint) see the whole
-    * plan instead of a `Scan ExistingRDD` stub. Only for queries whose
-    * construction runs no loop of actions (NOT the q45/q128/q132 family —
-    * passthrough would replay their iterations uncheckpointed).
+  /** [[planString]] followed by the plan behind every checkpoint the
+    * query reads ([[Materialize.sources]]), so guards that audit the
+    * PRE-checkpoint part of a pipeline (the gram-space aggregates q69/q70
+    * hide behind their r21 checkpoint) see the whole pipeline, not only
+    * a `Scan ExistingRDD` stub.
     */
   private def fullPlanString(q: String): String = {
-    spark.conf.set(Materialize.PassthroughFlag, "true")
-    try planString(q)
-    finally spark.conf.unset(Materialize.PassthroughFlag)
+    val df = graft.SparkEntry.queries(q)(spark, sf)
+    (df +: Materialize.sources(df)).map(_.queryExecution.executedPlan.toString)
+      .mkString("\n")
   }
 
   /** No document body may cross a shuffle: neither the raw `text` column
@@ -530,7 +529,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("q69: long-keyed hash aggs all partial; no posting list, no cross join") {
     // full pipeline (r21: the (g, doc_id) aggregate is checkpointed —
-    // passthrough shows the gram-space part the guard exists to audit)
+    // its source plan is the gram-space part the guard exists to audit)
     val p = fullPlanString("q69_dup_spans")
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)

@@ -10,7 +10,9 @@ import graft.SparkSpec
   * corpora that exercise the edges (empty/whitespace/NULL text, ties,
   * repeated grams, one-sided sources). The DuckDB oracle gate also
   * re-checks all of these end to end; these specs localize a failure to
-  * the operator and keep the old spelling in-tree as the contract.
+  * the operator. The old spellings of q121 and q133 live in
+  * [[LegacySpellings]]; the q86/q62 two-frame references are still
+  * library operators.
   */
 class R21RestructureSpec extends SparkSpec {
 
@@ -37,23 +39,8 @@ class R21RestructureSpec extends SparkSpec {
     val got = Sampling.vocabGrowth(docs)
     // the exact pre-r21 bigram spelling, spliced into the same curve
     val live = docs.filter(col("text").isNotNull)
-    val filtered = filter(Dedup.tokens, t => t =!= "")
-    val pairsOld = live
-      .select(col("doc_id"), filtered.as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"), explode(zip_with(
-        slice(col("t"), lit(1), size(col("t")) - 1),
-        slice(col("t"), lit(2), size(col("t")) - 1),
-        (a, b) => struct(a.as("w1"), b.as("w2")))).as("p"))
-      .select(col("doc_id"), col("p.w1").as("w1"), col("p.w2").as("w2"))
-    val pairsNew = live
-      .select(col("doc_id"), array_remove(Dedup.tokens, "").as("t"))
-      .filter(size(col("t")) >= 2)
-      .select(col("doc_id"),
-        explode(sequence(lit(1), size(col("t")) - 1)).as("i"), col("t"))
-      .select(col("doc_id"),
-        element_at(col("t"), col("i")).as("w1"),
-        element_at(col("t"), col("i") + 1).as("w2"))
+    val pairsOld = LegacySpellings.q121BigramsR20(live)
+    val pairsNew = Sampling.bigrams(live)
     assert(rowsOf(pairsNew) === rowsOf(pairsOld))
     // and the curve itself is stable in shape: strictly non-decreasing
     val rows = got.orderBy(col("checkpoint")).collect()
@@ -78,13 +65,7 @@ class R21RestructureSpec extends SparkSpec {
     val dir = docsDirSrc(rows.map { case (id, t, src) => (id, t, src) })
     val docs = graft.Tables.documents(spark, dir)
     val half = pmod(TextAnalysis.md5Prefix(col("doc_id").cast("string")), lit(2L))
-    val a = docs.filter(half === 0)
-    val b = docs.filter(half =!= 0)
-      .withColumn("text",
-        when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" x x x x x x x x")))
-          .otherwise(col("text")))
-    val ref = Snapshot.qualityDrift(a, b)
+    val ref = LegacySpellings.q133R20(docs)
     val got = Snapshot.qualityDriftTagged(docs.select(
       col("source"),
       (half === 0).as("snap_a"),

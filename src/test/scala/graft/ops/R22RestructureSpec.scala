@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
@@ -11,7 +10,8 @@ import graft.SparkSpec
   * re-scans of itself (the q62 lesson — a `%` predicate cannot prune
   * parquet row groups, so every union branch re-decoded the full text
   * column). These specs pin the full query output of the committed
-  * spelling against the EXACT pre-r22 union spelling, on fixtures where
+  * spelling against the EXACT pre-r22 union spelling
+  * ([[LegacySpellings]]), on fixtures where
   * the plant fires (non-vacuity asserted), NULL text exists, and echo
   * ids collide with real ids.
   */
@@ -36,15 +36,8 @@ class R22RestructureSpec extends SparkSpec {
 
   test("q115 one-scan source explode ≡ union of two planted re-scans") {
     val dir = docsDirSrc(fixture(115))
-    val docs = graft.Tables.documents(spark, dir)
     val got = graft.SparkEntry.queries("q115_source_dup_matrix")(spark, dir)
-    // the exact pre-r22 spelling
-    val planted = docs.filter(col("doc_id") % 37 === 0)
-    val ref = Dedup.sourceDupMatrix(docs.select(col("text"), col("source"))
-      .unionByName(planted.select(col("text"), lit("mirror").as("source")))
-      .unionByName(planted.select(col("text"),
-        concat(lit("src"), (expr("doc_id div 37") % 20).cast("string"))
-          .as("source"))))
+    val ref = LegacySpellings.q115R21(graft.Tables.documents(spark, dir))
     assert(rowsOf(got) === rowsOf(ref))
     assert(got.count() > 0, "plant must be non-vacuous")
   }
@@ -52,11 +45,7 @@ class R22RestructureSpec extends SparkSpec {
   test("q123 one-scan id explode ≡ union with echo re-scan") {
     val dir = docsDirSrc(fixture(123))
     val got = graft.SparkEntry.queries("q123_split_leakage")(spark, dir)
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-    val ref = Dedup.splitLeakage(docs.unionByName(
-      docs.filter(col("doc_id") % 7 === 0)
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))))
+    val ref = LegacySpellings.q123R21(graft.Tables.documents(spark, dir))
     assert(rowsOf(got) === rowsOf(ref))
     assert(got.count() > 0, "plant must be non-vacuous")
   }
@@ -64,12 +53,7 @@ class R22RestructureSpec extends SparkSpec {
   test("q124 one-scan id explode ≡ union with echo re-scan") {
     val dir = docsDirSrc(fixture(124))
     val got = graft.SparkEntry.queries("q124_dup_growth")(spark, dir)
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-    val ref = Dedup.dupGrowth(
-      docs.select((col("doc_id") * 2).as("doc_id"), col("text"))
-        .unionByName(docs.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") * 2 + 1).as("doc_id"), col("text"))))
+    val ref = LegacySpellings.q124R21(graft.Tables.documents(spark, dir))
     assert(rowsOf(got) === rowsOf(ref))
     assert(got.count() > 0)
   }
@@ -77,14 +61,7 @@ class R22RestructureSpec extends SparkSpec {
   test("q139 one-scan id explode ≡ union with power-of-ten echo re-scan") {
     val dir = docsDirSrc(fixture(139))
     val got = graft.SparkEntry.queries("q139_dup_spread")(spark, dir)
-    val docs = graft.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text"))
-    val copies = docs
-      .filter(col("text").isNotNull && col("doc_id") % 41 === 0)
-      .select((col("doc_id") +
-        pow(lit(10.0), (col("doc_id") % 6 + 1).cast("double"))
-          .cast("long")).as("doc_id"), col("text"))
-    val ref = Dedup.dupSpread(docs.unionByName(copies))
+    val ref = LegacySpellings.q139R21(graft.Tables.documents(spark, dir))
     assert(rowsOf(got) === rowsOf(ref))
     assert(got.count() > 0)
   }

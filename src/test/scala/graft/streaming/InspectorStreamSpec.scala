@@ -21,7 +21,7 @@ class InspectorStreamSpec extends SparkSpec {
     assert(back.inBuf.toSeq === Seq[Byte](1, 2, 3))
     assert(back.pending.head.info.method === "get")
     // a checkpoint written by an older build fails fast and actionably,
-    // not with a raw kryo layout error
+    // not with a raw deserialization error
     val e = intercept[IllegalStateException] {
       StateEnvelope.unwrap(StateEnvelope.wrap(snap).copy(version = 1))
     }
