@@ -331,12 +331,8 @@ object Main {
                       ports: Set[Int], maxRecords: Option[Int],
                       out: PrintStream): Int =
     try {
-      Inspector.saveTables(spark, dir, prefix, ports = ports,
-        maxRecords = maxRecords)
-      Seq("requests", "responses", "actions", "results").foreach { t =>
-        val table = s"${prefix}_$t".toLowerCase(java.util.Locale.ROOT)
-        out.println(s"saved $table (${spark.table(table).count()} rows)")
-      }
+      Inspector.saveTables(spark, dir, prefix, ports = ports, maxRecords = maxRecords)
+        .foreach(table => out.println(s"saved $table (${spark.table(table).count()} rows)"))
       0
     } catch {
       case NonFatal(e) => out.println(s"save failed: ${e.getMessage}"); 1

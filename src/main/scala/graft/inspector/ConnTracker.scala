@@ -1,6 +1,5 @@
 package graft.inspector
 
-import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import graft.proto.{HbaseRpc, ProtoWire}
@@ -16,82 +15,70 @@ import graft.proto.{HbaseRpc, ProtoWire}
   * `flatMapGroupsWithState`). Not thread-safe by design.
   */
 final class ConnTracker(client: String, port: Int) {
+  import ConnTracker._
 
   private val inAsm  = new FrameAssembler
   private val outAsm = new FrameAssembler
   /** call-id -> (request info, request ts) — reference state `[addr port call-id]`. */
-  private val pending = mutable.Map.empty[Int, (HbaseRpc.RpcInfo, Long)]
+  private var pending = Map.empty[Int, (HbaseRpc.RpcInfo, Long)]
   private var scan = ScanState.empty
 
   def bufferedBytes: Long = inAsm.bufferedBytes.toLong + outAsm.bufferedBytes
   def pendingCalls: Int = pending.size
 
-  /** Total correlation/scan-lifecycle entries held (the entry-count side
-    * of the state cap; buffer bytes are the other side).
+  /** Correlation and scan-lifecycle entries held (the entry-count side of
+    * the state bounds; buffer bytes are the other side).
     */
   def stateEntries: Int = pending.size + scan.bufferedEntries
 
-  /** Drop reassembly buffers (streaming per-key memory cap, the per-key
-    * form of reference trim-state-by-memory, core.clj:322-347).
-    */
-  def resetBuffers(): Unit = { inAsm.reset(); outAsm.reset() }
-
   /** Externalized state for `flatMapGroupsWithState`. */
-  def snapshot: ConnSnapshot = ConnSnapshot(
-    inBuf = inAsm.buffered,
-    outBuf = outAsm.buffered,
-    pending = pending.toSeq.map { case (id, (info, ts)) => PendingEntry(id, ts, info) },
-    pendingOpen = scan.pendingOpen.toSeq.map { case (id, e) =>
-      OpenEntry(id, e.info.table, e.info.region, e.ts) },
-    scanners = scan.scanners.toSeq.map { case (id, e) =>
-      ScannerEntry(id, e.info.table, e.info.region, e.ts) })
+  def snapshot: ConnSnapshot = ConnSnapshot(inAsm.buffered, outAsm.buffered, pending, scan)
 
   def restore(s: ConnSnapshot): Unit = {
     inAsm.restore(s.inBuf)
     outAsm.restore(s.outBuf)
-    pending.clear()
-    s.pending.foreach(e => pending(e.callId) = (e.info, e.ts))
-    scan = ScanState.State(
-      s.pendingOpen.map(e => e.callId ->
-        ScanState.Entry(ScanState.RegionInfo(e.table, e.region), e.ts)).toMap,
-      s.scanners.map(e => e.scannerId ->
-        ScanState.Entry(ScanState.RegionInfo(e.table, e.region), e.ts)).toMap)
+    pending = s.pending
+    scan = s.scan
   }
 
-  /** Expire ALL state objects older than `cutoffTs` — call-id correlation
-    * AND scan-lifecycle entries (reference trim-state-expired,
-    * core.clj:285-297; 120 s). Actively-used scanners survive: next-rows
-    * refreshes their ts (core.clj:127); a leaked scanner (client crashed
-    * without close-scanner) ages out instead of living as long as the
-    * connection.
+  /** The per-connection state bounds, applied once per streaming trigger
+    * after its segments are pushed; `newestTs` is the capture ts of the
+    * trigger's newest segment. In order:
+    *   1. expiry: every correlation AND scan-lifecycle entry last touched
+    *      more than [[StateTimeoutMs]] before `newestTs` is dropped
+    *      (reference trim-state-expired, core.clj:285-297, on capture
+    *      time, not wall clock). Actively-used scanners survive: next-rows
+    *      refreshes their ts (core.clj:127); a leaked scanner (client
+    *      crashed without close-scanner) ages out;
+    *   2. byte cap: both reassembly buffers are dropped once they hold
+    *      more than [[MaxBufferBytes]] (the per-key form of reference
+    *      trim-state-by-memory, core.clj:322-347); the next segment
+    *      re-syncs via the valid-length heuristic;
+    *   3. entry cap: the OLDEST entries across all three maps are dropped
+    *      until at most [[MaxStateEntries]] remain, a bound that fires even
+    *      when nothing is old enough to expire.
+    * Returns the number of entries dropped by 1 and 3.
     */
-  def expireBefore(cutoffTs: Long): Int = {
-    val old = pending.filter { case (_, (_, ts)) => ts < cutoffTs }.keys.toSeq
-    old.foreach(pending.remove)
-    val before = scan.bufferedEntries
-    scan = ScanState.expire(scan, cutoffTs)
-    old.size + (before - scan.bufferedEntries)
-  }
-
-  /** Hard entry-count cap (the per-key form of reference
-    * trim-state-by-memory, which drops entries when the global budget is
-    * hit even if nothing is expired): drop OLDEST entries across all
-    * three maps until at most `max` remain. Returns the number dropped.
-    */
-  def trimToEntries(max: Int): Int = {
-    val excess = stateEntries - max
-    if (excess <= 0) return 0
-    // (ts, kind, key) oldest-first; kind disambiguates the map to remove from
-    val all =
-      pending.iterator.map { case (id, (_, ts)) => (ts, 0, id.toLong) } ++
-        scan.pendingOpen.iterator.map { case (id, e) => (e.ts, 1, id.toLong) } ++
-        scan.scanners.iterator.map { case (id, e) => (e.ts, 2, id) }
-    all.toSeq.sortBy(t => (t._1, t._2, t._3)).take(excess).foreach {
-      case (_, 0, id) => pending.remove(id.toInt)
-      case (_, 1, id) => scan = scan.copy(pendingOpen = scan.pendingOpen - id.toInt)
-      case (_, _, id) => scan = scan.copy(scanners = scan.scanners - id)
+  def trimState(newestTs: Long): Int = {
+    val before = stateEntries
+    val cutoff = newestTs - StateTimeoutMs
+    pending = pending.filter { case (_, (_, ts)) => ts >= cutoff }
+    scan = ScanState.expire(scan, cutoff)
+    if (bufferedBytes > MaxBufferBytes) { inAsm.reset(); outAsm.reset() }
+    val excess = stateEntries - MaxStateEntries
+    if (excess > 0) {
+      // (ts, kind, key) oldest-first; kind names the map to remove from
+      val all =
+        pending.iterator.map { case (id, (_, ts)) => (ts, 0, id.toLong) } ++
+          scan.pendingOpen.iterator.map { case (id, e) => (e.ts, 1, id.toLong) } ++
+          scan.scanners.iterator.map { case (id, e) => (e.ts, 2, id) }
+      all.toSeq.sorted.take(excess).foreach {
+        case (_, 0, id) => pending -= id.toInt
+        case (_, 1, id) => scan = scan.copy(pendingOpen = scan.pendingOpen - id.toInt)
+        case (_, _, id) => scan = scan.copy(scanners = scan.scanners - id)
+      }
     }
-    excess
+    before - stateEntries
   }
 
   /** Feed one segment; emit every completed, shaped record. A parse
@@ -126,8 +113,8 @@ final class ConnTracker(client: String, port: Int) {
         else pending.get(parsed.callId).map { case (_, reqTs) => seg.ts - reqTs }
       val (nextScan, info) = ScanState.step(scan, parsed, seg.inbound, seg.ts)
       scan = nextScan
-      if (seg.inbound) pending(info.callId) = (info, seg.ts)
-      else pending.remove(info.callId)
+      pending = if (seg.inbound) pending.updated(info.callId, (info, seg.ts))
+        else pending - info.callId
       Some(Shaping.shape(info, seg.ts, seg.inbound, client, port, seg.server,
         frame.length, elapsed))
     } catch {
@@ -137,4 +124,18 @@ final class ConnTracker(client: String, port: Int) {
         (if (seg.inbound) inAsm else outAsm).reset()
         None
     }
+}
+
+object ConnTracker {
+  /** State expiry and idle timeout: the reference's state-expiration-ms
+    * (core.clj:69-72).
+    */
+  final val StateTimeoutMs: Long = 120000L
+  /** Per-connection reassembly byte cap (per-key form of the reference's
+    * global 50%-heap cap: per-key is the bound that exists in a
+    * distributed setting).
+    */
+  final val MaxBufferBytes: Long = 64L * 1024 * 1024
+  /** Per-connection cap on correlation/scan entries. */
+  final val MaxStateEntries: Int = 10000
 }

@@ -111,57 +111,65 @@ object Inspector {
     records.filter(!col("inbound"))
       .select(explode(col("results")).as("r")).select(col("r.*"))
 
-  /** SQL surface: 4 temp views over one cached pipeline run + spark.sql
-    * passthrough (reference sink/db.clj:101-113 shell/web — arbitrary SQL
-    * over requests/responses/actions/results). `maxRecords` is the
+  /** The 4 tables as `(name, frame)` pairs over one records dataset. */
+  private def tables(records: Dataset[RecordInfo]): Seq[(String, DataFrame)] = Seq(
+    "requests" -> requests(records), "responses" -> responses(records),
+    "actions" -> actionsTable(records), "results" -> resultsTable(records))
+
+  /** The records under `path`, cut to the first `maxRecords` if given,
+    * cached so the 4 tables share one pipeline run. `maxRecords` is the
     * reference's `-c` count cap (core.clj:51-53): a take-bound on the
     * record stream for "grab the first N and look" runs — which N is
     * processing-order-dependent, exactly like the reference's packet cap.
     */
+  private def cachedRecords(spark: SparkSession, path: String, ports: Set[Int],
+                            maxRecords: Option[Int]): Dataset[RecordInfo] = {
+    val all = records(spark, path, ports)
+    maxRecords.fold(all)(n => all.limit(n)).cache()
+  }
+
+  /** SQL surface: 4 temp views over one cached pipeline run + spark.sql
+    * passthrough (reference sink/db.clj:101-113 shell/web — arbitrary SQL
+    * over requests/responses/actions/results).
+    */
   def registerViews(spark: SparkSession, path: String,
                     ports: Set[Int] = HbasePorts,
-                    maxRecords: Option[Int] = None): Unit = {
-    val all = records(spark, path, ports)
-    val recs = maxRecords.fold(all)(n => all.limit(n)).cache()
-    requests(recs).createOrReplaceTempView("requests")
-    responses(recs).createOrReplaceTempView("responses")
-    actionsTable(recs).createOrReplaceTempView("actions")
-    resultsTable(recs).createOrReplaceTempView("results")
-  }
+                    maxRecords: Option[Int] = None): Unit =
+    tables(cachedRecords(spark, path, ports, maxRecords))
+      .foreach { case (name, df) => df.createOrReplaceTempView(name) }
 
   /** Persist the 4 tables bucketed by the join key — the Spark
     * equivalent of the reference's H2 index on (client, port, call_id)
     * (sink/db.clj:65-66): repeated request⋈response analytics over the
     * saved tables co-locate on the bucket key and skip the exchange.
+    * Returns the saved table names.
     */
   def saveTables(spark: SparkSession, pcapPath: String, prefix: String,
                  buckets: Int = 32, ports: Set[Int] = HbasePorts,
-                 maxRecords: Option[Int] = None): Unit = {
-    val all = records(spark, pcapPath, ports)
-    val recs = maxRecords.fold(all)(n => all.limit(n)).cache()
-    Seq(
-      "requests" -> requests(recs), "responses" -> responses(recs),
-      "actions" -> actionsTable(recs), "results" -> resultsTable(recs))
-      .foreach { case (name, df) =>
-        // saveAsTable lowercases unquoted identifiers — build the leftover
-        // path from the same casing or a stale dir slips past the check
-        val table = s"${prefix}_$name".toLowerCase(java.util.Locale.ROOT)
-        spark.sql(s"DROP TABLE IF EXISTS $table")
-        // a crashed run can leave files with no catalog entry; managed
-        // tables refuse to reuse the location. Resolve + delete via the
-        // Hadoop FileSystem API so warehouse URIs beyond the local FS
-        // (hdfs:/s3:/percent-encoded file:) are handled uniformly.
-        val warehouse = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir"))
-        val leftover = new org.apache.hadoop.fs.Path(warehouse, table)
-        val fs = leftover.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(leftover)) fs.delete(leftover, true)
-        df.write.mode("overwrite")
-          .bucketBy(buckets, "client", "port")
-          .sortBy("client", "port", "call_id")
-          .saveAsTable(table)
-      }
+                 maxRecords: Option[Int] = None): Seq[String] = {
+    val recs = cachedRecords(spark, pcapPath, ports, maxRecords)
+    val saved = tables(recs).map { case (name, df) =>
+      // saveAsTable lowercases unquoted identifiers — build the leftover
+      // path from the same casing or a stale dir slips past the check
+      val table = s"${prefix}_$name".toLowerCase(java.util.Locale.ROOT)
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      // a crashed run can leave files with no catalog entry; managed
+      // tables refuse to reuse the location. Resolve + delete via the
+      // Hadoop FileSystem API so warehouse URIs beyond the local FS
+      // (hdfs:/s3:/percent-encoded file:) are handled uniformly.
+      val warehouse = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"))
+      val leftover = new org.apache.hadoop.fs.Path(warehouse, table)
+      val fs = leftover.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(leftover)) fs.delete(leftover, true)
+      df.write.mode("overwrite")
+        .bucketBy(buckets, "client", "port")
+        .sortBy("client", "port", "call_id")
+        .saveAsTable(table)
+      table
+    }
     recs.unpersist()
+    saved
   }
 
   /** Decoded packet view (reference pcap.clj packet->map), including the

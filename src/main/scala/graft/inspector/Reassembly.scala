@@ -17,7 +17,7 @@ package graft.inspector
   * is buffered and completed (the reference's `read-int4` returns 0 at EOF
   * and drops the tail bytes); strictly more traffic is recovered.
   */
-final class FrameAssembler(maxFrame: Int = FrameAssembler.MaxFrameBytes) {
+final class FrameAssembler {
 
   // Unconsumed bytes live in buf[start, end). An offset-tracked growable
   // array, NOT a ByteArrayOutputStream snapshotted per push: the original
@@ -32,10 +32,11 @@ final class FrameAssembler(maxFrame: Int = FrameAssembler.MaxFrameBytes) {
   private var end = 0
 
   /** The `valid-length?` heuristic: positive and under 256 MiB. */
-  def validLength(len: Int): Boolean = len > 0 && len < maxFrame
+  def validLength(len: Int): Boolean = len > 0 && len < FrameAssembler.MaxFrameBytes
 
-  /** Bytes currently buffered (streaming memory-cap accounting,
-    * reference core.clj:298-307 current-memory-usage).
+  /** Bytes currently buffered (the byte side of
+    * [[ConnTracker.trimState]], reference core.clj:298-307
+    * current-memory-usage).
     */
   def bufferedBytes: Int = end - start
 

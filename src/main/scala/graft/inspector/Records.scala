@@ -43,31 +43,32 @@ final case class RecordInfo(
     results: Seq[ChildRow])
 
 /** Per-connection state externalized for streaming mode
-  * (`flatMapGroupsWithState`): reassembly buffers per direction plus
-  * correlation and scan-lifecycle entries.
+  * (`flatMapGroupsWithState`): the [[ConnTracker]]'s own state, as it
+  * holds it — one reassembly buffer per direction, the call-id
+  * correlation map (call-id -> (request info, request ts)) and the
+  * scan-lifecycle state.
   *
-  * The snapshot's field layout is the streaming checkpoint format. It rides
+  * The snapshot's layout is the streaming checkpoint format. It rides
   * inside [[StateEnvelope]] — a `(version, payload-bytes)` wrapper whose own
   * shape never changes — so a checkpoint written by a build with a different
   * snapshot layout fails on restore with an actionable version message
-  * instead of a raw deserialization error. Bump
-  * [[ConnSnapshot.Version]] whenever any of these case classes changes.
+  * instead of a raw deserialization error. Bump [[ConnSnapshot.Version]]
+  * whenever this layout, [[ScanState.State]] or [[graft.proto.HbaseRpc.RpcInfo]]
+  * changes.
   */
-final case class PendingEntry(callId: Int, ts: Long, info: graft.proto.HbaseRpc.RpcInfo)
-final case class OpenEntry(callId: Int, table: Option[String], region: Option[String], ts: Long)
-final case class ScannerEntry(scannerId: Long, table: Option[String], region: Option[String], ts: Long)
 final case class ConnSnapshot(
     inBuf: Array[Byte],
     outBuf: Array[Byte],
-    pending: Seq[PendingEntry],
-    pendingOpen: Seq[OpenEntry],
-    scanners: Seq[ScannerEntry])
+    pending: Map[Int, (graft.proto.HbaseRpc.RpcInfo, Long)],
+    scan: ScanState.State)
 
 object ConnSnapshot {
   /** Streaming-state format version. History: 1 = round 3 layout;
-    * 2 = round 4 (ts added to Open/ScannerEntry) + the envelope itself.
+    * 2 = round 4 (ts added to Open/ScannerEntry) + the envelope itself;
+    * 3 = the tracker's own maps and `ScanState.State` in place of the
+    * per-entry case classes.
     */
-  val Version = 2
+  val Version = 3
 }
 
 /** Stable serialization envelope for the streaming state: an int version

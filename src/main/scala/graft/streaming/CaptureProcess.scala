@@ -101,12 +101,8 @@ object CaptureProcess {
     * See [[InspectorStream.captureCommand]] for the BPF/rotation shape.
     */
   def start(iface: String, dir: String,
-            ports: Set[Int] = graft.inspector.Inspector.HbasePorts,
-            rotateSeconds: Int = 60): Handle =
-    startCommand(
-      InspectorStream.captureCommand(iface, dir, ports,
-        rotateSeconds = rotateSeconds),
-      dir)
+            ports: Set[Int] = graft.inspector.Inspector.HbasePorts): Handle =
+    startCommand(InspectorStream.captureCommand(iface, dir, ports), dir)
 
   /** Launch an arbitrary capture shell command feeding `dir` (the spec
     * seam, and the escape hatch for a non-tcpdump capture source).

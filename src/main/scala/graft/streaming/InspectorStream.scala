@@ -14,14 +14,17 @@ import graft.sources.FileRecords
   * cap, core.clj:322-347).
   *
   * Spark form: segments keyed by connection → `flatMapGroupsWithState`
-  * holding one [[ConnSnapshot]] per connection. State hygiene:
-  *   - a connection idle for `timeoutMs` (default 120 s, the reference's
-  *     state-expiration-ms) is dropped via the group-state timeout;
-  *   - correlation entries older than `timeoutMs` relative to the newest
-  *     segment are expired each batch;
-  *   - reassembly buffers above `maxBufferBytes` are dropped (per-key form
-  *     of the reference's global 50%-heap cap — per-key is the bound that
-  *     exists in a distributed setting).
+  * holding one [[ConnSnapshot]] per connection. State hygiene runs per
+  * streaming trigger (batch applies none of it):
+  *   - with `withIdleTimeout`, a connection idle for 120 s (the
+  *     reference's state-expiration-ms) is dropped via the group-state
+  *     timeout;
+  *   - [[ConnTracker.trimState]] applies the per-connection bounds once
+  *     per trigger: entries older than 120 s relative to the newest
+  *     segment expire, reassembly buffers above 64 MiB are dropped (per-key
+  *     form of the reference's global 50%-heap cap — per-key is the bound
+  *     that exists in a distributed setting), and at most 10,000
+  *     correlation/scan entries are kept, oldest dropped first.
   *
   * Checkpoint compatibility: the state schema is one flat
   * `(version int, payload binary)` row ([[StateEnvelope]]). Builds that
@@ -31,14 +34,6 @@ import graft.sources.FileRecords
   * directory.
   */
 object InspectorStream {
-
-  val DefaultTimeoutMs: Long = 120000L
-  val DefaultMaxBufferBytes: Long = 64L * 1024 * 1024
-  /** Per-connection cap on correlation/scan entries (per-key form of
-    * reference trim-state-by-memory: a bound that fires even when nothing
-    * is old enough to expire).
-    */
-  val DefaultMaxStateEntries: Int = 10000
 
   /** RocksDB state store option: at RegionServer-fleet connection counts
     * the default HDFS-backed store keeps EVERY connection's
@@ -84,14 +79,10 @@ object InspectorStream {
 
   /** readStream pcap dir → shaped records, end to end. */
   def recordsFromPcapDir(spark: SparkSession, path: String,
-                         timeoutMs: Long = DefaultTimeoutMs,
-                         maxBufferBytes: Long = DefaultMaxBufferBytes,
                          withIdleTimeout: Boolean = true,
                          maxFilesPerTrigger: Option[Int] = None,
-                         maxStateEntries: Int = DefaultMaxStateEntries,
                          ports: Set[Int] = Inspector.HbasePorts): Dataset[RecordInfo] =
-    records(segmentsFromPcapDir(spark, path, ports, maxFilesPerTrigger),
-      timeoutMs, maxBufferBytes, withIdleTimeout, maxStateEntries)
+    records(segmentsFromPcapDir(spark, path, ports, maxFilesPerTrigger), withIdleTimeout)
 
   /** Reference `-d` (duration) equivalent for a running query: block for at
     * most `durationMs`, then stop it gracefully if it has not terminated on
@@ -151,9 +142,10 @@ object InspectorStream {
     * (pcap.clj:16-33 live-handle: BPF filter, snaplen, promiscuous mode);
     * a distributed engine deliberately does not — tcpdump owns the NIC and
     * rotates files into the directory [[recordsFromPcapDir]] tails. This
-    * builds the exact invocation with the same knobs: the reference's BPF
+    * builds the exact invocation with the reference's settings: its BPF
     * expression (data-carrying TCP segments on the RegionServer ports),
-    * snaplen, promiscuous mode, gzip'd rotation.
+    * the full 65535-byte snaplen, promiscuous mode (tcpdump's default),
+    * and a gzip'd rotation every 60 s.
     *
     * In-progress files must NEVER be visible to the tailing source (it is
     * exactly-once per path: a torn read would be final, and a later rename
@@ -163,15 +155,8 @@ object InspectorStream {
     * command (`-z`) gzips the FINISHED file and atomically `mv`s it into
     * the watched directory.
     */
-  /** POSIX single-quote: safe for any content including quotes/spaces/`$`. */
-  private def shq(s: String): String = "'" + s.replace("'", "'\\''") + "'"
-
   def captureCommand(iface: String, dir: String,
-                     ports: Set[Int] = Inspector.HbasePorts,
-                     snaplen: Int = 65535,
-                     rotateSeconds: Int = 60,
-                     promiscuous: Boolean = true,
-                     gzip: Boolean = true): String = {
+                     ports: Set[Int] = Inspector.HbasePorts): String = {
     // reference pcap.clj:24-27 filter: tcp, given ports, payload-carrying.
     // IPv4 branch = the reference's; the ip6 branch assumes the fixed
     // 40-byte header (classic BPF cannot walk extension headers — a
@@ -186,34 +171,27 @@ object InspectorStream {
     // Heredoc with a quoted delimiter: the script body is written verbatim,
     // no nested-quote escaping; the destination dir is itself shq-embedded
     // so spaces/metacharacters in the path survive both write and run time.
-    val rotateBody =
-      if (gzip) s"""gzip "$$1" && mv "$$1.gz" ${shq(dir + "/")}"""
-      else s"""mv "$$1" ${shq(dir + "/")}"""
-    val flags = Seq(
-      Some(s"-i ${shq(iface)}"),
-      if (promiscuous) None else Some("-p"),
-      Some(s"-s $snaplen"),
-      Some(s"-G $rotateSeconds"),
-      Some(s"-z ${shq(rotate)}"),
-      Some(s"-w ${shq(staging + "/capture-%s.pcap")}")).flatten
+    val tcpdump = Seq(s"-i ${shq(iface)}", "-s 65535", "-G 60", s"-z ${shq(rotate)}",
+      s"-w ${shq(staging + "/capture-%s.pcap")}", shq(bpf)).mkString(" ")
     s"""mkdir -p ${shq(staging)} && cat > ${shq(rotate)} <<'GRAFT_ROTATE'
 #!/bin/sh
-$rotateBody
+gzip "$$1" && mv "$$1.gz" ${shq(dir + "/")}
 GRAFT_ROTATE
-chmod +x ${shq(rotate)} && tcpdump ${flags.mkString(" ")} ${shq(bpf)}"""
+chmod +x ${shq(rotate)} && tcpdump $tcpdump"""
   }
+
+  /** POSIX single-quote: safe for any content including quotes/spaces/`$`. */
+  private def shq(s: String): String = "'" + s.replace("'", "'\\''") + "'"
 
   /** `withIdleTimeout = true` (production) arms the per-connection
     * ProcessingTime timeout (120 s idle → state dropped). Note the engine
     * then schedules extra timeout-check micro-batches between data
     * arrivals; deterministic tests pass `false` and rely on the
-    * event-ts-relative expiry (`expireBefore`), which runs either way.
+    * event-ts-relative expiry of [[ConnTracker.trimState]], which runs
+    * either way.
     */
   def records(segments: Dataset[KeyedSegment],
-              timeoutMs: Long = DefaultTimeoutMs,
-              maxBufferBytes: Long = DefaultMaxBufferBytes,
-              withIdleTimeout: Boolean = true,
-              maxStateEntries: Int = DefaultMaxStateEntries): Dataset[RecordInfo] = {
+              withIdleTimeout: Boolean = true): Dataset[RecordInfo] = {
     // The state row is the flat StateEnvelope (version int, payload
     // binary): the snapshot is already serialized inside it, and a product
     // encoder for the deeply nested ConnSnapshot itself would make
@@ -236,14 +214,10 @@ chmod +x ${shq(rotate)} && tcpdump ${flags.mkString(" ")} ${shq(bpf)}"""
             state.getOption.map(StateEnvelope.unwrap).foreach(tracker.restore)
             val ordered = segs.toVector.sortBy(s => (s.ts, s.fileTs, s.order))
             val out = ordered.flatMap(tracker.push)
-            // expiry relative to the newest packet ts (the reference's
-            // trim-state-expired uses capture time, not wall clock)
-            ordered.lastOption.foreach(last =>
-              tracker.expireBefore(last.ts - timeoutMs))
-            if (tracker.bufferedBytes > maxBufferBytes) tracker.resetBuffers()
-            tracker.trimToEntries(maxStateEntries)
+            // ordered by ts, so the last segment is the newest
+            ordered.lastOption.foreach(last => tracker.trimState(last.ts))
             state.update(StateEnvelope.wrap(tracker.snapshot))
-            if (withIdleTimeout) state.setTimeoutDuration(timeoutMs)
+            if (withIdleTimeout) state.setTimeoutDuration(ConnTracker.StateTimeoutMs)
             out.iterator
           }
       }

@@ -35,7 +35,7 @@ class ConnTrackerFuzzSpec extends AnyFunSuite {
       // direction's buffer is bounded by one declared (valid-length)
       // frame plus a trailing segment — i.e. well under MaxFrame; the
       // production bound at scale is the streaming per-key byte cap
-      // (InspectorStreamSpec) on top of this.
+      // (ConnTrackerBoundsSpec) on top of this.
       assert(t.bufferedBytes <= pushed, s"iteration $i")
       assert(t.bufferedBytes <= 2L * FrameAssembler.MaxFrameBytes, s"iteration $i")
     }
@@ -47,7 +47,10 @@ class ConnTrackerFuzzSpec extends AnyFunSuite {
     val prefix = Array[Byte](0x0C, 0, 0, 0)
     assert(t.push(seg(1L, inbound = true, prefix ++ Array.fill[Byte](1000)(1))).isEmpty)
     assert(t.bufferedBytes === 1004L) // only the received bytes are held
-    t.resetBuffers() // what the streaming per-key cap invokes
+    // the streaming per-trigger bound drops it once past the byte cap
+    val chunk = Array.fill[Byte](1 << 20)(1)
+    while (t.bufferedBytes <= ConnTracker.MaxBufferBytes) t.push(seg(2L, inbound = true, chunk))
+    t.trimState(2L)
     assert(t.bufferedBytes === 0L)
   }
 

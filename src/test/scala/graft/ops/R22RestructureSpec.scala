@@ -17,13 +17,15 @@ import graft.SparkSpec
   */
 class R22RestructureSpec extends SparkSpec {
 
-  // ids are multiples of 7/37/41 by construction so every plant fires;
-  // one NULL-text row and one empty row pin the NULL contract
+  // ids 0..119 include multiples of 7/37/41, so every plant fires; NULL
+  // text on a non-plant id (17) and on plant ids (41 for q139's 41, 74
+  // for q115's 37, 77 for q123/q124's 7) plus one empty row pin the NULL
+  // contract, including NULL text on a row the plant selects
   private def fixture(seed: Int): Seq[(Long, String, String)] = {
     val rnd = new scala.util.Random(seed)
     (0 until 120).map { i =>
       val t =
-        if (i == 17) null.asInstanceOf[String]
+        if (Set(17, 41, 74, 77)(i)) null.asInstanceOf[String]
         else if (i == 23) ""
         else (0 until 3 + rnd.nextInt(20))
           .map(_ => s"w${rnd.nextInt(9)}").mkString(" ")
