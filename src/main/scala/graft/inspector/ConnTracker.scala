@@ -10,8 +10,8 @@ import graft.proto.{HbaseRpc, ProtoWire}
   * next-state, here per client connection so connections are the parallel
   * unit).
   *
-  * Used sequentially inside one Spark task (batch: a sorted run of one
-  * connection's segments inside `mapPartitions`; streaming: one group in
+  * Used sequentially inside one Spark task through [[run]] (batch: one
+  * sorted group of `flatMapSortedGroups`; streaming: one group in
   * `flatMapGroupsWithState`). Not thread-safe by design.
   */
 final class ConnTracker(client: String, port: Int) {
@@ -41,9 +41,9 @@ final class ConnTracker(client: String, port: Int) {
     scan = s.scan
   }
 
-  /** The per-connection state bounds, applied once per streaming trigger
-    * after its segments are pushed; `newestTs` is the capture ts of the
-    * trigger's newest segment. In order:
+  /** The per-connection state bounds, applied by [[run]] after every
+    * capture file, in batch and streaming alike; `newestTs` is the
+    * capture ts of the newest segment pushed so far. In order:
     *   1. expiry: every correlation AND scan-lifecycle entry last touched
     *      more than [[StateTimeoutMs]] before `newestTs` is dropped
     *      (reference trim-state-expired, core.clj:285-297, on capture
@@ -59,7 +59,7 @@ final class ConnTracker(client: String, port: Int) {
     *      when nothing is old enough to expire.
     * Returns the number of entries dropped by 1 and 3.
     */
-  def trimState(newestTs: Long): Int = {
+  private[inspector] def trimState(newestTs: Long): Int = {
     val before = stateEntries
     val cutoff = newestTs - StateTimeoutMs
     pending = pending.filter { case (_, (_, ts)) => ts >= cutoff }
@@ -79,6 +79,30 @@ final class ConnTracker(client: String, port: Int) {
       }
     }
     before - stateEntries
+  }
+
+  /** The connection walk, the one form batch and streaming share: pushes
+    * the connection's segments, given in capture order
+    * ([[KeyedSegment.CaptureOrder]]), and applies [[trimState]] with the
+    * newest ts pushed so far each time `fileTs` changes and once more when
+    * the input ends, so the state bounds hold after every capture file
+    * whatever the trigger size. Lazy: records come out as segments go in,
+    * and the last trim runs when the result is exhausted.
+    */
+  def run(segs: Iterator[KeyedSegment]): Iterator[RecordInfo] = {
+    var started = false
+    var fileTs = 0L
+    var newestTs = 0L
+    segs.flatMap { seg =>
+      if (!started) { started = true; newestTs = seg.ts }
+      else if (seg.fileTs != fileTs) trimState(newestTs)
+      fileTs = seg.fileTs
+      newestTs = math.max(newestTs, seg.ts)
+      push(seg)
+    } ++ {
+      if (started) trimState(newestTs)
+      Iterator.empty
+    }
   }
 
   /** Feed one segment; emit every completed, shaped record. A parse

@@ -21,9 +21,11 @@ import graft.sources.FileRecords
   *     exist, and gzip is detected by its magic, as in every source; no
   *     driver-side byte handling;
   *   - the only shuffle moves segments to their `(client, port)` owner;
-  *     `sortWithinPartitions` gives each connection an ordered run, and a
-  *     single `mapPartitions` pass walks many connections per task with
-  *     O(connection-buffer) memory (the reference's own state-cap bounds);
+  *     `flatMapSortedGroups` hands each connection's segments over in
+  *     capture order (Spark's external sort keeps the task's memory
+  *     bounded) to [[ConnTracker.run]], the same walk streaming uses, so
+  *     the state bounds (120 s expiry, byte and entry caps) apply after
+  *     every capture file here as there;
   *   - everything downstream of `records` is plain DataFrame work that
   *     Catalyst optimizes (the 4 views are projections of one cached
   *     dataset, not four pipeline replays).
@@ -64,24 +66,14 @@ object Inspector {
     FileRecords.read(spark.read.format("binaryFile").load(path))((_, in) => decodeFile(in, ports))
   }
 
-  /** Segments → shaped records: shuffle once on the connection key, order
-    * each connection's run, walk the state machine per partition.
+  /** Segments → shaped records: group by the connection key, sort each
+    * group into capture order, walk it with [[ConnTracker.run]].
     */
   def records(segs: Dataset[KeyedSegment]): Dataset[RecordInfo] = {
     import RecordEncoders._
-    segs
-      .repartition(col("client"), col("port"))
-      .sortWithinPartitions(col("client"), col("port"),
-        col("ts"), col("fileTs"), col("order"))
-      .mapPartitions { it =>
-        var key: (String, Int) = null
-        var tracker: ConnTracker = null
-        it.flatMap { seg =>
-          val k = (seg.client, seg.port)
-          if (k != key) { key = k; tracker = new ConnTracker(seg.client, seg.port) }
-          tracker.push(seg)
-        }
-      }
+    segs.groupBy(col("client"), col("port")).as[(String, Int), KeyedSegment]
+      .flatMapSortedGroups(KeyedSegment.captureOrderCols: _*)((k, it) =>
+        new ConnTracker(k._1, k._2).run(it))
   }
 
   def records(spark: SparkSession, path: String,

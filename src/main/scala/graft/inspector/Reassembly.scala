@@ -40,6 +40,9 @@ final class FrameAssembler {
     */
   def bufferedBytes: Int = end - start
 
+  /** Bytes allocated for the buffer, consumed prefix included. */
+  private[inspector] def capacity: Int = buf.length
+
   def reset(): Unit = { buf = Array.emptyByteArray; start = 0; end = 0 }
 
   /** Buffer snapshot/restore for externalized state (streaming mode).
@@ -64,9 +67,14 @@ final class FrameAssembler {
         // compact in place (arraycopy is overlap-safe, dest < src)
         System.arraycopy(buf, start, buf, 0, live)
       } else {
-        // grow geometrically so repeated appends stay amortized O(1)
-        val grown = new Array[Byte](
-          math.max(live + n, math.max(64, buf.length * 2)))
+        // grow geometrically so repeated appends stay amortized O(1), but
+        // never past the pending frame once its length prefix is here: a
+        // frame just over a power of two would otherwise end in an array
+        // nearly twice its size
+        val doubled =
+          if (live >= 4) math.min(buf.length * 2L, 4L + int4(buf, start)).toInt
+          else math.max(64, buf.length * 2)
+        val grown = new Array[Byte](math.max(live + n, doubled))
         System.arraycopy(buf, start, grown, 0, live)
         buf = grown
       }

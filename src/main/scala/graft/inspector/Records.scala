@@ -1,6 +1,7 @@
 package graft.inspector
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.functions.col
 
 /** The inspector data model (reference: sink/db.clj:8-37 schema; SURVEY §3).
   *
@@ -124,6 +125,15 @@ final case class KeyedSegment(
     order: Long,
     seq: Long,
     payload: Array[Byte])
+
+object KeyedSegment {
+  /** Capture order within one connection, `(ts, fileTs, order)`: as an
+    * ordering for an in-memory group, and as the sort columns of a
+    * dataset.
+    */
+  val CaptureOrder: Ordering[KeyedSegment] = Ordering.by(s => (s.ts, s.fileTs, s.order))
+  def captureOrderCols: Seq[Column] = Seq(col("ts"), col("fileTs"), col("order"))
+}
 
 /** The pipeline's typed encoders, derived once. Deriving one reflects over
   * the type; through `import spark.implicits._` every call that built a

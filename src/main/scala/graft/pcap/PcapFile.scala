@@ -27,15 +27,15 @@ object PcapFile {
 
   /** Shared with [[Pcapng]] — one copy of the endian-sensitive read. */
   private[pcap] def u32(b: Array[Byte], off: Int, le: Boolean): Long = {
-    val (a0, a1, a2, a3) =
-      if (le) (b(off), b(off + 1), b(off + 2), b(off + 3))
-      else (b(off + 3), b(off + 2), b(off + 1), b(off))
-    ((a3 & 0xffL) << 24) | ((a2 & 0xffL) << 16) | ((a1 & 0xffL) << 8) | (a0 & 0xffL)
+    val v = ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
+      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
+    (if (le) Integer.reverseBytes(v) else v) & 0xffffffffL
   }
 
   /** Lazily iterates the records of one classic pcap stream: a 16-byte
-    * record header, then `inclLen` bytes. A truncated trailing record is
-    * dropped (a live capture can be cut mid-record).
+    * record header, read into one buffer per stream, then `inclLen` bytes.
+    * A truncated trailing record is dropped (a live capture can be cut
+    * mid-record).
     */
   def records(in: InputStream): Iterator[PcapRecord] = {
     val header = FileRecords.readFully(in, 24)
@@ -49,9 +49,10 @@ object PcapFile {
     val linkType = u32(header, 20, le).toInt
     if (linkType != LinkEthernet) return Iterator.empty
 
+    val h = new Array[Byte](16)
     def advance(): PcapRecord =
       try {
-        val h = FileRecords.readFully(in, 16)
+        FileRecords.readFully(in, h)
         val inclLen = u32(h, 8, le).toInt
         if (inclLen < 0) null
         else {

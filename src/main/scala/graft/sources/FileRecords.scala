@@ -110,21 +110,12 @@ object FileRecords {
     */
   def readFully(in: InputStream, n: Int): Array[Byte] = {
     val chunk = 1 << 20
-    def fill(buf: Array[Byte]): Array[Byte] = {
-      var off = 0
-      while (off < buf.length) {
-        val r = in.read(buf, off, buf.length - off)
-        if (r < 0) throw new EOFException
-        off += r
-      }
-      buf
-    }
-    if (n <= chunk) fill(new Array[Byte](n))
+    if (n <= chunk) readFully(in, new Array[Byte](n))
     else {
       val chunks = ArrayBuffer.empty[Array[Byte]]
       var remaining = n
       while (remaining > 0) {
-        chunks += fill(new Array[Byte](math.min(chunk, remaining)))
+        chunks += readFully(in, new Array[Byte](math.min(chunk, remaining)))
         remaining -= chunks.last.length
       }
       val out = new Array[Byte](n)
@@ -132,5 +123,18 @@ object FileRecords {
       chunks.foreach { b => System.arraycopy(b, 0, out, pos, b.length); pos += b.length }
       out
     }
+  }
+
+  /** Fills all of `buf` from `in`, or throws an EOFException; returns
+    * `buf`. For fixed-size headers read into one reused buffer.
+    */
+  def readFully(in: InputStream, buf: Array[Byte]): Array[Byte] = {
+    var off = 0
+    while (off < buf.length) {
+      val r = in.read(buf, off, buf.length - off)
+      if (r < 0) throw new EOFException
+      off += r
+    }
+    buf
   }
 }

@@ -14,17 +14,21 @@ import graft.sources.FileRecords
   * cap, core.clj:322-347).
   *
   * Spark form: segments keyed by connection → `flatMapGroupsWithState`
-  * holding one [[ConnSnapshot]] per connection. State hygiene runs per
-  * streaming trigger (batch applies none of it):
+  * holding one [[ConnSnapshot]] per connection; each trigger restores the
+  * connection, walks its segments with [[ConnTracker.run]] (the walk
+  * batch uses too) and snapshots it back. State hygiene:
   *   - with `withIdleTimeout`, a connection idle for 120 s (the
   *     reference's state-expiration-ms) is dropped via the group-state
   *     timeout;
-  *   - [[ConnTracker.trimState]] applies the per-connection bounds once
-  *     per trigger: entries older than 120 s relative to the newest
-  *     segment expire, reassembly buffers above 64 MiB are dropped (per-key
-  *     form of the reference's global 50%-heap cap — per-key is the bound
-  *     that exists in a distributed setting), and at most 10,000
-  *     correlation/scan entries are kept, oldest dropped first.
+  *   - [[ConnTracker.run]] applies the per-connection bounds after each
+  *     capture file, as batch does: entries older than 120 s relative to
+  *     the newest segment so far expire, reassembly buffers above 64 MiB
+  *     are dropped (per-key form of the reference's global 50%-heap cap —
+  *     per-key is the bound that exists in a distributed setting), and at
+  *     most 10,000 correlation/scan entries are kept, oldest dropped
+  *     first. When the directory's file mtimes follow capture order, the
+  *     records therefore equal batch's over the same files at every
+  *     `maxFilesPerTrigger`.
   *
   * Checkpoint compatibility: the state schema is one flat
   * `(version int, payload binary)` row ([[StateEnvelope]]). Builds that
@@ -77,7 +81,11 @@ object InspectorStream {
     FileRecords.read(files.load(path))((_, in) => Inspector.decodeFile(in, ports))
   }
 
-  /** readStream pcap dir → shaped records, end to end. */
+  /** readStream pcap dir → shaped records, end to end. The file source
+    * takes files oldest-modification-first, so when the files' mtimes
+    * follow capture order (tcpdump's rotate-and-`mv` does) the records
+    * equal [[Inspector.records]] over the same files.
+    */
   def recordsFromPcapDir(spark: SparkSession, path: String,
                          withIdleTimeout: Boolean = true,
                          maxFilesPerTrigger: Option[Int] = None,
@@ -187,8 +195,8 @@ chmod +x ${shq(rotate)} && tcpdump $tcpdump"""
     * ProcessingTime timeout (120 s idle → state dropped). Note the engine
     * then schedules extra timeout-check micro-batches between data
     * arrivals; deterministic tests pass `false` and rely on the
-    * event-ts-relative expiry of [[ConnTracker.trimState]], which runs
-    * either way.
+    * event-ts-relative expiry [[ConnTracker.run]] applies after each
+    * capture file, which runs either way.
     */
   def records(segments: Dataset[KeyedSegment],
               withIdleTimeout: Boolean = true): Dataset[RecordInfo] = {
@@ -212,10 +220,7 @@ chmod +x ${shq(rotate)} && tcpdump $tcpdump"""
           } else {
             val tracker = new ConnTracker(key._1, key._2)
             state.getOption.map(StateEnvelope.unwrap).foreach(tracker.restore)
-            val ordered = segs.toVector.sortBy(s => (s.ts, s.fileTs, s.order))
-            val out = ordered.flatMap(tracker.push)
-            // ordered by ts, so the last segment is the newest
-            ordered.lastOption.foreach(last => tracker.trimState(last.ts))
+            val out = tracker.run(segs.toVector.sorted(KeyedSegment.CaptureOrder).iterator).toVector
             state.update(StateEnvelope.wrap(tracker.snapshot))
             if (withIdleTimeout) state.setTimeoutDuration(ConnTracker.StateTimeoutMs)
             out.iterator

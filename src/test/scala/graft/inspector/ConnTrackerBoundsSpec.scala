@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.proto.ProtoWire.writer
 
-/** [[ConnTracker.trimState]], the per-trigger state bounds: each bound
-  * fires alone at its constant, and the connection keeps decoding after
-  * it fires.
+/** [[ConnTracker.trimState]], the state bounds applied after each capture
+  * file: each bound fires alone at its constant, and the connection keeps
+  * decoding after it fires. [[ConnTracker.run]] applies them at that
+  * cadence: once per `fileTs` change and once at the end of its input.
   */
 class ConnTrackerBoundsSpec extends AnyFunSuite {
   import ConnTracker.{MaxBufferBytes, MaxStateEntries, StateTimeoutMs}
@@ -30,6 +31,11 @@ class ConnTrackerBoundsSpec extends AnyFunSuite {
     writer.varint(1, callId.toLong), writer.varint(1, 1L).varint(2, scannerId))
   private def seg(ts: Long, inbound: Boolean, payload: Array[Byte]) =
     KeyedSegment("10.1.1.1", 50001, inbound, SyntheticTraffic.Server, ts, 0L, 0L, 0L, payload)
+  /** A segment of the capture file whose first record is at `fileTs`. */
+  private def fileSeg(fileTs: Long, ts: Long, inbound: Boolean, payload: Array[Byte]) =
+    seg(ts, inbound, payload).copy(fileTs = fileTs)
+  private def summary(recs: Seq[RecordInfo]): Seq[(Int, Boolean, String, Option[Long])] =
+    recs.map(r => (r.call_id, r.inbound, r.method, r.elapsed))
   private def openScanner(t: ConnTracker, ts: Long, callId: Int, scannerId: Long): Unit = {
     assert(t.push(seg(ts, inbound = true, openScanReq(callId))).nonEmpty)
     assert(t.push(seg(ts, inbound = false, openScanRes(callId, scannerId))).nonEmpty)
@@ -134,5 +140,69 @@ class ConnTrackerBoundsSpec extends AnyFunSuite {
     // only scanners opened in the trailing 120 s survive (~121), never all
     assert(maxScanners <= 122, s"scanner state grew to $maxScanners")
     assert(snap.get.scan.scanners.size <= 122)
+  }
+
+  // --- the cadence of ConnTracker.run ------------------------------------
+
+  test("run: no trim between the segments of one file, one at the end of input") {
+    val t = new ConnTracker("10.1.1.1", 50001)
+    val out = t.run(Iterator(
+      fileSeg(T0, T0, inbound = true, getReq(1)),
+      fileSeg(T0, T0 + 121000L, inbound = true, getReq(2)),
+      fileSeg(T0, T0 + 122000L, inbound = false, headerRes(1)),
+      fileSeg(T0, T0 + 122000L, inbound = true, getReq(3))))
+    // mid-file, call 1 is 121 s older than call 2 but not trimmed
+    assert(summary(Seq(out.next(), out.next())) === Seq((1, true, "get", None), (2, true, "get", None)))
+    assert(t.pendingCalls === 2)
+    assert(summary(Seq(out.next())) === Seq((1, false, "get", Some(122000L))))
+    assert(summary(out.toSeq) === Seq((3, true, "get", None)))
+    // the end of input trims: calls 2 and 3 are within 120 s of the newest
+    assert(t.pendingCalls === 2)
+
+    val u = new ConnTracker("10.1.1.1", 50001)
+    u.run(Iterator(
+      fileSeg(T0, T0, inbound = true, getReq(1)),
+      fileSeg(T0, T0 + 121000L, inbound = true, getReq(2)))).foreach(_ => ())
+    // call 1 expires at the end-of-input trim, with no file change
+    assert(u.pendingCalls === 1)
+    assert(u.snapshot.pending.keySet === Set(2))
+  }
+
+  test("run: one trim per fileTs change, with the newest ts pushed so far") {
+    val t = new ConnTracker("10.1.1.1", 50001)
+    val fileB = T0 + 130000L
+    val fileC = T0 + 230000L
+    val out = t.run(Iterator(
+      fileSeg(T0, T0, inbound = true, getReq(1)),
+      fileSeg(T0, T0 + 100000L, inbound = true, getReq(2)),
+      // the trim at this change uses T0 + 100 s, not this segment's ts:
+      // call 1 survives and matches 130 s after its request
+      fileSeg(fileB, fileB, inbound = false, headerRes(1)),
+      fileSeg(fileB, T0 + 221000L, inbound = true, getReq(3)),
+      // the next change trims again, at T0 + 221 s: call 2 has expired
+      fileSeg(fileC, fileC, inbound = false, headerRes(2)),
+      fileSeg(fileC, fileC + 1, inbound = false, headerRes(3)))).toSeq
+    assert(summary(out) === Seq(
+      (1, true, "get", None), (2, true, "get", None),
+      (1, false, "get", Some(130000L)), (3, true, "get", None),
+      (2, false, "unknown", None), (3, false, "get", Some(9001L))))
+  }
+
+  test("run: a response 126 s after its request, with a request at +125 s in an earlier file, is unmatched") {
+    val t = new ConnTracker("10.1.1.1", 50001)
+    val out = t.run(Iterator(
+      fileSeg(T0, T0, inbound = true, getReq(1)),
+      fileSeg(T0 + 125000L, T0 + 125000L, inbound = true, getReq(2)),
+      fileSeg(T0 + 126000L, T0 + 126000L, inbound = false, headerRes(1)))).toSeq
+    assert(summary(out).last === ((1, false, "unknown", None)))
+  }
+
+  test("run: a response 119 s after its request, across files, still matches") {
+    val t = new ConnTracker("10.1.1.1", 50001)
+    val out = t.run(Iterator(
+      fileSeg(T0, T0, inbound = true, getReq(1)),
+      fileSeg(T0 + 118000L, T0 + 118000L, inbound = true, getReq(2)),
+      fileSeg(T0 + 119000L, T0 + 119000L, inbound = false, headerRes(1)))).toSeq
+    assert(summary(out).last === ((1, false, "get", Some(119000L))))
   }
 }

@@ -110,4 +110,25 @@ class ReassemblySpec extends AnyFunSuite {
     assert(a.bufferedBytes === 0)
     assert(sec < 5.0, f"quadratic reassembly suspected: $sec%.1f s for 32 MiB")
   }
+
+  test("buffer growth stops at the pending frame's declared size") {
+    // a 3 MiB + 1 B body in 1,448-byte segments: plain doubling from the
+    // first segment would end in a 5.66 MiB array; once the length prefix
+    // is buffered, growth is capped at the declared frame
+    val n = 3 * 1024 * 1024 + 1
+    val mss = 1448
+    val full = frame(body(n, 6))
+    val a = new FrameAssembler
+    var out = Vector.empty[Array[Byte]]
+    var maxCapacity = 0
+    var pos = 0
+    while (pos < full.length) {
+      val next = math.min(pos + mss, full.length)
+      out = a.push(java.util.Arrays.copyOfRange(full, pos, next))
+      maxCapacity = math.max(maxCapacity, a.capacity)
+      pos = next
+    }
+    assert(out.map(_.length) === Vector(n))
+    assert(maxCapacity <= n + 4 + mss, s"buffer grew to $maxCapacity bytes")
+  }
 }

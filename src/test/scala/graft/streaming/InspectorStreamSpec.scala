@@ -67,6 +67,95 @@ class InspectorStreamSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("rotated capture in mtime order: batch records equal streaming at every maxFilesPerTrigger") {
+    // A's request at +125 s sits in an intermediate file, so after that
+    // file its call at 0 s has expired and the response at +126 s goes
+    // unmatched; B's response 119 s after its request still matches; C
+    // leaks a scanner that expires before its late next-rows; D's request
+    // frame is split across two files
+    val s = spark
+    import java.nio.file.{Files, Path}
+    import java.nio.file.attribute.FileTime
+    import java.nio.charset.StandardCharsets.UTF_8
+    import graft.inspector.RecordInfo
+    import graft.pcap.{LinkDecode, PcapFile}
+    import graft.proto.ProtoWire.{writer, Writer}
+    def frame(parts: Writer*): Array[Byte] = {
+      val body = parts.toArray.flatMap(_.toDelimitedBytes)
+      Array[Byte]((body.length >>> 24).toByte, (body.length >>> 16).toByte,
+        (body.length >>> 8).toByte, body.length.toByte) ++ body
+    }
+    def getReq(callId: Int, row: String): Array[Byte] = frame(
+      writer.varint(1, callId.toLong).string(3, "Get").bool(4, true),
+      writer.msg(1, writer.varint(1, 1L)
+          .bytes(2, SyntheticTraffic.regionName("trot").getBytes(UTF_8)))
+        .msg(2, writer.bytes(1, row.getBytes(UTF_8))))
+    def res(callId: Int): Array[Byte] = frame(writer.varint(1, callId.toLong))
+    val openScanReq = frame(
+      writer.varint(1, 30L).string(3, "Scan").bool(4, true),
+      writer.msg(1, writer.varint(1, 1L)
+          .bytes(2, SyntheticTraffic.regionName("tleak").getBytes(UTF_8)))
+        .msg(2, writer.bytes(3, "a".getBytes(UTF_8)).varint(17, 100L)))
+    val openScanRes = frame(writer.varint(1, 30L), writer.varint(1, 1L).varint(2, 7007L))
+    val nextRows = frame(writer.varint(1, 33L).string(3, "Scan").bool(4, true),
+      writer.varint(3, 7007L).varint(4, 10L))
+    val (splitA, splitB) = getReq(40, "d" * 400).splitAt(200)
+    val T0 = 1700000000000L
+    // (ts offset ms, client, inbound, payload), one Seq per capture file
+    val files: Seq[Seq[(Long, String, Boolean, Array[Byte])]] = Seq(
+      Seq((0L, "10.8.8.1", true, getReq(1, "a1")), (1000L, "10.8.8.2", true, getReq(5, "b5")),
+        (2000L, "10.8.8.3", true, openScanReq), (2005L, "10.8.8.3", false, openScanRes)),
+      Seq((60000L, "10.8.8.2", true, getReq(6, "b6")), (100000L, "10.8.8.4", true, splitA)),
+      Seq((100001L, "10.8.8.4", true, splitB), (120000L, "10.8.8.2", false, res(5)),
+        (125000L, "10.8.8.1", true, getReq(2, "a2"))),
+      Seq((126000L, "10.8.8.1", false, res(1)), (130000L, "10.8.8.3", true, getReq(31, "c")),
+        (130000L, "10.8.8.2", false, res(6)), (131000L, "10.8.8.4", false, res(40))),
+      Seq((200000L, "10.8.8.3", true, nextRows), (200000L, "10.8.8.1", false, res(2))))
+    val dir = Files.createTempDirectory("graft_rotation_parity")
+    val mtime0 = System.currentTimeMillis() - 60000L
+    files.zipWithIndex.foreach { case (recs, i) =>
+      val w = new PcapFile.Writer
+      recs.foreach { case (dt, client, inbound, payload) =>
+        val eth =
+          if (inbound) LinkDecode.encode(client, 42000, SyntheticTraffic.Server, 16020, payload)
+          else LinkDecode.encode(SyntheticTraffic.Server, 16020, client, 42000, payload)
+        w.record((T0 + dt) * 1000L, eth)
+      }
+      val f: Path = dir.resolve(f"rot-$i%02d.pcap")
+      Files.write(f, w.toBytes)
+      Files.setLastModifiedTime(f, FileTime.fromMillis(mtime0 + i * 1000L))
+    }
+    def ordered(rs: Seq[RecordInfo]): Seq[RecordInfo] =
+      rs.sortBy(r => (r.client, r.ts, r.inbound, r.call_id))
+
+    val batch = ordered(Inspector.records(s, dir.toString).collect().toSeq)
+    def find(client: String, inbound: Boolean, callId: Int): RecordInfo =
+      batch.find(r => r.client == client && r.inbound == inbound && r.call_id == callId).get
+    assert(batch.size === 14)
+    assert((find("10.8.8.1", false, 1).method, find("10.8.8.1", false, 1).elapsed) === (("unknown", None)))
+    assert(find("10.8.8.1", false, 2).elapsed === Some(75000L))
+    assert(find("10.8.8.2", false, 5).elapsed === Some(119000L))
+    assert(find("10.8.8.2", false, 6).elapsed === Some(70000L))
+    assert(find("10.8.8.3", true, 33).table === None) // the leaked scanner expired
+    assert(find("10.8.8.4", true, 40).row === Some("d" * 400))
+    assert(find("10.8.8.4", false, 40).elapsed === Some(30999L)) // from the completing half
+
+    for (perTrigger <- Seq(Some(1), Some(2), None)) {
+      val name = s"rotation_parity_${perTrigger.getOrElse(0)}"
+      val query = InspectorStream
+        .recordsFromPcapDir(s, dir.toString, withIdleTimeout = false,
+          maxFilesPerTrigger = perTrigger)
+        .writeStream.format("memory").queryName(name)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      assert(query.awaitTermination(120000), "AvailableNow replay must terminate")
+      import graft.inspector.RecordEncoders._
+      val streamed = ordered(s.table(name).as[RecordInfo].collect().toSeq)
+      assert(streamed === batch, s"maxFilesPerTrigger = $perTrigger")
+    }
+  }
+
   test("pcap-dir file source: rotated files processed incrementally, state crosses files") {
     val s = spark
     import java.nio.file.{Files, Paths}
