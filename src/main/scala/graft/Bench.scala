@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main. Prints ONE JSON line to stdout (the driver contract) and
   * also writes it to BENCH_LOCAL.json in the cwd as a belt-and-braces copy —
   * rounds 1/2 produced `"parsed": null` because sbt's logger prefixed the
@@ -36,12 +34,16 @@ import org.apache.spark.sql.SparkSession
   *
   * Noise robustness (r11 → r12): a first rep exceeding 2× its committed
   * evidence floor triggers a median-of-3 rerun of just that query (see
-  * [[needsRetry]]); `SPARK_GRAFT_REPS=N` runs every selected query N
-  * times in one session for adjudication. Per-rep detail lands in
-  * `BENCH_REPS.json`; the stdout contract stays one JSON line with the
-  * per-query MEDIAN. Interleaved A/Bs of a query against a superseded
-  * spelling, formatted and final adaptive plans go through the dev probe
-  * `graft.Probe` in the test sourceset (`sbt "Test/runMain graft.Probe"`).
+  * [[needsRetry]]). Per-rep detail lands in `BENCH_REPS.json`; the
+  * stdout contract stays one JSON line with the per-query MEDIAN.
+  *
+  * Settings: Bench reads only its deployment settings —
+  * `SPARK_GRAFT_SF_DIR` (corpus), `SPARK_GRAFT_CPUS` (session cores,
+  * default 32) and `SPARK_GRAFT_SCALE` — and always runs the full sweep.
+  * Re-timing named queries in one session, interleaved A/Bs of a query
+  * against a superseded spelling, formatted and final adaptive plans go
+  * through the dev probe `graft.Probe` in the test sourceset
+  * (`sbt "Test/runMain graft.Probe ab|plan|final|dup ..."`).
   *
   * Standing scale evidence (r16 → r17): `python3 tools/scale_gate.py`
   * reruns the full oracled 10x gate on demand, and
@@ -65,22 +67,13 @@ object Bench {
       "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
     catch { case _: Throwable => () }
 
-  /** Unique qNN prefix of a query name ("q66_semdedup" → "q66"). Shared
-    * by the JSON renderer and the SPARK_GRAFT_ONLY matcher so the two
-    * agree on what a short name means.
+  /** Unique qNN prefix of a query name ("q66_semdedup" → "q66"): the
+    * stdout JSON key and the floor-map key.
     */
   def short(k: String): String = {
     val cut = k.indexOf('_')
     if (cut > 0) k.substring(0, cut) else k
   }
-
-  /** SPARK_GRAFT_ONLY membership: a token selects a query by its full
-    * name or by EXACT equality with its qNN short name — `q4` selects
-    * nothing rather than silently matching q40-q49 (round-8 advice).
-    * None = no filter.
-    */
-  private[graft] def selected(only: Option[Set[String]], name: String): Boolean =
-    only.forall(s => s.contains(name) || s.contains(short(name)))
 
   /** LOWER median: for odd counts the true median, for even counts the
     * lower middle (not the average of the middle two — round-12 advice:
@@ -185,9 +178,8 @@ object Bench {
     * triggers a median-of-3 (one external steal/JIT burst can no longer
     * put a green plan over the 2x grading bar — the r11 q45/q96 false
     * alarms; a REAL plan cost repeats in all three reps and still
-    * reports over the bar). Retries need a full run (`only` empty — an
-    * isolation run charges session/codegen init to its one query) with
-    * floors applicable and no explicit REPS override.
+    * reports over the bar). Retries and deferrals need `floorsApply`
+    * (an evidence corpus): a floor is evidence about one corpus only.
     *
     * Deferral rationale (round-12 verdict #1): the r12 gate proved an
     * in-place median-of-3 cannot escape a contention burst that
@@ -211,7 +203,7 @@ object Bench {
   private[graft] def runSweep(
       names: Seq[String],
       rep: (String, String) => (Double, String),
-      only: Option[Set[String]], reps: Int, floorsApply: Boolean,
+      floorsApply: Boolean,
       floors: Map[String, Double] = expected,
       pauseBeforeDeferred: String => Unit = _ => (),
       now: () => Long = System.nanoTime,
@@ -221,12 +213,10 @@ object Bench {
     val repsDetail =
       scala.collection.mutable.LinkedHashMap[String, Seq[(Double, String)]]()
     val endedAt = scala.collection.mutable.Map[String, Long]()
-    val sweep = names.sorted.filter(selected(only, _)).map { name =>
+    val sweep = names.sorted.map { name =>
       val first = rep(name, "")
       val all: Seq[(Double, String)] =
-        if (reps > 1) first +: (2 to reps).map(i => rep(name, s" rep$i"))
-        else if (only.isEmpty && floorsApply && first._2 == "ok" &&
-            needsRetry(name, first._1, floors)) {
+        if (floorsApply && first._2 == "ok" && needsRetry(name, first._1, floors)) {
           System.err.println(f"[bench] $name ${first._1}%.2fs > 2x floor " +
             f"${floors(short(name))}%.2fs - median-of-3 rerun")
           first +: (2 to 3).map(i => rep(name, s" rep$i"))
@@ -238,7 +228,7 @@ object Bench {
     }
     // `sweep` is a strict Seq, so every in-sweep rep has run before the
     // first deferred rerun fires — the requeue really is end-of-sweep
-    val results = if (reps > 1 || only.isDefined || !floorsApply) sweep
+    val results = if (!floorsApply) sweep
     else sweep.map { case r @ (name, sec, status) =>
       if (needsDeferral(repsDetail.contains(name), name, sec, status, floors)) {
         val why = if (status == "ok") f"in-sweep median $sec%.2fs still > 2x floor"
@@ -346,7 +336,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val requestedSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // stdout is the bench contract: exactly one JSON line. Everything else
     // — log4j (routed to stderr by log4j2.properties, but belt-and-braces
     // against a foreign config winning the classpath race), third-party
@@ -368,23 +357,7 @@ object Bench {
         s"foreign JVM/sbt process(es) live (pids ${foreignAtStart.mkString(",")})" +
         " - timings may be contaminated; bench-measurement discipline says" +
         " no concurrent JVMs during gate runs")
-    // Scan-stage split size (A/B knob, round 14): hypothesis was that
-    // Spark's 128 MB default leaves cores idle on the few-hundred-MB
-    // grading corpus. MEASURED WRONG same round (3-rep A/B, one quiet
-    // window, 8 MB vs default on q03/q31/q37/q39/q58/q65/q75/q95):
-    // finer splits were a wash to 13% SLOWER — the default already
-    // byte-range-splits large files, and 2x100 MB columnar scans are
-    // not the bottleneck while finer tasks add scheduling/open cost.
-    // Default stays Spark's; the knob remains for future A/Bs.
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    val spark = Sessions.tune(
-      if (maxPart.nonEmpty) b0.config("spark.sql.files.maxPartitionBytes", maxPart)
-      else b0)
-      .getOrCreate()
+    val spark = Sessions.local(defaultCpus = 32)
     spark.sparkContext.setLogLevel("WARN")
     quietRddWarnings()
 
@@ -442,76 +415,44 @@ object Bench {
       System.err.println(s"[bench] fixture pre-write failed: $e")
     }
 
-    // SPARK_GRAFT_ONLY=q48,q59 runs the named queries (qNN token or full
-    // name) in isolation — the knob for attributing interleaving effects
-    // (GC/codegen-cache pressure from neighbors) vs real plan changes.
-    // Tokens match the underscore-cut prefix EXACTLY: a raw startsWith
-    // would let "q4" silently select q40-q49 and corrupt the very
-    // attribution runs the knob exists for (round-8 advice).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty) // SPARK_GRAFT_ONLY= (empty) means "no filter"
-    // SPARK_GRAFT_REPS=N runs every selected query N times in THIS one
-    // session (per-rep telemetry lines, per-rep detail in
-    // BENCH_REPS.json, median reported) — the adjudication knob for
-    // shared-VM noise vs real plan cost: a real plan regression repeats
-    // in every rep; a steal/JIT burst hits one.
-    val reps = sys.env.get("SPARK_GRAFT_REPS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1)
-      .getOrElse(1)
     // Floors are per-corpus evidence: `expected` holds sf0.1 gate
     // minima, `expectedScaled` holds 10x-corpus minima — comparing a
     // run against the other scale's numbers would arm the >3x guard
     // and the median-of-3 retry with evidence about a different corpus
     // (the first 10x scale-gate bench burned 58 pointless reruns on
     // exactly this). The basename checks are heuristics, so they are
-    // overridable (SPARK_GRAFT_FLOORS=on|off) and LOUD when they
-    // disarm the guard — a renamed copy of an evidence corpus must not
-    // silently lose regression coverage.
+    // LOUD when they disarm the guard — a renamed copy of an evidence
+    // corpus must not silently lose regression coverage.
     // keyed off the corpus that actually RUNS (round-14 review): a
     // direct SPARK_GRAFT_SF_DIR=<scaled dir> run must grade against
-    // the scaled block too — keying off the upgrade path alone would
-    // arm sf0.1 minima against 10x timings under SPARK_GRAFT_FLOORS=on
-    // (the mass-rerun failure the per-corpus split exists to prevent)
+    // the scaled block too, not only a run that upgraded to it
     val corpusBase = new java.io.File(sfDir).getName
     val scaledCorpus = scaledFrom.isDefined ||
       corpusBase == new java.io.File(ScaleCorpus.defaultDir).getName
     val floors = if (scaledCorpus) expectedScaled else expected
-    val floorsApply = sys.env.get("SPARK_GRAFT_FLOORS") match {
-      case Some("on") => true
-      case Some("off") => false
-      case _ => (scaledCorpus && floors.nonEmpty) ||
-        (!scaledCorpus && corpusBase == "sf0.1")
-    }
+    val floorsApply = (scaledCorpus && floors.nonEmpty) ||
+      (!scaledCorpus && corpusBase == "sf0.1")
     if (!floorsApply)
       System.err.println(s"[bench] floors INACTIVE for $sfDir (not an " +
-        "evidence corpus; SPARK_GRAFT_FLOORS=on to force): no >3x " +
+        "evidence corpus: sf0.1 or the derived 10x corpus): no >3x " +
         "guard, no median-of-3 retry")
 
     // Quiet-window start gate (round-13 verdict item #2): sample steal
     // over a 10 s window; while contended, back off 30 s and resample,
     // at most 3 times (~2 min worst case), then proceed LOUDLY with
-    // contended_start=true in the health preamble. Full sweeps only by
-    // default (an isolation run is a dev loop; SPARK_GRAFT_QUIET=on|off
-    // overrides). The sampling threshold is 100 ms per 10 s window —
-    // an order of magnitude above the measured quiet host (~10 ms/30 s)
-    // and below the measured contended one (~1000 ms/30 s).
-    val quietGate = sys.env.get("SPARK_GRAFT_QUIET") match {
-      case Some("off") => false
-      case Some("on")  => true
-      case _           => only.isEmpty
-    }
+    // contended_start=true in the health preamble. The sampling
+    // threshold is 100 ms per 10 s window — an order of magnitude above
+    // the measured quiet host (~10 ms/30 s) and below the measured
+    // contended one (~1000 ms/30 s).
     val preT0 = System.nanoTime()
-    val (_, contendedStart) =
-      if (!quietGate) (0, false)
-      else quietStart(
-        stealWindowMs = () => {
-          val s0 = JvmTelemetry.snapshot().stealJiffies
-          Thread.sleep(10000)
-          (JvmTelemetry.snapshot().stealJiffies - s0) * JvmTelemetry.msPerJiffy
-        },
-        sleep = () => Thread.sleep(30000),
-        maxWaits = 3, thresholdMs = 100L)
+    val (_, contendedStart) = quietStart(
+      stealWindowMs = () => {
+        val s0 = JvmTelemetry.snapshot().stealJiffies
+        Thread.sleep(10000)
+        (JvmTelemetry.snapshot().stealJiffies - s0) * JvmTelemetry.msPerJiffy
+      },
+      sleep = () => Thread.sleep(30000),
+      maxWaits = 3, thresholdMs = 100L)
     val startWaitMs = (System.nanoTime() - preT0) / 1000000L
     if (contendedStart)
       System.err.println("[bench] PREFLIGHT: retries exhausted, host still " +
@@ -538,13 +479,7 @@ object Bench {
         }
       val sec = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[bench] $name done $sec%.2fs ${JvmTelemetry.delta(jvm0)}")
-      try {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] post-$name cleanup failed: $e")
-      }
+      Sessions.dropPersisted(spark, name)
       (sec, status)
     }
 
@@ -560,14 +495,14 @@ object Bench {
         runOnce(s"$name$tag",
           () => fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       },
-      only, reps, floorsApply, floors,
+      floorsApply, floors,
       pauseBeforeDeferred = n => {
         System.err.println(s"[bench] $n deferred rerun would start <30s " +
           "after its own reps (no natural end-of-sweep gap) - pausing 30s")
         Thread.sleep(30000)
       })
-    // per-rep detail artifact (multi-rep adjudication runs + any
-    // median-of-3 retriggers): never on stdout — the driver contract
+    // per-rep detail artifact (median-of-3 retries and deferred
+    // reruns): never on stdout — the driver contract
     // stays one JSON line. A failed rep records as a negative time so
     // the artifact keeps per-rep status (a -0.8 rep is a failure at
     // 0.8 s, distinguishable from a fast success).
@@ -585,12 +520,9 @@ object Bench {
     // Regression guard: compare each time to the committed per-query
     // baseline and SAY SO when one blows past it — round 8 shipped docs
     // claiming 49.4 s while the gate recorded 77.9 s with one query 12×
-    // over, and nothing in the output flagged it. Full runs only: an
-    // isolation run (SPARK_GRAFT_ONLY) charges session/codegen init to
-    // its one query, which reads as a 3× blow-through of a full-run
-    // baseline and would false-flag the very attribution runs the knob
-    // exists for.
-    val slow = if (only.isDefined || !floorsApply) Nil else results.collect {
+    // over, and nothing in the output flagged it. Evidence corpora only:
+    // a floor says nothing about another corpus's times.
+    val slow = if (!floorsApply) Nil else results.collect {
       case (name, sec, "ok")
         if floors.get(short(name)).exists(e => sec > 3 * e && sec - e > 1.5) =>
         System.err.println(

@@ -44,12 +44,18 @@ import graft.streaming.{InspectorStream, StreamingOps}
   * preamble fields as Bench (steal/jit deltas over the measured
   * region) so a contended run is self-describing.
   *
-  * Scale knobs (env): SPARK_GRAFT_SF_DIR (documents corpus; default the
-  * 10x gate corpus, falling back to sf0.1 with a notice),
-  * SPARK_GRAFT_STREAM_CONNS/CALLS/FILES (pcap volume; defaults
-  * 256/200/16 ≈ 870k messages over 16 rotated files).
+  * Settings (env): SPARK_GRAFT_CPUS (session cores, default 32) and
+  * SPARK_GRAFT_SF_DIR (documents corpus; default the 10x gate corpus,
+  * falling back to sf0.1 with a notice). The pcap volume is fixed:
+  * [[PcapConns]] x [[PcapCalls]] over [[PcapFiles]] rotated files, about
+  * 870k messages.
   */
 object StreamBench {
+
+  /** Leg 1's synthetic capture: connections, calls per connection, files. */
+  final val PcapConns = 256
+  final val PcapCalls = 200
+  final val PcapFiles = 16
 
   final case class Leg(name: String, rowsIn: Long, rowsOut: Long,
       sec: Double, stateRowsPeak: Long, stateMbPeak: Double) {
@@ -85,10 +91,6 @@ object StreamBench {
     Files.createTempDirectory(s"graft_stream_ck_$tag").toString
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val conns = sys.env.get("SPARK_GRAFT_STREAM_CONNS").map(_.toInt).getOrElse(256)
-    val calls = sys.env.get("SPARK_GRAFT_STREAM_CALLS").map(_.toInt).getOrElse(200)
-    val files = sys.env.get("SPARK_GRAFT_STREAM_FILES").map(_.toInt).getOrElse(16)
     val sfDir = {
       val want = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1d")
       if (Files.exists(Paths.get(want, "documents.parquet"))) want
@@ -99,11 +101,7 @@ object StreamBench {
       }
     }
 
-    val spark = Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Sessions.local(defaultCpus = 32)
     spark.sparkContext.setLogLevel("WARN")
     Bench.quietRddWarnings()
 
@@ -113,7 +111,7 @@ object StreamBench {
     val t0 = System.nanoTime()
 
     // ---- leg 1: streaming packet pipeline over rotated pcap ----
-    val (pcapDir, nReq, nRes) = SyntheticTraffic.bulkPcapDir(conns, calls, files)
+    val (pcapDir, nReq, nRes) = SyntheticTraffic.bulkPcapDir(PcapConns, PcapCalls, PcapFiles)
     try {
       val msgs = nReq + nRes
       val (out, sec, stRows, stMb) = timeQuery(spark, "graft_stream_inspector") {
@@ -222,7 +220,7 @@ object StreamBench {
       jitMs = jvm1.jitMs - jvm0.jitMs,
       foreignJvms = (foreignAtStart ++ Bench.liveForeignJvms()).distinct.length)
     val json =
-      f"""{"metric":"stream_total","value":$total%.3f,"unit":"sec","streams":{${legs.map(_.json).mkString(",")}},${health.json},"pcap":{"conns":$conns,"calls":$calls,"files":$files},"sf":"$sfDir"}"""
+      f"""{"metric":"stream_total","value":$total%.3f,"unit":"sec","streams":{${legs.map(_.json).mkString(",")}},${health.json},"pcap":{"conns":$PcapConns,"calls":$PcapCalls,"files":$PcapFiles},"sf":"$sfDir"}"""
     try Files.writeString(Paths.get("BENCH_STREAM.json"), json)
     catch { case _: Throwable => () }
     try spark.stop() catch { case _: Throwable => () }

@@ -50,4 +50,32 @@ object Sessions {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
+
+  /** The session Bench, Verify, StreamBench and the `Probe` dev tool run
+    * in: `local[cpus]` with `cpus` from `SPARK_GRAFT_CPUS` (else
+    * `defaultCpus`), one shuffle partition per core, no UI, [[tune]]d.
+    */
+  def local(defaultCpus: Int): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus.toString)
+    tune(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false"))
+      .getOrCreate()
+  }
+
+  /** The per-query block sweep of Bench and Verify: unpersists every
+    * persisted RDD (the `localCheckpoint` blocks of
+    * [[graft.ops.Materialize]] consumers) and clears the plan cache, so
+    * no query's blocks pressure the block manager for the rest of the
+    * run (Bench class doc). A failure is reported on stderr, not thrown.
+    */
+  def dropPersisted(spark: SparkSession, after: String): Unit =
+    try {
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(_.unpersist(blocking = false))
+      spark.catalog.clearCache()
+    } catch { case e: Throwable =>
+      System.err.println(s"[graft] post-$after cleanup failed: $e")
+    }
 }

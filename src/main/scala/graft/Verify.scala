@@ -1,17 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: every SparkEntry.queries result → parquet,
+  * plus oracle_sql.json, for the driver's DuckDB compare. Its one setting
+  * is the session's core count, `SPARK_GRAFT_CPUS` (default 4). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Sessions.local(defaultCpus = 4)
     spark.sparkContext.setLogLevel("WARN")
     Bench.quietRddWarnings() // the per-query sweep's unpersist warnings
     new java.io.File(outDir).mkdirs()
@@ -24,14 +19,7 @@ object Verify {
     catch { case e: Throwable =>
       System.err.println(s"[verify] fixture pre-write failed: ${e.getMessage}")
     }
-    // Dev-only iteration aid: GRAFT_VERIFY_ONLY=q115_source_dup_matrix,...
-    // limits the dump to the named queries. The driver never sets it —
-    // default behavior (all queries) is unchanged.
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val status = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val status = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -39,17 +27,7 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         name -> s"fail: ${e.getClass.getSimpleName}"
-      } finally {
-        // per-query sweep of persisted blocks (localCheckpoint/cache):
-        // queries share no cached state, and letting blocks accumulate
-        // across 80+ queries pressures the block manager for the whole
-        // tail of the run (Bench class doc)
-        try {
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          spark.catalog.clearCache()
-        } catch { case _: Throwable => () }
-      }
+      } finally Sessions.dropPersisted(spark, name) // queries share no blocks
     }
     // corpus-keyed fixture oracles (q31/q32/q34/q36/q41/q42/q43/q51/
     // q58/q60/q66/q77/q78/q82/q84/q94/q105): derived and

@@ -54,7 +54,7 @@ final class ConnTracker(client: String, port: Int) {
     *      more than [[MaxBufferBytes]] (the per-key form of reference
     *      trim-state-by-memory, core.clj:322-347); the next segment
     *      re-syncs via the valid-length heuristic;
-    *   3. entry cap: the OLDEST entries across all three maps are dropped
+    *   3. entry cap: the OLDEST entries across both maps are dropped
     *      until at most [[MaxStateEntries]] remain, a bound that fires even
     *      when nothing is old enough to expire.
     * Returns the number of entries dropped by 1 and 3.
@@ -70,12 +70,10 @@ final class ConnTracker(client: String, port: Int) {
       // (ts, kind, key) oldest-first; kind names the map to remove from
       val all =
         pending.iterator.map { case (id, (_, ts)) => (ts, 0, id.toLong) } ++
-          scan.pendingOpen.iterator.map { case (id, e) => (e.ts, 1, id.toLong) } ++
-          scan.scanners.iterator.map { case (id, e) => (e.ts, 2, id) }
+          scan.scanners.iterator.map { case (id, e) => (e.ts, 1, id) }
       all.toSeq.sorted.take(excess).foreach {
         case (_, 0, id) => pending -= id.toInt
-        case (_, 1, id) => scan = scan.copy(pendingOpen = scan.pendingOpen - id.toInt)
-        case (_, _, id) => scan = scan.copy(scanners = scan.scanners - id)
+        case (_, _, id) => scan = ScanState.State(scan.scanners - id)
       }
     }
     before - stateEntries

@@ -67,9 +67,10 @@ object ConnSnapshot {
   /** Streaming-state format version. History: 1 = round 3 layout;
     * 2 = round 4 (ts added to Open/ScannerEntry) + the envelope itself;
     * 3 = the tracker's own maps and `ScanState.State` in place of the
-    * per-entry case classes.
+    * per-entry case classes; 4 = `ScanState.State` without its pending
+    * open-scanner map (the correlation map already holds those requests).
     */
-  val Version = 3
+  val Version = 4
 }
 
 /** Stable serialization envelope for the streaming state: an int version

@@ -5,14 +5,16 @@ import graft.proto.HbaseRpc.RpcInfo
 /** Scan-lifecycle state machine, pure (reference: core.clj:102-139
   * process-scan-state). Per client connection:
   *
-  *   1. open-scanner / small-scan REQUEST remembered by call-id;
-  *   2. open-scanner RESPONSE maps the server-assigned scanner-id to that
-  *      request's (table, region);
-  *   3. next-rows (either direction) inherits (table, region) from the
+  *   1. open-scanner RESPONSE maps the server-assigned scanner-id to its
+  *      request's (table, region), which the response already carries:
+  *      [[graft.proto.HbaseRpc.parseResponse]] copies them from the
+  *      request the tracker's call-id correlation holds;
+  *   2. next-rows (either direction) inherits (table, region) from the
   *      scanner-id entry;
-  *   4. close-scanner REQUEST inherits and discards the entry;
-  *   5. small-scan RESPONSE discards the pending-open entry (open+close in
-  *      one round trip — no scanner-id is ever published).
+  *   3. close-scanner REQUEST inherits and discards the entry.
+  *
+  * A small-scan (open+close in one round trip) publishes no scanner-id
+  * and leaves no state.
   *
   * Every entry is timestamped so state hygiene can expire it (reference
   * trim-state-expired, core.clj:285-297, expires ALL state objects, not
@@ -27,48 +29,35 @@ object ScanState {
   /** A state entry: region info + last-touched capture ts (millis). */
   final case class Entry(info: RegionInfo, ts: Long)
 
-  final case class State(
-      pendingOpen: Map[Int, Entry],
-      scanners: Map[Long, Entry]) {
-    def bufferedEntries: Int = pendingOpen.size + scanners.size
+  final case class State(scanners: Map[Long, Entry]) {
+    def bufferedEntries: Int = scanners.size
   }
 
-  val empty: State = State(Map.empty, Map.empty)
+  val empty: State = State(Map.empty)
 
   /** One transition; returns the next state and the (possibly augmented)
     * record. `ts` stamps touched entries (capture time of the segment).
     */
   def step(st: State, info: RpcInfo, inbound: Boolean, ts: Long): (State, RpcInfo) =
     (info.method, inbound) match {
-      case ("open-scanner" | "small-scan", true) =>
-        (st.copy(pendingOpen = st.pendingOpen
-          .updated(info.callId, Entry(RegionInfo(info.table, info.region), ts))), info)
-
       case ("open-scanner", false) =>
-        val next = (st.pendingOpen.get(info.callId), info.scanner) match {
-          case (Some(e), Some(id)) =>
-            State(st.pendingOpen - info.callId,
-              st.scanners.updated(id, e.copy(ts = ts)))
-          case _ => st.copy(pendingOpen = st.pendingOpen - info.callId)
-        }
+        val next = info.scanner.fold(st)(id => State(st.scanners
+          .updated(id, Entry(RegionInfo(info.table, info.region), ts))))
         (next, info)
 
       case ("next-rows", _) =>
         info.scanner.flatMap(id => st.scanners.get(id).map(id -> _)) match {
           case Some((id, e)) =>
             // refresh: an in-use scanner must not expire mid-scan
-            (st.copy(scanners = st.scanners.updated(id, e.copy(ts = ts))),
+            (State(st.scanners.updated(id, e.copy(ts = ts))),
               info.copy(table = e.info.table, region = e.info.region))
           case None => (st, info)
         }
 
       case ("close-scanner", true) =>
         val ri = info.scanner.flatMap(st.scanners.get).map(_.info)
-        val next = info.scanner.fold(st)(id => st.copy(scanners = st.scanners - id))
+        val next = info.scanner.fold(st)(id => State(st.scanners - id))
         (next, ri.fold(info)(r => info.copy(table = r.table, region = r.region)))
-
-      case ("small-scan", false) =>
-        (st.copy(pendingOpen = st.pendingOpen - info.callId), info)
 
       case _ => (st, info)
     }
@@ -76,7 +65,6 @@ object ScanState {
   /** Drop every entry last touched before `cutoffTs` (reference
     * trim-state-expired semantics over scanner state).
     */
-  def expire(st: State, cutoffTs: Long): State = State(
-    st.pendingOpen.filter { case (_, e) => e.ts >= cutoffTs },
-    st.scanners.filter { case (_, e) => e.ts >= cutoffTs })
+  def expire(st: State, cutoffTs: Long): State =
+    State(st.scanners.filter { case (_, e) => e.ts >= cutoffTs })
 }

@@ -10,7 +10,8 @@ import graft.ops.{Dedup, LegacySpellings, Materialize}
 
 /** The one dev probe over the declared queries and their superseded
   * spellings (test sourceset: never ships in the library jar). Every mode
-  * runs in one session sized by `SPARK_GRAFT_CPUS`, as [[Bench]] is.
+  * runs in one [[Sessions.local]] session sized by `SPARK_GRAFT_CPUS`
+  * (default 32), as [[Bench]]'s is.
   *
   * {{{
   * sbt "Test/runMain graft.Probe ab    <sfDir> <reps> <name,...>"
@@ -151,12 +152,7 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.tune(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = Sessions.local(defaultCpus = 32)
     spark.sparkContext.setLogLevel("ERROR")
     try run(spark, args.toSeq) finally spark.stop()
   }

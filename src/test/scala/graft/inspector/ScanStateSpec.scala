@@ -8,14 +8,17 @@ class ScanStateSpec extends AnyFunSuite {
 
   private val open = RpcInfo("open-scanner", 2,
     table = Some("t"), region = Some("r"), scanner = Some(0L))
-  private val openRes = RpcInfo("open-scanner", 2, scanner = Some(7001L))
+  // as HbaseRpc.parseResponse builds it: the request's table and region
+  // copied onto the matched response
+  private val openRes = RpcInfo("open-scanner", 2,
+    table = Some("t"), region = Some("r"), scanner = Some(7001L))
 
   test("full lifecycle: open -> response maps scanner -> next/close inherit region") {
+    // the request itself is held by the tracker's call-id correlation
     val (s1, _) = ScanState.step(ScanState.empty, open, inbound = true, ts = 10L)
-    assert(s1.pendingOpen.contains(2))
+    assert(s1 === ScanState.empty)
 
     val (s2, _) = ScanState.step(s1, openRes, inbound = false, ts = 12L)
-    assert(s2.pendingOpen.isEmpty)
     assert(s2.scanners(7001L).info === ScanState.RegionInfo(Some("t"), Some("r")))
 
     val next = RpcInfo("next-rows", 3, scanner = Some(7001L))
@@ -29,11 +32,11 @@ class ScanStateSpec extends AnyFunSuite {
     assert(s4.scanners.isEmpty) // close discards
   }
 
-  test("small-scan: remembered on request, discarded on response, no scanner entry") {
+  test("small-scan: request and response leave no scan state") {
     val small = RpcInfo("small-scan", 10, table = Some("ts"), region = Some("rs"))
     val (s1, _) = ScanState.step(ScanState.empty, small, inbound = true, ts = 1L)
-    assert(s1.pendingOpen.contains(10))
-    val (s2, _) = ScanState.step(s1, RpcInfo("small-scan", 10), inbound = false, ts = 2L)
+    assert(s1 === ScanState.empty)
+    val (s2, _) = ScanState.step(s1, small.copy(scanner = Some(0L)), inbound = false, ts = 2L)
     assert(s2 === ScanState.empty)
   }
 
@@ -55,9 +58,6 @@ class ScanStateSpec extends AnyFunSuite {
     val (s3, _) = ScanState.step(s2, next, inbound = true, ts = 500L)
     assert(ScanState.expire(s3, 200L).scanners.contains(7001L))
     assert(ScanState.expire(s3, 501L).scanners.isEmpty)
-    // pendingOpen entries expire too (a lost open-scanner response)
-    val (s4, _) = ScanState.step(ScanState.empty, open, inbound = true, ts = 100L)
-    assert(ScanState.expire(s4, 101L).pendingOpen.isEmpty)
   }
 
   test("fuzz: random op sequences never throw; state bounded by live opens") {
@@ -76,8 +76,8 @@ class ScanStateSpec extends AnyFunSuite {
       st = next
       maxEntries = math.max(maxEntries, st.bufferedEntries)
     }
-    // 8 call-ids x pendingOpen + 10 scanner ids bounds the state
-    assert(maxEntries <= 18, s"unbounded scan state: $maxEntries")
+    // the 10 scanner ids bound the state
+    assert(maxEntries <= 10, s"unbounded scan state: $maxEntries")
   }
 
   test("non-scan methods do not touch state") {

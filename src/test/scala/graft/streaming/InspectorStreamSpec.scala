@@ -14,7 +14,7 @@ class InspectorStreamSpec extends SparkSpec {
 
   test("state envelope: round-trips the snapshot; wrong version fails with message") {
     import graft.inspector.{ConnSnapshot, ScanState, StateEnvelope}
-    val scan = ScanState.State(Map.empty,
+    val scan = ScanState.State(
       Map(9001L -> ScanState.Entry(ScanState.RegionInfo(Some("t"), None), 900L)))
     val snap = ConnSnapshot(Array[Byte](1, 2, 3), Array.empty,
       Map(7 -> (graft.proto.HbaseRpc.RpcInfo("get", 7), 1000L)), scan)
@@ -24,7 +24,7 @@ class InspectorStreamSpec extends SparkSpec {
     assert(back.scan === scan)
     // a checkpoint written by an older build fails fast and actionably,
     // not with a raw deserialization error
-    for (v <- Seq(1, 2)) {
+    for (v <- Seq(1, 2, 3)) {
       val e = intercept[IllegalStateException] {
         StateEnvelope.unwrap(StateEnvelope.wrap(snap).copy(version = v))
       }

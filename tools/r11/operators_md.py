@@ -37,11 +37,12 @@ def entry_points():
          str(ROOT / "src/main/scala/graft")],
         capture_output=True, text=True).stdout
     eps = {}
+    # the file alone, no line number: a line number goes stale with every
+    # edit above the registration, anywhere in the file
     for line in out.splitlines():
-        m = re.match(r"(.*?):(\d+):\s*\"(q\d+_[a-z0-9_]+)\"", line)
+        m = re.match(r"(.*?):\d+:\s*\"(q\d+_[a-z0-9_]+)\"", line)
         if m:
-            path = pathlib.Path(m.group(1)).relative_to(ROOT)
-            eps[m.group(3)] = f"{path}:{m.group(2)}"
+            eps[m.group(2)] = str(pathlib.Path(m.group(1)).relative_to(ROOT))
     return eps
 
 

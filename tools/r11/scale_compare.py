@@ -23,8 +23,8 @@ def main():
     # a query that crashed or was dropped on EITHER side is a gate
     # FAILURE, not a skip — silently scanning only the intersection would
     # pass the super-linear gate with queries never compared (round-11
-    # advice; both directions, or a partial sf0.1 artifact produced under
-    # SPARK_GRAFT_ONLY would vacuously pass against a full 10x one)
+    # advice; both directions, or a partial sf0.1 artifact would
+    # vacuously pass against a full 10x one)
     missing = sorted(set(qa) ^ set(qb))
     if missing:
         print(f"not in BOTH artifacts: {missing}")
