@@ -57,8 +57,7 @@ object Main {
     val spark = Sessions.tune(SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
       .appName("graft-inspector")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")))
+      .config("spark.sql.shuffle.partitions", "32"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val code =
@@ -157,7 +156,7 @@ object Main {
     if (durationMs.exists(_ <= 0)) {
       // mirror the -c check: a zero/negative -d with -i stops the capture
       // immediately (yet prints "stopped after N ms"), and with -k goes
-      // straight into awaitBounded — both silently useless (round-9 advice)
+      // straight into a zero budget — both silently useless (round-9 advice)
       out.println("-d requires a positive duration in milliseconds")
       out.println(Usage); return 1
     }
@@ -265,7 +264,7 @@ object Main {
             try {
               // reference -v progress: say what the load is about to read
               // (long directory loads are otherwise silent until done)
-              if (verbose) listCaptureFiles(d, out)
+              if (verbose) listCaptureFiles(spark, d, out)
               if (save.isDefined)
                 runSave(spark, d, save.get, ports, maxRecords, out)
               else if (kafka.isDefined)
@@ -315,17 +314,22 @@ object Main {
     }
   }
 
-  /** `-v` load preamble: the capture files the pipeline is about to read
-    * (dot-prefixed in-progress staging files are excluded, exactly as the
-    * binaryFile source excludes them).
+  /** `-v` load preamble: the capture files the pipeline is about to read,
+    * listed by the `binaryFile` source itself, so its exclusions (hidden
+    * `.`/`_` names, `._COPYING_` uploads) hold here too.
     */
-  private def listCaptureFiles(dir: String, out: PrintStream): Unit = {
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && !f.getName.startsWith("."))
-      .sortBy(_.getName)
-    out.println(s"[v] ${files.length} capture files in $dir")
-    files.foreach(f => out.println(s"[v]   ${f.getName} (${f.length()} bytes)"))
-  }
+  private def listCaptureFiles(spark: SparkSession, dir: String,
+                               out: PrintStream): Unit =
+    try {
+      val files = spark.read.format("binaryFile").load(dir)
+        .select("path", "length").collect()
+        .map(r => (new org.apache.hadoop.fs.Path(r.getString(0)).getName, r.getLong(1)))
+        .sortBy(_._1)
+      out.println(s"[v] ${files.length} capture files in $dir")
+      files.foreach { case (name, n) => out.println(s"[v]   $name ($n bytes)") }
+    } catch {
+      case NonFatal(e) => out.println(s"[v] could not list $dir: ${e.getMessage}")
+    }
 
   private def runSave(spark: SparkSession, dir: String, prefix: String,
                       ports: Set[Int], maxRecords: Option[Int],
@@ -375,12 +379,8 @@ object Main {
         val query = writer.start()
         out.println(s"streaming $dir -> kafka ${parsed.servers} " +
           s"(requests='${parsed.topic1}', responses='${parsed.topic2}')")
-        (maxRecords, durationMs) match {
-          case (Some(cap), _) =>
-            InspectorStream.awaitCapped(query, tracker, cap, durationMs)
-          case (None, Some(ms)) => InspectorStream.awaitBounded(query, ms)
-          case (None, None)     => query.awaitTermination()
-        }
+        InspectorStream.awaitCapped(query, tracker,
+          maxRecords.fold(Long.MaxValue)(_.toLong), durationMs)
       } finally {
         spark.streams.removeListener(tracker)
         ownCkpt.foreach(Fs.deleteTree)

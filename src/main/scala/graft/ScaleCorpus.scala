@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
 
 /** Deterministic ~10x (sf1-equivalent) bench corpus, derived from the
   * read-only sf0.1 testdata by unioning [[Replicas]] id-remapped
-  * replicas — the Scala counterpart of `tools/r11/derive.py` so that
-  * [[Bench]] can self-provision the corpus at gate time instead of
-  * depending on a /tmp directory surviving between sessions.
+  * replicas — the one derivation of the scaled corpus, so that
+  * [[Bench]] can self-provision it at gate time instead of depending on
+  * a /tmp directory surviving between runs.
   *
   * WHY the official bench moved here (round-13 verdict item #1): at
   * sf0.1, 80+ of the 112 queries run under one second, where timer
@@ -22,8 +22,7 @@ import org.apache.spark.sql.functions._
   * the SCALED floor block in [[Bench.expectedScaled]].
   *
   * The id offsets preserve every modular contract the queries rely on
-  * (mirroring derive.py — one source of truth per rule, restated here
-  * because the Scala corpus is derived independently):
+  * ([[Remap]] is the one source of truth for them):
   *   - doc_id offset is a multiple of 20 (q49/q104/q108/q112's
   *     `doc_id % 20 == 0` benchmark slice keeps its 5% share per
   *     replica)
@@ -48,9 +47,10 @@ import org.apache.spark.sql.functions._
   * indefinitely (v1 only checked marker text + dir existence).
   *
   * Derivation writes into a UUID-suffixed sibling STAGING directory and
-  * publishes with one atomic rename (the FixtureOracles.publish
-  * pattern): a crash mid-derive leaves the previous corpus untouched
-  * and only staging garbage behind, and two JVMs racing the derivation
+  * publishes with one atomic rename (the [[Fs.publish]] rule, plus
+  * replacing a stale corpus and waiting out a rival): a crash
+  * mid-derive leaves the previous corpus untouched and only staging
+  * garbage behind, and two JVMs racing the derivation
   * (Bench's self-upgrade vs tools/scale_gate.py) can no longer
   * interleave overwrite-mode writes into the same table dirs — the
   * loser of the publish race discards its staging copy (identical
@@ -287,9 +287,18 @@ object ScaleCorpus {
              replicas: Int = Replicas): Unit = {
     val out = Paths.get(outDir).toAbsolutePath
     Files.createDirectories(out.getParent)
-    sweepOrphans(out)
+    // `.staging-*` / `.old-*` siblings of a HARD-crashed earlier derive
+    // (kill -9 / OOM skips the catch below): corpus-sized, and no other
+    // sweeper matches their names. Idle-scoped, so a concurrent
+    // deriver's live staging dir, still landing part files deep in its
+    // tree, is never touched.
+    val base = out.getFileName.toString
+    Fs.sweepIdle(out.getParent, Fs.IdleMs) { p =>
+      val n = p.getFileName.toString
+      n.startsWith(s"$base.staging-") || n.startsWith(s"$base.old-")
+    }.foreach(p => System.err.println(s"[scale-corpus] swept orphaned $p"))
     val tag = java.util.UUID.randomUUID().toString.take(8)
-    val staging = out.resolveSibling(s"${out.getFileName}.staging-$tag")
+    val staging = out.resolveSibling(s"$base.staging-$tag")
     try {
       Files.createDirectories(staging)
       for (t <- CopyTables)
@@ -318,50 +327,6 @@ object ScaleCorpus {
       case e: Throwable => Fs.deleteTree(staging); throw e
     }
   }
-
-  /** Best-effort cleanup of `.staging-*` / `.old-*` siblings from a
-    * HARD-crashed earlier derivation (kill -9 / OOM skips the in-process
-    * catch): these can be corpus-sized, no other sweeper matches their
-    * names, and they would otherwise accumulate until the disk fills.
-    * Age-scoped (>1h idle) so a concurrent deriver's LIVE staging dir is
-    * never touched — a healthy derivation completes well inside an hour.
-    * Liveness is the newest mtime found RECURSIVELY under the candidate
-    * (r16 advice): the top-level dir mtime only refreshes when a direct
-    * child appears, so a single fact-table write running past the hour
-    * at high replica counts would otherwise look idle mid-write while
-    * its part files are still landing deeper in the tree.
-    */
-  private def sweepOrphans(out: java.nio.file.Path): Unit =
-    try {
-      val base = out.getFileName.toString
-      val cutoff = System.currentTimeMillis() - 60 * 60 * 1000L
-      // any unreadable entry counts as "just modified" — never delete on
-      // a failed read
-      def newestMtime(p: java.nio.file.Path): Long =
-        try {
-          val walk = Files.walk(p)
-          try {
-            import scala.jdk.CollectionConverters._
-            walk.iterator().asScala.foldLeft(Long.MinValue) { (mx, f) =>
-              math.max(mx,
-                try Files.getLastModifiedTime(f).toMillis
-                catch { case _: Throwable => Long.MaxValue })
-            }
-          } finally walk.close()
-        } catch { case _: Throwable => Long.MaxValue }
-      val listing = Files.list(out.getParent)
-      try {
-        import scala.jdk.CollectionConverters._
-        listing.iterator().asScala.filter { p =>
-          val n = p.getFileName.toString
-          (n.startsWith(s"$base.staging-") || n.startsWith(s"$base.old-")) &&
-            newestMtime(p) < cutoff
-        }.toSeq.foreach { p =>
-          System.err.println(s"[scale-corpus] sweeping orphaned $p")
-          Fs.deleteTree(p)
-        }
-      } finally listing.close()
-    } catch { case _: Throwable => () }
 
   /** Atomic publish of a fully-written staging corpus. Losing a race to
     * a concurrent deriver is benign — the derivation is deterministic,

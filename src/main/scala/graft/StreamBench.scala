@@ -87,9 +87,6 @@ object StreamBench {
     (tracker.total, sec, stateRows, stateMb)
   }
 
-  private def ckpt(tag: String): String =
-    Files.createTempDirectory(s"graft_stream_ck_$tag").toString
-
   def main(args: Array[String]): Unit = {
     val sfDir = {
       val want = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf1d")
@@ -109,118 +106,122 @@ object StreamBench {
     val jvm0 = JvmTelemetry.snapshot()
     val foreignAtStart = Bench.liveForeignJvms()
     val t0 = System.nanoTime()
-
-    // ---- leg 1: streaming packet pipeline over rotated pcap ----
-    val (pcapDir, nReq, nRes) = SyntheticTraffic.bulkPcapDir(PcapConns, PcapCalls, PcapFiles)
-    try {
+    // every checkpoint and the staged documents copy live under one dir
+    val scratch = Files.createTempDirectory("graft_stream")
+    def ckpt(tag: String): String =
+      Files.createDirectory(scratch.resolve(s"ck_$tag")).toString
+    val total = try {
+      // ---- leg 1: streaming packet pipeline over rotated pcap ----
+      val (pcapDir, nReq, nRes) = SyntheticTraffic.bulkPcapDir(PcapConns, PcapCalls, PcapFiles)
       val msgs = nReq + nRes
-      val (out, sec, stRows, stMb) = timeQuery(spark, "graft_stream_inspector") {
-        name =>
-          // withIdleTimeout=false: a bounded AvailableNow replay would
-          // otherwise schedule empty timeout-check triggers that measure
-          // the trigger clock, not the pipeline (the spec's determinism
-          // posture); event-ts-relative expiry still runs.
-          InspectorStream.recordsFromPcapDir(spark, pcapDir,
-              withIdleTimeout = false)
-            .writeStream.format("noop").queryName(name)
-            .option("checkpointLocation", ckpt("inspector"))
-            .trigger(Trigger.AvailableNow()).start()
-      }
+      val (out, sec, stRows, stMb) =
+        try timeQuery(spark, "graft_stream_inspector") {
+          name =>
+            // withIdleTimeout=false: a bounded AvailableNow replay would
+            // otherwise schedule empty timeout-check triggers that measure
+            // the trigger clock, not the pipeline (the spec's determinism
+            // posture); event-ts-relative expiry still runs.
+            InspectorStream.recordsFromPcapDir(spark, pcapDir,
+                withIdleTimeout = false)
+              .writeStream.format("noop").queryName(name)
+              .option("checkpointLocation", ckpt("inspector"))
+              .trigger(Trigger.AvailableNow()).start()
+        } finally Fs.deleteTree(Paths.get(pcapDir))
       legs += Leg("inspector", msgs, out, sec, stRows, stMb)
       // a decode/correlation regression must not publish plausible rates
       if (out != msgs) {
         System.err.println(s"[streambench] DECODE LOSS: $out records != $msgs generated")
+        Fs.deleteTree(scratch) // sys.exit skips the finally below
         sys.exit(1)
       }
-    } finally Fs.deleteTree(Paths.get(pcapDir))
 
-    // ---- shared streaming documents source (file-source micro-batches) ----
-    // FileStreamSource needs a DIRECTORY. Spark-written corpora (the 10x
-    // gate dir) already are one; the driver's small-SF testdata ships a
-    // single parquet FILE — stage it into a temp dir so the same replay
-    // runs at any scale (no copy on the real corpus path).
-    val docsPath = {
-      val p = Paths.get(s"$sfDir/documents.parquet")
-      if (Files.isDirectory(p)) p.toString
-      else {
-        val d = Files.createTempDirectory("graft_stream_docs")
-        Files.copy(p, d.resolve("documents.parquet"))
-        d.toString
+      // ---- shared streaming documents source (file-source micro-batches) ----
+      // FileStreamSource needs a DIRECTORY. Spark-written corpora (the 10x
+      // gate dir) already are one; the small-SF testdata ships a
+      // single parquet FILE — stage it into a temp dir so the same replay
+      // runs at any scale (no copy on the real corpus path).
+      val docsPath = {
+        val p = Paths.get(s"$sfDir/documents.parquet")
+        if (Files.isDirectory(p)) p.toString
+        else {
+          val d = Files.createDirectory(scratch.resolve("docs"))
+          Files.copy(p, d.resolve("documents.parquet"))
+          d.toString
+        }
       }
-    }
-    val docsSchema = spark.read.parquet(docsPath).schema
-    val nDocs = spark.read.parquet(docsPath).count()
-    def docsStream(maxFilesPerTrigger: Int) = spark.readStream
-      .schema(docsSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(docsPath)
-      // replayed history: synthesize a bounded event-time so the
-      // watermark horizon covers the whole replay (a live ingest would
-      // carry real arrival time here)
-      .withColumn("event_time",
-        timestamp_seconds(lit(1700000000L) + col("doc_id") % 300))
+      val docsSchema = spark.read.parquet(docsPath).schema
+      val nDocs = spark.read.parquet(docsPath).count()
+      def docsStream(maxFilesPerTrigger: Int) = spark.readStream
+        .schema(docsSchema)
+        .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
+        .parquet(docsPath)
+        // replayed history: synthesize a bounded event-time so the
+        // watermark horizon covers the whole replay (a live ingest would
+        // carry real arrival time here)
+        .withColumn("event_time",
+          timestamp_seconds(lit(1700000000L) + col("doc_id") % 300))
 
-    // ---- leg 2: streaming exact dedup (stateful, watermark-bounded) ----
-    locally {
-      val (out, sec, stRows, stMb) = timeQuery(spark, "graft_stream_dedup") {
-        name =>
-          StreamingOps.exactDedup(docsStream(4))
-            .writeStream.format("noop").queryName(name)
-            .option("checkpointLocation", ckpt("dedup"))
-            .trigger(Trigger.AvailableNow()).start()
-      }
-      legs += Leg("exact_dedup", nDocs, out, sec, stRows, stMb)
-    }
-
-    // ---- leg 3: streaming decontamination screen (foreachBatch) ----
-    locally {
-      // benchmark set: every 41st doc stands in for the eval corpus —
-      // caller-owned gram-set lifecycle (the contaminationScreen contract)
-      val bench = spark.read.parquet(docsPath)
-        .filter(col("doc_id") % 41 === 0).select(col("doc_id"), col("text"))
-      val benchGrams = graft.ops.Decontam.benchGramSet(bench).cache()
-      benchGrams.count() // materialize outside the timed region
-      val contaminated = new java.util.concurrent.atomic.LongAdder
-      try {
-        val (_, sec, stRows, stMb) = timeQuery(spark, "graft_stream_decontam") {
+      // ---- leg 2: streaming exact dedup (stateful, watermark-bounded) ----
+      locally {
+        val (out, sec, stRows, stMb) = timeQuery(spark, "graft_stream_dedup") {
           name =>
-            StreamingOps.contaminationScreen(
-                docsStream(4).select(col("doc_id"), col("text")), benchGrams) {
-              (contam, _) => contaminated.add(contam.count())
-            }.queryName(name)
-              .option("checkpointLocation", ckpt("decontam"))
+            StreamingOps.exactDedup(docsStream(4))
+              .writeStream.format("noop").queryName(name)
+              .option("checkpointLocation", ckpt("dedup"))
               .trigger(Trigger.AvailableNow()).start()
         }
-        legs += Leg("decontam", nDocs, contaminated.sum(), sec, stRows, stMb)
-      } finally benchGrams.unpersist()
-    }
-
-    // ---- leg 4: streaming near-dup screen (r20 — the live q31) ----
-    locally {
-      val (out, sec, stRows, stMb) = timeQuery(spark, "graft_stream_neardup") {
-        name =>
-          StreamingOps.nearDupScreen(
-              docsStream(4).select(col("event_time"), col("doc_id"), col("text")))
-            .writeStream.format("noop").queryName(name)
-            .option("checkpointLocation", ckpt("neardup"))
-            .trigger(Trigger.AvailableNow()).start()
+        legs += Leg("exact_dedup", nDocs, out, sec, stRows, stMb)
       }
-      // out = emitted hits; state peak is the live (band, bucket)
-      // member volume — the number that decides whether the band-keyed
-      // state discipline holds under a replayed-history watermark that
-      // keeps the WHOLE corpus inside the horizon (worst case: every
-      // signed doc stays resident in all 4 bands)
-      legs += Leg("neardup_screen", nDocs, out, sec, stRows, stMb)
-    }
 
-    val total = (System.nanoTime() - t0) / 1e9
+      // ---- leg 3: streaming decontamination screen (foreachBatch) ----
+      locally {
+        // benchmark set: every 41st doc stands in for the eval corpus —
+        // caller-owned gram-set lifecycle (the contaminationScreen contract)
+        val bench = spark.read.parquet(docsPath)
+          .filter(col("doc_id") % 41 === 0).select(col("doc_id"), col("text"))
+        val benchGrams = graft.ops.Decontam.benchGramSet(bench).cache()
+        benchGrams.count() // materialize outside the timed region
+        val contaminated = new java.util.concurrent.atomic.LongAdder
+        try {
+          val (_, sec, stRows, stMb) = timeQuery(spark, "graft_stream_decontam") {
+            name =>
+              StreamingOps.contaminationScreen(
+                  docsStream(4).select(col("doc_id"), col("text")), benchGrams) {
+                (contam, _) => contaminated.add(contam.count())
+              }.queryName(name)
+                .option("checkpointLocation", ckpt("decontam"))
+                .trigger(Trigger.AvailableNow()).start()
+          }
+          legs += Leg("decontam", nDocs, contaminated.sum(), sec, stRows, stMb)
+        } finally benchGrams.unpersist()
+      }
+
+      // ---- leg 4: streaming near-dup screen (r20 — the live q31) ----
+      locally {
+        val (out, sec, stRows, stMb) = timeQuery(spark, "graft_stream_neardup") {
+          name =>
+            StreamingOps.nearDupScreen(
+                docsStream(4).select(col("event_time"), col("doc_id"), col("text")))
+              .writeStream.format("noop").queryName(name)
+              .option("checkpointLocation", ckpt("neardup"))
+              .trigger(Trigger.AvailableNow()).start()
+        }
+        // out = emitted hits; state peak is the live (band, bucket)
+        // member volume — the number that decides whether the band-keyed
+        // state discipline holds under a replayed-history watermark that
+        // keeps the WHOLE corpus inside the horizon (worst case: every
+        // signed doc stays resident in all 4 bands)
+        legs += Leg("neardup_screen", nDocs, out, sec, stRows, stMb)
+      }
+      (System.nanoTime() - t0) / 1e9
+    } finally Fs.deleteTree(scratch)
     val jvm1 = JvmTelemetry.snapshot()
     val health = Bench.Health(
       stealMs = (jvm1.stealJiffies - jvm0.stealJiffies) * JvmTelemetry.msPerJiffy,
       jitMs = jvm1.jitMs - jvm0.jitMs,
       foreignJvms = (foreignAtStart ++ Bench.liveForeignJvms()).distinct.length)
     val json =
-      f"""{"metric":"stream_total","value":$total%.3f,"unit":"sec","streams":{${legs.map(_.json).mkString(",")}},${health.json},"pcap":{"conns":$PcapConns,"calls":$PcapCalls,"files":$PcapFiles},"sf":"$sfDir"}"""
+      f"""{"metric":"stream_total","value":$total%.3f,"unit":"sec","streams":{${legs.map(_.json).mkString(",")}},${health.json},"pcap":{"conns":$PcapConns,"calls":$PcapCalls,"files":$PcapFiles},"sf":"${Bench.jsonStr(sfDir)}"}"""
     try Files.writeString(Paths.get("BENCH_STREAM.json"), json)
     catch { case _: Throwable => () }
     try spark.stop() catch { case _: Throwable => () }

@@ -418,37 +418,15 @@ object SyntheticTraffic {
     val reqCols = Seq("ts", "client", "port", "call_id", "server", "method",
       "size", "batch", "table", "region", "row", "stoprow", "cells",
       "durability").map(col)
-    def write(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val target = parent.resolve(name)
-      if (!Files.exists(target)) {
-        // stage + atomic rename, like the pcap writes above: a concurrent
-        // JVM must never see a half-written parquet dir, and a JVM killed
-        // mid-write must not leave a partial dir that later runs accept
-        val tmp = parent.resolve(
-          s".tmp_${name}_${java.util.UUID.randomUUID().toString.take(8)}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        try Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case e: Throwable =>
-          // another JVM won the race (same hash-named parent → identical
-          // content) — or the move failed; either way drop the staging dir
-          if (Files.exists(target)) graft.Fs.deleteTree(tmp) else throw
-            new java.io.IOException(s"could not publish oracle fixture $target", e)
-        }
-      }
-    }
-    // best-effort sweep of staging dirs orphaned by a killed JVM — only
-    // stale ones (an active writer's staging dir is seconds old)
-    try {
-      val cutoff = System.currentTimeMillis() - 10 * 60 * 1000L
-      val listing = Files.list(parent)
-      try {
-        import scala.jdk.CollectionConverters._
-        listing.iterator().asScala
-          .filter(p => p.getFileName.toString.startsWith(".tmp_") &&
-            Files.getLastModifiedTime(p).toMillis < cutoff)
-          .toSeq.foreach(graft.Fs.deleteTree)
-      } finally listing.close()
-    } catch { case _: Throwable => () }
+    // a concurrent JVM must never see a half-written parquet dir, and a
+    // JVM killed mid-write must not leave a partial dir that later runs
+    // accept; the same hash-named parent means identical content
+    def write(name: String, df: => org.apache.spark.sql.DataFrame): Unit =
+      graft.Fs.publish(parent.resolve(name))(p =>
+        df.coalesce(1).write.mode("overwrite").parquet(p.toString))
+    // staging dirs orphaned by a killed JVM
+    graft.Fs.sweepIdle(parent, graft.Fs.IdleMs)(
+      _.getFileName.toString.startsWith(".tmp_"))
     val recs = expectedRecords.toDS()
     write("expected_requests", recs.filter(_.inbound).toDF().select(reqCols: _*))
     write("expected_responses", recs.filter(!_.inbound).toDF()
@@ -460,15 +438,6 @@ object SyntheticTraffic {
     pcapDir
   }
 
-  /** Writes the two capture files under a content-hashed parent directory
-    * (a plain existence check would silently reuse stale fixtures from an
-    * older code version across JVMs sharing /tmp); writes go through a
-    * temp file + atomic move so concurrent JVMs never see partial bytes.
-    * Layout: the capture files live under `graft_synth_<hash>/pcap` — a
-    * subdirectory of their own, so the oracle parquet ([[ensureFixtures]])
-    * never enters the pipeline's `binaryFile` listing. Returns the pcap
-    * subdirectory.
-    */
   /** Identity of the oracle fixtures: the content hash must cover the
     * EXPECTED tables too, not just the pcap bytes — an oracle-only edit
     * (a corrected cell value, a column change) would otherwise reuse
@@ -480,6 +449,15 @@ object SyntheticTraffic {
       expectedActions.map(_.toString) ++ expectedResults.map(_.toString))
       .mkString("\n")
 
+  /** Writes the two capture files under a content-hashed parent directory
+    * (a plain existence check would silently reuse stale fixtures from an
+    * older code version across JVMs sharing /tmp); writes go through
+    * [[graft.Fs.publish]] so concurrent JVMs never see partial bytes.
+    * Layout: the capture files live under `graft_synth_<hash>/pcap` — a
+    * subdirectory of their own, so the oracle parquet ([[ensureFixtures]])
+    * never enters the pipeline's `binaryFile` listing. Returns the pcap
+    * subdirectory.
+    */
   def ensurePcapDir(): String = synchronized {
     val file1 = toPcap(connA)
     val file2 = toPcap(connB ++ noise)
@@ -489,51 +467,23 @@ object SyntheticTraffic {
       md.update(oracleDigest.getBytes(UTF_8))
       md.digest().take(4).map(b => f"${b & 0xff}%02x").mkString
     }
-    val tmpRoot = Paths.get(sys.props("java.io.tmpdir"))
-    val parent: Path = tmpRoot.resolve(s"graft_synth_$hash")
+    val parent: Path = graft.Fs.tmpRoot.resolve(s"graft_synth_$hash")
     val dir: Path = parent.resolve("pcap")
-    // best-effort cleanup of fixtures minted by older traffic versions
-    // (content-hashed dirs would otherwise accumulate forever; the old
-    // pre-round-8 prefix was graft_synth_pcap_<hash>). AGE-SCOPED: only
-    // dirs untouched for an hour — a different-version build running
-    // CONCURRENTLY (sbt test alongside a bench, two checkouts sharing
-    // /tmp) has a live, minutes-old fixture dir of its own, and deleting
-    // every non-current hash would yank it mid-run (round-8 advice)
-    try {
-      val cutoff = System.currentTimeMillis() - 60 * 60 * 1000L
-      val listing = Files.list(tmpRoot)
-      try listing.iterator().forEachRemaining { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("graft_synth") && p != parent &&
-              (try Files.getLastModifiedTime(p).toMillis < cutoff
-               catch { case _: Throwable => false }))
-            graft.Fs.deleteTree(p)
-        }
-      finally listing.close()
-    } catch { case _: Throwable => () }
+    // fixtures minted by older traffic versions (content-hashed dirs
+    // would otherwise accumulate forever; the pre-round-8 prefix was
+    // graft_synth_pcap_<hash>). Idle-scoped: a different-version build
+    // running CONCURRENTLY (sbt test alongside a bench, two checkouts
+    // sharing /tmp) has a live fixture dir of its own (round-8 advice)
+    graft.Fs.sweepIdle(graft.Fs.tmpRoot, graft.Fs.IdleMs) { p =>
+      p.getFileName.toString.startsWith("graft_synth") && p != parent
+    }
     Files.createDirectories(dir)
-    // liveness beacon for OTHER builds' sweeps: parquet READS don't bump
-    // a directory's mtime, so a long bench re-reading 2h-old fixtures
-    // would still look stale to a concurrent different-hash build and get
-    // yanked mid-run (round-9 review). Every ensure call — each access
-    // path goes through here — refreshes the parent's mtime, so "older
-    // than an hour" really means "no JVM touched these for an hour".
-    try Files.setLastModifiedTime(parent,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-    catch { case _: Throwable => () }
+    // liveness beacon for OTHER builds' sweeps: parquet reads don't bump
+    // an mtime, and every access path goes through here (round-9 review)
+    graft.Fs.touch(parent)
     Seq("capture-00001.pcap" -> file1, "capture-00002.pcap" -> file2)
       .foreach { case (name, bytes) =>
-        val target = dir.resolve(name)
-        if (!Files.exists(target)) {
-          // hidden "."-prefixed temp name: the binaryFile source must never
-          // list a half-written or orphaned temp as a capture
-          val tmp = Files.createTempFile(dir, "." + name, ".tmp")
-          Files.write(tmp, bytes)
-          try Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException =>
-            Files.deleteIfExists(tmp)
-          }
-        }
+        graft.Fs.publish(dir.resolve(name))(Files.write(_, bytes))
       }
     dir.toString
   }

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Fs
+
 /** Fixture oracles for driver queries whose semantics DuckDB cannot
   * re-derive in SQL (zlib deflate, seeded hash families, iterative
   * argmax): an INDEPENDENT driver-side re-derivation of each query's
@@ -76,7 +78,7 @@ object FixtureOracles {
 
   /** Version token in the fixture directory name: bump when a fixture's
     * SCHEMA changes (a glob must never mix parquet of two layouts) or
-    * when a derivation's VALUES change (publish() is a no-op on existing
+    * when a derivation's VALUES change (Fs.publish is a no-op on existing
     * dirs, so stale pre-fix fixtures would otherwise be reused —
     * fx1→fx2: the round6 shortest-decimal fix).
     */
@@ -1225,10 +1227,8 @@ object FixtureOracles {
     } finally listing.close()
   }
 
-  private[oracle] def tmpRoot: Path = Paths.get(sys.props("java.io.tmpdir"))
-
   private def fixtureDir(name: String, key: (Long, Long)): Path =
-    tmpRoot.resolve(s"graft_${Version}_${name}_${key._1}_${key._2}")
+    Fs.tmpRoot.resolve(s"graft_${Version}_${name}_${key._1}_${key._2}")
 
   /** The embedding fixtures whose derivation consumes the corpus's
     * PHYSICAL byte count (it feeds the engine's no-job row estimate →
@@ -1245,7 +1245,7 @@ object FixtureOracles {
     "q66_semdedup", "q84_ivfpq", "q131_ann_recall")
 
   private[oracle] def embFixtureDir(name: String, key: (Long, Long), bytes: Long): Path =
-    tmpRoot.resolve(s"graft_${Version}_${name}_${key._1}_${key._2}_b$bytes")
+    Fs.tmpRoot.resolve(s"graft_${Version}_${name}_${key._1}_${key._2}_b$bytes")
 
   /** The oracle SQL globs `name_*` and filters only on the CONTENT key
     * (DuckDB cannot reproduce a file-listing byte count), so at most
@@ -1253,29 +1253,15 @@ object FixtureOracles {
     * others (including pre-round-14 dirs named without the `_b` leg)
     * before publishing the current one.
     */
-  /** Delete every tmpRoot entry matching `pred` — shared by the
-    * byte-variant eviction and the age-scoped sweep. Best-effort: a
-    * listing/permission failure never fails a derivation.
-    */
-  private def sweepTmp(pred: Path => Boolean): Unit =
-    try {
-      val listing = Files.list(tmpRoot)
-      try {
-        import scala.jdk.CollectionConverters._
-        listing.iterator().asScala.filter(pred)
-          .toSeq.foreach(graft.Fs.deleteTree)
-      } finally listing.close()
-    } catch { case _: Throwable => () }
-
   /** Byte-variant eviction grace window: a variant dir touched more
     * recently than this is treated as possibly IN USE by a concurrent
     * gate over a content-identical corpus in another physical layout
     * (the duckdb-vs-Spark scenario the byte-stamped identity exists
     * for) — deleting it between that JVM's publish and its DuckDB read
     * would fail ITS gate. Recent variants are warned about, not
-    * deleted; the next ensure() past the window self-heals. The age
-    * sweep's mtime-beacon discipline makes mtime a faithful liveness
-    * proxy (each run touches the dirs it needs).
+    * deleted; the next ensure() past the window self-heals. The
+    * [[Fs.touch]] beacon makes mtime a faithful liveness proxy
+    * (each run touches the dirs it needs).
     *
     * Coexistence inside the window is made harmless by the
     * `SELECT DISTINCT` in [[embFixtureSql]]: two variants whose values
@@ -1299,31 +1285,29 @@ object FixtureOracles {
       val n = p.getFileName.toString
       (n == prefix || n.startsWith(prefix + "_b")) && n != keep
     }
-    val graceCutoff = System.currentTimeMillis() - EvictionGraceMs
-    sweepTmp(p => other(p) &&
-      (try Files.getLastModifiedTime(p).toMillis < graceCutoff
-       catch { case _: Throwable => true }))
+    Fs.sweepIdle(Fs.tmpRoot, EvictionGraceMs)(other)
     // this eviction enforces a CORRECTNESS invariant (the oracle SQL
     // globs name_* and keys only on content, so at most one byte
-    // variant may exist) — unlike the best-effort age sweep, a
+    // variant may exist) — unlike the best-effort idle sweep, a
     // survivor must be loud, or the duplicated-rows gate mismatch it
     // causes has nothing in stderr pointing at the stale dir
     try {
-      val listing = Files.list(tmpRoot)
+      val listing = Files.list(Fs.tmpRoot)
       try {
         import scala.jdk.CollectionConverters._
         listing.iterator().asScala.filter(other).foreach(p =>
           System.err.println(s"[fixtures] WARNING: byte-variant $p " +
-            s"survived eviction (within the grace window, or delete " +
-            s"failed) - the $name oracle will see duplicated rows until " +
+            s"survived eviction (within the grace window, unreadable, " +
+            s"or delete failed) - the $name oracle will see duplicated rows until " +
             "it is removed"))
       } finally listing.close()
     } catch { case _: Throwable => () }
   }
 
-  /** Stage + atomic publish (the SyntheticTraffic pattern): a concurrent
-    * JVM must never see a half-written parquet dir; identical key ⇒
-    * identical row set, so losing the rename race is benign.
+  /** The [[Fs.publish]] writer of one fixture: `df` stamped with
+    * its corpus key. `df` is by-name, so an existing fixture skips its
+    * derivation (adding one new fixture must not re-run every expensive
+    * LSH/IVF/k-means/PQ derivation).
     *
     * No `coalesce(1)`: these frames are driver-derived LocalRelations,
     * so their rows ship INSIDE the write tasks' binaries — collapsed to
@@ -1332,23 +1316,12 @@ object FixtureOracles {
     * The default-parallelism write splits that across tasks; the dir
     * becomes multi-file, which every consumer already tolerates (the
     * oracle SQL reads the dir through a `read_parquet` part-file glob,
-    * the specs read the directory, and the race-benignity contract
-    * above is about the row SET, not file layout).
+    * the specs read the directory, and identical key means an identical
+    * row SET, not file layout).
     */
-  // df is BY-NAME: the existence check must short-circuit the derivation
-  // too, or adding one new fixture would re-run every expensive driver
-  // derivation (LSH/IVF/k-means/PQ) just to publish the one missing dir
-  private def publish(df: => DataFrame, target: Path): Unit = {
-    if (Files.exists(target)) return
-    val tmp = tmpRoot.resolve(
-      s".tmp_${target.getFileName}_${java.util.UUID.randomUUID().toString.take(8)}")
-    df.write.mode("overwrite").parquet(tmp.toString)
-    try Files.move(tmp, target, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case e: Throwable =>
-      if (Files.exists(target)) graft.Fs.deleteTree(tmp)
-      else throw new java.io.IOException(s"could not publish fixture $target", e)
-    }
-  }
+  private def keyed(key: (Long, Long))(df: => DataFrame): Path => Unit = p =>
+    df.withColumn("corpus_n", lit(key._1)).withColumn("corpus_s", lit(key._2))
+      .write.mode("overwrite").parquet(p.toString)
 
   /** Derive and publish every fixture for the corpus at `sfDir`. Called
     * by Verify AFTER the query dumps, BEFORE oracle_sql.json; idempotent
@@ -1382,32 +1355,29 @@ object FixtureOracles {
         .as[(Long, String, Long)]
         .collect().toSeq.sortBy(_._1)
       val docs = rows.map(r => (r._1, r._2))
-      def keyed(df: DataFrame): DataFrame =
-        df.withColumn("corpus_n", lit(key._1)).withColumn("corpus_s", lit(key._2))
-      publish(keyed(deriveQ31(docs).toDF("a", "b", "est_jaccard")),
-        fixtureDir("q31_dedup_minhash", key))
-      publish(keyed(deriveQ32(docs).toDF("a", "b", "hamming")),
-        fixtureDir("q32_dedup_simhash", key))
-      publish(keyed(deriveQ78(docs).toDF("rank", "left", "right", "merged")),
-        fixtureDir("q78_bpe_merges", key))
-      publish(keyed(deriveQ94(docs).toDF("doc_id", "n_words", "n_bpe_tokens")),
-        fixtureDir("q94_bpe_encode", key))
-      publish(keyed(deriveQ105(docs)
-        .toDF("lang", "n_docs", "n_words", "n_bpe_tokens", "fertility")),
-        fixtureDir("q105_fertility", key))
-      publish(keyed(deriveQ82(docs).toDF("doc_id", "n_bytes", "n_deflated", "compress_ratio")),
-        fixtureDir("q82_compress_ratio", key))
-      publish(keyed(deriveQ41(docs).toDF("doc_id", "media_type", "n_bytes",
-        "width", "height", "checksum", "phash")),
-        fixtureDir("q41_multimodal", key))
-      publish(keyed(deriveQ42(docs).toDF("doc_id", "frame_idx", "n_bytes", "checksum")),
-        fixtureDir("q42_frame_sample", key))
-      publish(keyed(deriveQ51(rows.map(r => (r._1, r._3)))
-        .toDF("doc_id", "sample_rate", "channels", "duration_ms", "rms",
-          "zero_cross", "afp")),
-        fixtureDir("q51_audio_features", key))
-      publish(keyed(deriveQ58(rows.map(_._1)).toDF("kind", "a", "b", "hamming")),
-        fixtureDir("q58_media_neardup", key))
+      Fs.publish(fixtureDir("q31_dedup_minhash", key))(keyed(key)(
+        deriveQ31(docs).toDF("a", "b", "est_jaccard")))
+      Fs.publish(fixtureDir("q32_dedup_simhash", key))(keyed(key)(
+        deriveQ32(docs).toDF("a", "b", "hamming")))
+      Fs.publish(fixtureDir("q78_bpe_merges", key))(keyed(key)(
+        deriveQ78(docs).toDF("rank", "left", "right", "merged")))
+      Fs.publish(fixtureDir("q94_bpe_encode", key))(keyed(key)(
+        deriveQ94(docs).toDF("doc_id", "n_words", "n_bpe_tokens")))
+      Fs.publish(fixtureDir("q105_fertility", key))(keyed(key)(
+        deriveQ105(docs).toDF("lang", "n_docs", "n_words", "n_bpe_tokens", "fertility")))
+      Fs.publish(fixtureDir("q82_compress_ratio", key))(keyed(key)(
+        deriveQ82(docs).toDF("doc_id", "n_bytes", "n_deflated", "compress_ratio")))
+      Fs.publish(fixtureDir("q41_multimodal", key))(keyed(key)(
+        deriveQ41(docs).toDF("doc_id", "media_type", "n_bytes",
+          "width", "height", "checksum", "phash")))
+      Fs.publish(fixtureDir("q42_frame_sample", key))(keyed(key)(
+        deriveQ42(docs).toDF("doc_id", "frame_idx", "n_bytes", "checksum")))
+      Fs.publish(fixtureDir("q51_audio_features", key))(keyed(key)(
+        deriveQ51(rows.map(r => (r._1, r._3)))
+          .toDF("doc_id", "sample_rate", "channels", "duration_ms", "rms",
+            "zero_cross", "afp")))
+      Fs.publish(fixtureDir("q58_media_neardup", key))(keyed(key)(
+        deriveQ58(rows.map(_._1)).toDF("kind", "a", "b", "hamming")))
     }
     // evict BEFORE the existence check, not inside the derivation
     // branch: if an interrupted/interleaved earlier run left both byte
@@ -1420,43 +1390,32 @@ object FixtureOracles {
       val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
         .collect().toSeq.sortBy(_._1)
-      def keyed(df: DataFrame): DataFrame =
-        df.withColumn("corpus_n", lit(embKey._1)).withColumn("corpus_s", lit(embKey._2))
-      publish(keyed(deriveQ34(vecs, embBytes).toDF("a", "b", "cos")),
-        embDir("q34_embed_neardup"))
-      publish(keyed(deriveQ36(vecs, embBytes).toDF("qid", "vec_id", "cos", "rank")),
-        embDir("q36_ann_lsh"))
-      publish(keyed(deriveQ43(vecs, embBytes).toDF("qid", "vec_id", "cos", "rank")),
-        embDir("q43_ann_ivf"))
-      publish(keyed(deriveQ131(vecs, embBytes)
-        .toDF("nprobe", "n_queries", "mean_recall_ppm", "min_recall_ppm")),
-        embDir("q131_ann_recall"))
-      publish(keyed(deriveQ66(vecs, embBytes).toDF("a", "b", "cos")),
-        embDir("q66_semdedup"))
-      publish(keyed(deriveQ77(vecs).toDF("vec_id", "pq_code", "recon_mse")),
-        embDir("q77_pq"))
-      publish(keyed(deriveQ84(vecs, embBytes).toDF("query_id", "vec_id", "rank", "adc_dist")),
-        embDir("q84_ivfpq"))
-      publish(keyed(deriveQ60(vecs).toDF("vec_id", "pc_0", "pc_1", "pc_2",
-        "pc_3", "pc_4", "pc_5", "pc_6", "pc_7")),
-        embDir("q60_pca_whiten"))
+      Fs.publish(embDir("q34_embed_neardup"))(keyed(embKey)(
+        deriveQ34(vecs, embBytes).toDF("a", "b", "cos")))
+      Fs.publish(embDir("q36_ann_lsh"))(keyed(embKey)(
+        deriveQ36(vecs, embBytes).toDF("qid", "vec_id", "cos", "rank")))
+      Fs.publish(embDir("q43_ann_ivf"))(keyed(embKey)(
+        deriveQ43(vecs, embBytes).toDF("qid", "vec_id", "cos", "rank")))
+      Fs.publish(embDir("q131_ann_recall"))(keyed(embKey)(
+        deriveQ131(vecs, embBytes)
+          .toDF("nprobe", "n_queries", "mean_recall_ppm", "min_recall_ppm")))
+      Fs.publish(embDir("q66_semdedup"))(keyed(embKey)(
+        deriveQ66(vecs, embBytes).toDF("a", "b", "cos")))
+      Fs.publish(embDir("q77_pq"))(keyed(embKey)(
+        deriveQ77(vecs).toDF("vec_id", "pq_code", "recon_mse")))
+      Fs.publish(embDir("q84_ivfpq"))(keyed(embKey)(
+        deriveQ84(vecs, embBytes).toDF("query_id", "vec_id", "rank", "adc_dist")))
+      Fs.publish(embDir("q60_pca_whiten"))(keyed(embKey)(
+        deriveQ60(vecs).toDF("vec_id", "pc_0", "pc_1", "pc_2",
+          "pc_3", "pc_4", "pc_5", "pc_6", "pc_7")))
     }
-    // liveness beacon + age-scoped sweep of fixture dirs from older
-    // corpora/code versions (the SyntheticTraffic discipline: reads
-    // don't bump mtime, so touch ours; only sweep dirs idle > 1h)
-    needed.foreach { d =>
-      try Files.setLastModifiedTime(d,
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-      catch { case _: Throwable => () }
-    }
-    val cutoff = System.currentTimeMillis() - 60 * 60 * 1000L
+    // liveness beacon (reads don't bump mtime) + idle sweep of fixture
+    // dirs from older corpora/code versions and of orphaned staging dirs
+    needed.foreach(Fs.touch)
     val current = needed.map(_.getFileName.toString).toSet
-    sweepTmp { p =>
+    Fs.sweepIdle(Fs.tmpRoot, Fs.IdleMs) { p =>
       val n = p.getFileName.toString
-      (n.startsWith("graft_fx") || n.startsWith(s".tmp_graft_fx")) &&
-        !current(n) &&
-        (try Files.getLastModifiedTime(p).toMillis < cutoff
-         catch { case _: Throwable => false })
+      (n.startsWith("graft_fx") || n.startsWith(".tmp_graft_fx")) && !current(n)
     }
   }
 
@@ -1466,7 +1425,7 @@ object FixtureOracles {
     * [[embCorpusKey]]'s aggregates.
     */
   private def fixtureSql(name: String, cols: String): String = {
-    val glob = tmpRoot.resolve(s"graft_${Version}_${name}_*").toString
+    val glob = Fs.tmpRoot.resolve(s"graft_${Version}_${name}_*").toString
     s"""SELECT $cols FROM read_parquet('$glob/*.parquet')
        |WHERE corpus_n = (SELECT count(*) FROM documents)
        |  AND corpus_s = (SELECT CAST(coalesce(sum((doc_id+1)*n_chars), 0) AS BIGINT)
@@ -1484,7 +1443,7 @@ object FixtureOracles {
     * construction (ranked lists / per-vec rows), so DISTINCT is lossless.
     */
   private def embFixtureSql(name: String, cols: String): String = {
-    val glob = tmpRoot.resolve(s"graft_${Version}_${name}_*").toString
+    val glob = Fs.tmpRoot.resolve(s"graft_${Version}_${name}_*").toString
     s"""SELECT DISTINCT $cols FROM read_parquet('$glob/*.parquet')
        |WHERE corpus_n = (SELECT count(*) FROM embeddings)
        |  AND corpus_s = (SELECT CAST(coalesce(sum((vec_id+1)*(label+7)), 0) AS BIGINT)

@@ -69,7 +69,7 @@ object InspectorStream {
     * `maxFilesPerTrigger` to bound each micro-batch's intake, start the
     * query with `Trigger.AvailableNow` to replay the directory's current
     * contents and terminate, and/or stop after a wall-clock budget with
-    * [[awaitBounded]].
+    * [[awaitCapped]].
     */
   def segmentsFromPcapDir(spark: SparkSession, path: String,
                           ports: Set[Int] = Inspector.HbasePorts,
@@ -91,14 +91,6 @@ object InspectorStream {
                          maxFilesPerTrigger: Option[Int] = None,
                          ports: Set[Int] = Inspector.HbasePorts): Dataset[RecordInfo] =
     records(segmentsFromPcapDir(spark, path, ports, maxFilesPerTrigger), withIdleTimeout)
-
-  /** Reference `-d` (duration) equivalent for a running query: block for at
-    * most `durationMs`, then stop it gracefully if it has not terminated on
-    * its own (an `AvailableNow` replay that finished early returns sooner).
-    */
-  def awaitBounded(query: org.apache.spark.sql.streaming.StreamingQuery,
-                   durationMs: Long): Unit =
-    if (!query.awaitTermination(durationMs)) query.stop()
 
   /** Per-trigger progress + cumulative output counter (reference `-c`
     * count cap and `-v` 1 s progress ticks, core.clj:47-63): accumulates
@@ -129,12 +121,13 @@ object InspectorStream {
       }
   }
 
-  /** Block until the query stops on its own, the wall-clock budget (if
-    * any) elapses, or the tracker's cumulative output reaches `cap` —
-    * then stop it gracefully. Granularity is one trigger (pair the cap
-    * with `maxFilesPerTrigger = 1` so it reacts per capture file): the
-    * reference checks its `-c` counter per packet; a micro-batch engine
-    * checks per trigger.
+  /** Reference `-c`/`-d` for a running query: block until the query stops
+    * on its own (a failed query rethrows), the wall-clock budget (if any)
+    * elapses, or the tracker's cumulative output reaches `cap`
+    * (`Long.MaxValue` for no cap) — then stop it gracefully. Granularity
+    * is one trigger (pair the cap with `maxFilesPerTrigger = 1` so it
+    * reacts per capture file): the reference checks its `-c` counter per
+    * packet; a micro-batch engine checks per trigger.
     */
   def awaitCapped(query: org.apache.spark.sql.streaming.StreamingQuery,
                   tracker: ProgressTracker, cap: Long,

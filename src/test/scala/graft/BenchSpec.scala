@@ -314,7 +314,7 @@ class BenchSpec extends AnyFunSuite {
     // graft.Probe, not to the graded mains. Every read must name its key
     // literally, so a key built at run time counts as a stray read.
     val kept = Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_SCALE",
-      "SPARK_GRAFT_SCALED_DIR", "SPARK_GRAFT_SHUFFLE", "SPARK_MASTER")
+      "SPARK_GRAFT_SCALED_DIR", "SPARK_MASTER")
     val anyRead = """sys\.env|System\.getenv""".r
     val keyed =
       """(?:sys\.env(?:\.get|\.getOrElse|\.contains)?|System\.getenv)\(\s*"(\w+)"""".r

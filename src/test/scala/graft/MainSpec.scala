@@ -312,6 +312,26 @@ class MainSpec extends SparkSpec {
       s"requests, ${SyntheticTraffic.ExpectedResponses} responses"), out)
   }
 
+  test("-v lists only the files the binaryFile source reads") {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(SyntheticTraffic.ensurePcapDir())
+    val dir = Files.createTempDirectory("graft_v_listing")
+    try {
+      Seq("capture-00001.pcap", "capture-00002.pcap").foreach(n =>
+        Files.copy(src.resolve(n), dir.resolve(n)))
+      // names Spark's file listing skips: `_`-prefixed and in-flight uploads
+      Files.copy(src.resolve("capture-00001.pcap"), dir.resolve("_capture.pcap"))
+      Files.copy(src.resolve("capture-00001.pcap"), dir.resolve("x.pcap._COPYING_"))
+      val (code, out) = run(Array(dir.toString, "-v",
+        "-e", "SELECT count(*) AS n FROM requests"))
+      assert(code === 0, out)
+      assert(out.contains("[v] 2 capture files"), out)
+      assert(!out.contains("_capture.pcap") && !out.contains("_COPYING_"), out)
+      assert(out.contains(s"[v] decoded ${SyntheticTraffic.ExpectedRequests} " +
+        s"requests, ${SyntheticTraffic.ExpectedResponses} responses"), out)
+    } finally Fs.deleteTree(dir)
+  }
+
   test("-p filters to the given ports (none match -> empty tables, not errors)") {
     val (code, out) = run(Array(SyntheticTraffic.ensurePcapDir(),
       "-p", "9999",

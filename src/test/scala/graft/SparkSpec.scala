@@ -19,6 +19,18 @@ object TestSpark {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Temp dirs of the shared fixture writers, deleted at JVM exit: specs
+    * read them lazily, so no test can delete its own.
+    */
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
+  sys.addShutdownHook(tempDirs.forEach(p => Fs.deleteTree(p)))
+
+  def tempDir(prefix: String): String = {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs.add(d)
+    d.toString
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {
@@ -35,7 +47,7 @@ trait SparkSpec extends AnyFunSuite {
     * fixtures the q96/q98 family needs). One writer serves both.
     */
   def docsDirSrc(rows: Seq[(Long, String, String)]): String = {
-    val dir = Files.createTempDirectory("graft_docs").toString
+    val dir = TestSpark.tempDir("graft_docs")
     val s = spark
     import s.implicits._
     rows.toDF("doc_id", "text", "source")
@@ -52,7 +64,7 @@ trait SparkSpec extends AnyFunSuite {
   /** [[embeddingsDir]] with caller-chosen labels (the q109/q127 family
     * reads them; the unlabeled writer pins label = 0). */
   def embeddingsDirLabeled(rows: Seq[(Long, Array[Float], Int)]): String = {
-    val dir = Files.createTempDirectory("graft_embs").toString
+    val dir = TestSpark.tempDir("graft_embs")
     val s = spark
     import s.implicits._
     rows.toDF("vec_id", "embedding", "label")

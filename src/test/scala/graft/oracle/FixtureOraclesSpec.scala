@@ -331,7 +331,7 @@ class FixtureOraclesSpec extends SparkSpec {
     val keep = FixtureOracles.embFixtureDir(name, key, keepBytes)
     val staleOld = FixtureOracles.embFixtureDir(name, key, 2222L)
     val fresh = FixtureOracles.embFixtureDir(name, key, 3333L)
-    val otherKey = FixtureOracles.tmpRoot.resolve(
+    val otherKey = graft.Fs.tmpRoot.resolve(
       s"graft_${FixtureOracles.Version}_${name}_${key._1}_${key._2}1_b9")
     Seq(keep, staleOld, fresh, otherKey).foreach(Files.createDirectories(_))
     try {

@@ -346,14 +346,16 @@ class InspectorStreamSpec extends SparkSpec {
     } finally s.streams.removeListener(tracker)
   }
 
-  test("awaitBounded stops a continuous query after the duration budget") {
+  test("awaitCapped with no cap stops a continuous query at its budget") {
     val s = spark
     val srcDir = java.nio.file.Files.createTempDirectory("graft_duration_bound")
     val query = InspectorStream
       .recordsFromPcapDir(s, srcDir.toString, withIdleTimeout = false)
       .writeStream.format("memory").queryName("duration_bound")
       .outputMode("append").start()
-    InspectorStream.awaitBounded(query, 1500L)
+    InspectorStream.awaitCapped(query,
+      new InspectorStream.ProgressTracker("duration_bound"), Long.MaxValue,
+      durationMs = Some(1500L))
     assert(!query.isActive)
   }
 }

@@ -10,9 +10,10 @@ reviewed pieces — it adds no logic of its own:
   1. ensure the ~10x corpus via `graft.ScaleCorpus` — the SAME
      derivation (and, by default, the same directory) the official
      bench self-upgrades to, so correctness evidence and bench floors
-     describe one dataset (round-14 review: the old split — duckdb
-     derive.py for correctness, ScaleCorpus for timing — duplicated
-     the offset rules with nothing asserting parity). ScaleCorpus's
+     describe one dataset (round-14 review: the old split — a DuckDB
+     derive script for correctness, ScaleCorpus for timing — duplicated
+     the offset rules with nothing asserting parity; the script is
+     deleted). ScaleCorpus's
      fingerprint marker decides reuse vs re-derivation.
   2. full oracle gate there: `sbt "runMain graft.Verify <corpus> <out>"`
      then tools/gate.py (DuckDB driver-compare replication)
@@ -32,8 +33,8 @@ times into the SCALED floor block. A differently-named corpus benches
 with floors inactive and its artifacts route to the wrong block.
 
 `--replicas 100` is the 100x (~sf10) probe gate, folded in from the
-r16 hand-sequenced runner (tools/r16/gate_sf10_runner.py) per that
-round's verdict item 5. Probe mode (any --replicas != 10) switches to
+r16 hand-sequenced runner (since deleted) per that round's verdict
+item 5. Probe mode (any --replicas != 10) switches to
 the protocol the r16 run validated:
   - corpus defaults to /tmp/graft_sf{N//10}s (r16: /tmp/graft_sf10s)
   - Verify runs with SPARK_DRIVER_MEM=48g (the ~27M-entry q31 fixture
