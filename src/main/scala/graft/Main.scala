@@ -5,6 +5,7 @@ import java.io.{BufferedReader, InputStreamReader, PrintStream}
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.inspector.Inspector
 import graft.streaming.{CaptureProcess, InspectorStream, KafkaSink}
@@ -314,6 +315,22 @@ object Main {
     }
   }
 
+  /** Trigger interval of a live `-k` run, well under tcpdump's 60 s
+    * rotation and the 120 s idle timeout. The records query arms the
+    * idle timeout, and Spark runs another micro-batch after every batch
+    * of such a query, data or not; on the default trigger that spins a
+    * drained capture dir through back-to-back empty batches and
+    * checkpoint writes. A fixed interval bounds it to one per interval.
+    */
+  val LiveTriggerMs = 10000L
+
+  /** `-k`'s trigger: a `-c` run replays the directory's current contents
+    * and terminates (AvailableNow); a live run fires every
+    * [[LiveTriggerMs]].
+    */
+  private[graft] def kafkaTrigger(capped: Boolean): Trigger =
+    if (capped) Trigger.AvailableNow() else Trigger.ProcessingTime(LiveTriggerMs)
+
   /** `-v` load preamble: the capture files the pipeline is about to read,
     * listed by the `binaryFile` source itself, so its exclusions (hidden
     * `.`/`_` names, `._COPYING_` uploads) hold here too.
@@ -364,10 +381,8 @@ object Main {
       else None
       val checkpoint = ckpt.getOrElse(ownCkpt.get.toString)
       val name = s"graft-kafka-${java.util.UUID.randomUUID()}"
-      var writer = KafkaSink.writeStream(json, parsed, checkpoint).queryName(name)
-      if (maxRecords.isDefined)
-        writer = writer.trigger(
-          org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      val writer = KafkaSink.writeStream(json, parsed, checkpoint).queryName(name)
+        .trigger(kafkaTrigger(capped = maxRecords.isDefined))
       val report: (Long, Long, Long) => Unit =
         if (verbose) (batch, n, total) =>
           out.println(s"[v] trigger $batch: $n records ($total total)")

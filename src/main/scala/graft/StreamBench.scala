@@ -47,14 +47,14 @@ import graft.streaming.{InspectorStream, StreamingOps}
   * Settings (env): SPARK_GRAFT_CPUS (session cores, default 32) and
   * SPARK_GRAFT_SF_DIR (documents corpus; default the 10x gate corpus,
   * falling back to sf0.1 with a notice). The pcap volume is fixed:
-  * [[PcapConns]] x [[PcapCalls]] over [[PcapFiles]] rotated files, about
-  * 870k messages.
+  * [[PcapConns]] x [[PcapCalls]] over [[PcapFiles]] rotated files,
+  * 921,600 messages.
   */
 object StreamBench {
 
   /** Leg 1's synthetic capture: connections, calls per connection, files. */
-  final val PcapConns = 256
-  final val PcapCalls = 200
+  final val PcapConns = 1024
+  final val PcapCalls = 400
   final val PcapFiles = 16
 
   final case class Leg(name: String, rowsIn: Long, rowsOut: Long,

@@ -1,7 +1,5 @@
 package graft.proto
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Zero-dependency protobuf wire-format reader/writer.
   *
   * The reference decodes HBase RPC bodies with protobuf-java generated
@@ -12,9 +10,9 @@ import scala.collection.mutable.ArrayBuffer
   * (https://protobuf.dev/programming-guides/encoding/): no generated code,
   * no external dependency, safe to ship inside executor tasks.
   *
-  * Two read forms share one field loop ([[FieldCursor]]): a [[Slice]]
-  * reads a message in place (the HBase RPC decode), a [[Msg]] is the
-  * walked message copied into a field map (TFRecord examples).
+  * One read form: a [[Slice]] reads a message in place over the one
+  * field loop ([[FieldCursor]]), for both the HBase RPC decode and
+  * TFRecord's `tf.train.Example`.
   *
   * The writer half exists so tests and the synthetic-traffic generator can
   * hand-encode messages (SURVEY §6: "protobuf messages hand-encoded via
@@ -134,10 +132,11 @@ object ProtoWire {
   }
 
   /** One message read in place: the range `[start, end)` of `buf`. Making
-    * a slice walks every field once, so it throws exactly where [[parse]]
-    * would; the accessors walk it again and copy nothing but the strings
+    * a slice walks every field once, so a malformed message throws at
+    * construction; the accessors walk it again and copy nothing but what
     * they return. A nested message is sliced (and so checked) only when
-    * read. Scalar accessors are last-wins, like [[Msg]]'s.
+    * read. Scalar accessors take the last occurrence: proto2/proto3 are
+    * last-wins for a duplicated non-repeated field.
     */
   final class Slice(val buf: Array[Byte], val start: Int, val end: Int) {
     locally { val c = cursor; while (c.next()) () }
@@ -181,6 +180,14 @@ object ProtoWire {
       while (c.next()) if (c.field == f && c.wireType == WtLenDelim) n += 1
       n
     }
+    /** `fn(buf, offset, length)` over every length-delimited occurrence
+      * of `f`, in order, as raw bytes (none is parsed).
+      */
+    def foreachBytes(f: Int)(fn: (Array[Byte], Int, Int) => Unit): Unit = {
+      val c = cursor
+      while (c.next()) if (c.field == f && c.wireType == WtLenDelim)
+        fn(buf, c.valueStart, c.pos - c.valueStart)
+    }
     /** Every length-delimited occurrence of `f` as a message, in order. */
     def foreachMsg(f: Int)(fn: Slice => Unit): Unit = {
       val c = cursor
@@ -198,66 +205,22 @@ object ProtoWire {
         }
       }
     }
+    /** Every value of a repeated fixed32 field `f`, packed or not; a
+      * packed run's trailing 1-3 bytes are ignored.
+      */
+    def foreachFixed32(f: Int)(fn: Int => Unit): Unit = {
+      val c = cursor
+      while (c.next()) if (c.field == f) {
+        if (c.wireType == WtFixed32) fn(c.value.toInt)
+        else if (c.wireType == WtLenDelim) {
+          val packed = new Reader(buf, c.valueStart, c.pos)
+          while (packed.remaining >= 4) fn(packed.readFixed32())
+        }
+      }
+    }
   }
 
   val EmptySlice: Slice = new Slice(Array.emptyByteArray, 0, 0)
-
-  def zigzagDecode(v: Long): Long = (v >>> 1) ^ -(v & 1)
-  def zigzagEncode(v: Long): Long = (v << 1) ^ (v >> 63)
-
-  /** One decoded field occurrence. */
-  sealed trait Value
-  final case class VarintV(v: Long) extends Value
-  final case class Fixed32V(v: Int) extends Value
-  final case class Fixed64V(v: Long) extends Value
-  final case class BytesV(bytes: Array[Byte]) extends Value
-
-  /** A fully-walked message: field number -> values in encoding order.
-    * Accessors mirror generated-code getters loosely (`getFoo`,
-    * `hasFoo`, `getFooList`).
-    */
-  final class Msg(val fields: Map[Int, Vector[Value]]) {
-    def has(f: Int): Boolean = fields.contains(f)
-    // Scalar accessors take the LAST occurrence: proto2/proto3 semantics
-    // (and the reference's generated parsers) are last-wins for duplicated
-    // non-repeated fields.
-    def varint(f: Int): Option[Long] =
-      fields.get(f).flatMap(_.collect { case VarintV(v) => v }.lastOption)
-    def varintOr(f: Int, dflt: Long): Long = varint(f).getOrElse(dflt)
-    def bool(f: Int): Boolean = varintOr(f, 0L) != 0L
-    def varints(f: Int): Vector[Long] =
-      fields.getOrElse(f, Vector.empty).collect { case VarintV(v) => v }
-    def bytes(f: Int): Option[Array[Byte]] =
-      fields.get(f).flatMap(_.collect { case BytesV(b) => b }.lastOption)
-    def bytesList(f: Int): Vector[Array[Byte]] =
-      fields.getOrElse(f, Vector.empty).collect { case BytesV(b) => b }
-    def string(f: Int): Option[String] =
-      bytes(f).map(b => new String(b, java.nio.charset.StandardCharsets.UTF_8))
-    def msg(f: Int): Option[Msg] = bytes(f).map(parse)
-    def msgs(f: Int): Vector[Msg] = bytesList(f).map(parse)
-  }
-
-  /** Walks every field of the message slice into a [[Msg]], copying each
-    * length-delimited value. Unknown fields are retained (we dispatch on
-    * field numbers).
-    */
-  def parse(r: Reader): Msg = {
-    val c = new FieldCursor(r.buf, r.pos, r.end)
-    val acc = scala.collection.mutable.LinkedHashMap.empty[Int, ArrayBuffer[Value]]
-    while (c.next()) {
-      val v: Value = c.wireType match {
-        case WtVarint   => VarintV(c.value)
-        case WtFixed64  => Fixed64V(c.value)
-        case WtLenDelim => BytesV(java.util.Arrays.copyOfRange(c.buf, c.valueStart, c.pos))
-        case _          => Fixed32V(c.value.toInt)
-      }
-      acc.getOrElseUpdate(c.field, ArrayBuffer.empty) += v
-    }
-    r.pos = c.pos
-    new Msg(acc.view.mapValues(_.toVector).toMap)
-  }
-
-  def parse(bytes: Array[Byte]): Msg = parse(new Reader(bytes))
 
   /** Minimal writer — enough to hand-encode HBase RPC shapes in tests and
     * the synthetic traffic generator.

@@ -24,10 +24,10 @@ import graft.proto.ProtoWire
   * JDK 9+ ships CRC32C (java.util.zip), so the codec stays dependency-free.
   *
   * Payload convention: `tf.train.Example` protobuf — a string-keyed map of
-  * bytes/float/int64 lists — encoded with the same zero-dep [[ProtoWire]]
-  * walker the HBase RPC decoder uses. The reader accepts both packed and
-  * unpacked repeated encodings (protobuf parsers must); the writer emits
-  * packed, matching protoc.
+  * bytes/float/int64 lists — read in place with the same zero-dep
+  * [[ProtoWire.Slice]] the HBase RPC decoder uses. The reader accepts
+  * both packed and unpacked repeated encodings (protobuf parsers must);
+  * the writer emits packed, matching protoc.
   *
   * Scale posture: one file = one task streamed through [[FileRecords]]
   * (the pcap/WARC ingest shape — framing is sequential, files are the parallel
@@ -168,47 +168,33 @@ object TfRecord {
     new ProtoWire.Writer().msg(1, featuresMsg).toBytes
   }
 
-  /** Decode a tf.train.Example to its feature map. Accepts packed AND
-    * unpacked repeated encodings (both are wire-legal from any writer).
+  /** Decode a tf.train.Example to its feature map, read in place through
+    * [[ProtoWire.Slice]]. Accepts packed AND unpacked repeated encodings,
+    * mixed too (both are wire-legal from any writer); an entry without a
+    * key or value is skipped, and the last entry per name wins.
     */
   def decodeExample(bytes: Array[Byte]): Map[String, Feature] = {
-    val example = ProtoWire.parse(bytes)
-    example.msg(1).map { features =>
-      features.msgs(1).flatMap { entry =>
-        for {
-          name <- entry.string(1)
-          featureMsg <- entry.msg(2)
-        } yield name -> decodeFeature(featureMsg)
-      }.toMap
-    }.getOrElse(Map.empty)
+    val out = Map.newBuilder[String, Feature]
+    new ProtoWire.Slice(bytes, 0, bytes.length).msg(1).foreach(_.foreachMsg(1) { entry =>
+      for (name <- entry.string(1); feature <- entry.msg(2)) out += name -> decodeFeature(feature)
+    })
+    out.result()
   }
 
-  private def decodeFeature(m: ProtoWire.Msg): Feature =
-    if (m.has(1)) BytesFeature(m.msg(1).map(_.bytesList(1)).getOrElse(Vector.empty))
-    else if (m.has(2)) FloatFeature(m.msg(2).map(packedFloats).getOrElse(Vector.empty))
-    else Int64Feature(m.msg(3).map(packedInt64s).getOrElse(Vector.empty))
-
-  /** FloatList values: packed (one BytesV of LE fixed32s) or unpacked
-    * (repeated Fixed32V), possibly mixed — the protobuf merge rule.
-    */
-  private def packedFloats(list: ProtoWire.Msg): Vector[Float] =
-    list.fields.getOrElse(1, Vector.empty).flatMap {
-      case ProtoWire.Fixed32V(v) => Vector(java.lang.Float.intBitsToFloat(v))
-      case ProtoWire.BytesV(b) =>
-        val buf = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
-        Vector.fill(b.length / 4)(buf.getFloat)
-      case _ => Vector.empty
-    }
-
-  private def packedInt64s(list: ProtoWire.Msg): Vector[Long] =
-    list.fields.getOrElse(1, Vector.empty).flatMap {
-      case ProtoWire.VarintV(v) => Vector(v)
-      case ProtoWire.BytesV(b) =>
-        val r = new ProtoWire.Reader(b)
-        val out = Vector.newBuilder[Long]
-        while (r.hasRemaining) out += r.readVarint()
-        out.result()
-      case _ => Vector.empty
+  private def decodeFeature(m: ProtoWire.Slice): Feature =
+    if (m.has(1)) {
+      val vs = Vector.newBuilder[Array[Byte]]
+      m.msg(1).foreach(_.foreachBytes(1)((b, off, len) =>
+        vs += java.util.Arrays.copyOfRange(b, off, off + len)))
+      BytesFeature(vs.result())
+    } else if (m.has(2)) {
+      val vs = Vector.newBuilder[Float]
+      m.msg(2).foreach(_.foreachFixed32(1)(v => vs += java.lang.Float.intBitsToFloat(v)))
+      FloatFeature(vs.result())
+    } else {
+      val vs = Vector.newBuilder[Long]
+      m.msg(3).foreach(_.foreachVarint(1)(vs += _))
+      Int64Feature(vs.result())
     }
 
   /** TFRecord files → one row per record (one file = one task, streamed

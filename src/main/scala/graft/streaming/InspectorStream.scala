@@ -185,11 +185,14 @@ chmod +x ${shq(rotate)} && tcpdump $tcpdump"""
   private def shq(s: String): String = "'" + s.replace("'", "'\\''") + "'"
 
   /** `withIdleTimeout = true` (production) arms the per-connection
-    * ProcessingTime timeout (120 s idle → state dropped). Note the engine
-    * then schedules extra timeout-check micro-batches between data
-    * arrivals; deterministic tests pass `false` and rely on the
-    * event-ts-relative expiry [[ConnTracker.run]] applies after each
-    * capture file, which runs either way.
+    * ProcessingTime timeout (120 s idle → state dropped). Spark then runs
+    * another micro-batch after every batch, data or not, to check the
+    * timeouts, so on the default trigger a drained directory spins
+    * through back-to-back empty batches; the CLI's live `-k` run pins a
+    * fixed interval ([[graft.Main.LiveTriggerMs]]) for that reason.
+    * Deterministic tests pass `false` and rely on the event-ts-relative
+    * expiry [[ConnTracker.run]] applies after each capture file, which
+    * runs either way.
     */
   def records(segments: Dataset[KeyedSegment],
               withIdleTimeout: Boolean = true): Dataset[RecordInfo] = {

@@ -315,7 +315,7 @@ class MainSpec extends SparkSpec {
   test("-v lists only the files the binaryFile source reads") {
     import java.nio.file.{Files, Paths}
     val src = Paths.get(SyntheticTraffic.ensurePcapDir())
-    val dir = Files.createTempDirectory("graft_v_listing")
+    val dir = java.nio.file.Paths.get(TestSpark.tempDir("graft_v_listing"))
     try {
       Seq("capture-00001.pcap", "capture-00002.pcap").foreach(n =>
         Files.copy(src.resolve(n), dir.resolve(n)))

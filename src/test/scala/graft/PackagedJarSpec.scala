@@ -34,7 +34,7 @@ class PackagedJarSpec extends AnyFunSuite {
     // output to a file, NOT a pipe read before waitFor: a child hung in
     // session init with stdout open would block an eager readAllBytes
     // forever and the timeout below could never fire
-    val outFile = java.nio.file.Files.createTempFile("graft_jar_smoke", ".out")
+    val outFile = java.nio.file.Paths.get(TestSpark.tempDir("graft_jar_smoke"), "cli.out")
     val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true)
       .redirectOutput(outFile.toFile)
     pb.environment().put("SPARK_MASTER", "local[2]")

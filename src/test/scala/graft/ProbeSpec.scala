@@ -29,7 +29,7 @@ class ProbeSpec extends SparkSpec {
     assert(ab.count(_.matches("""\[probe\] q39_\w+ rep1: [\d.]+ s gc=.* steal=.*""")) === 2, ab)
     assert(ab.count(_.startsWith("[probe] MEDIAN q39_")) === 2, ab)
 
-    val out = Files.createTempDirectory("graft_probe")
+    val out = java.nio.file.Paths.get(TestSpark.tempDir("graft_probe"))
     val plan = lines("plan", dir, out.toString, "smoke", "q69_dup_spans")
     assert(plan.exists(_.endsWith("(checkpoint sources: 1)")), plan)
     val text = Files.readString(out.resolve("q69_dup_spans_smoke.txt"))

@@ -9,7 +9,7 @@ import org.apache.orc.protobuf.DescriptorProtos.FieldDescriptorProto.{Label, Typ
 import org.apache.orc.protobuf.Descriptors
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.proto.{HbaseRpc, ProtoWire}
+import graft.proto.{FieldMap, HbaseRpc, ProtoWire}
 
 /** Differential fuzz of the zero-dep [[ProtoWire]] walker/writer and the
   * [[HbaseRpc]] request decode against the REAL protobuf runtime — the
@@ -32,10 +32,11 @@ import graft.proto.{HbaseRpc, ProtoWire}
   *     DynamicMessage's content is BYTE-IDENTICAL to protobuf's own
   *     toByteArray (both write fields in number order, canonical
   *     varints).
-  *  2. walker ≡ parser: ProtoWire.parse over protobuf-serialized bytes
-  *     recovers exactly the fields the DynamicMessage carries — field
-  *     numbers, occurrence order, values, nested messages — and nothing
-  *     else.
+  *  2. walker ≡ parser: [[FieldMap.parse]] (the shipped field loop,
+  *     every occurrence copied into a field map) over protobuf-serialized
+  *     bytes recovers exactly the fields the DynamicMessage carries —
+  *     field numbers, occurrence order, values, nested messages — and
+  *     nothing else.
   *  3. HbaseRpc end-to-end: full request frames assembled with
   *     protobuf's own writeDelimitedTo (RequestHeader + param message)
   *     decode to the RpcInfo the DynamicMessage getters predict.
@@ -230,14 +231,14 @@ class ProtoDifferentialSpec extends AnyFunSuite {
     w.toBytes
   }
 
-  // --- direction 2: ProtoWire.parse ≡ protobuf content -------------------
+  // --- direction 2: FieldMap.parse ≡ protobuf content --------------------
 
   /** Assert the walked Msg carries exactly the DynamicMessage's fields:
     * same field-number set, same per-field occurrence lists, nested
     * messages compared recursively. (Packed repeated scalars are the
     * one legitimate shape difference and are asserted separately.)
     */
-  private def assertWalkerMatches(m: DynamicMessage, walked: ProtoWire.Msg): Unit = {
+  private def assertWalkerMatches(m: DynamicMessage, walked: FieldMap.Msg): Unit = {
     val expectedNums = m.getAllFields.keySet.asScala.map(_.getNumber).toSet
     assert(walked.fields.keySet === expectedNums,
       s"walker saw fields ${walked.fields.keySet}, protobuf has $expectedNums")
@@ -291,13 +292,13 @@ class ProtoDifferentialSpec extends AnyFunSuite {
     }
   }
 
-  test("walker: ProtoWire.parse over protobuf bytes recovers exactly the " +
+  test("walker: FieldMap.parse over protobuf bytes recovers exactly the " +
       "protobuf content (120 random messages x 12 shapes)") {
     val rnd = new Random(0x3A1C)
     for (shape <- shapes; i <- 1 to 120) {
       val m = randomMessage(desc(shape), rnd)
       withClue(s"$shape #$i:\n$m\n") {
-        assertWalkerMatches(m, ProtoWire.parse(m.toByteArray))
+        assertWalkerMatches(m, FieldMap.parse(m.toByteArray))
       }
     }
   }
@@ -324,16 +325,9 @@ class ProtoDifferentialSpec extends AnyFunSuite {
       // our walker, through the same both-encodings accessor HbaseRpc
       // uses for cells_per_result, agrees on each
       def walkCounts(bytes: Array[Byte]): Vector[Long] = {
-        val walked = ProtoWire.parse(bytes)
-        walked.fields.getOrElse(1, Vector.empty).flatMap {
-          case ProtoWire.VarintV(v) => Vector(v)
-          case ProtoWire.BytesV(b2) =>
-            val r = new ProtoWire.Reader(b2)
-            val out = Vector.newBuilder[Long]
-            while (r.hasRemaining) out += r.readVarint()
-            out.result()
-          case _ => Vector.empty
-        }
+        val out = Vector.newBuilder[Long]
+        new ProtoWire.Slice(bytes, 0, bytes.length).foreachVarint(1)(out += _)
+        out.result()
       }
       assert(walkCounts(unpacked.toByteArray) === counts.map(_.toLong))
       assert(walkCounts(packed.toByteArray) === counts.map(_.toLong))
@@ -686,7 +680,7 @@ class ProtoDifferentialSpec extends AnyFunSuite {
       val out = new java.io.ByteArrayOutputStream()
       m.writeDelimitedTo(out)
       assertWalkerMatches(m,
-        ProtoWire.parse(new ProtoWire.Reader(out.toByteArray).readDelimited()))
+        FieldMap.parse(new ProtoWire.Reader(out.toByteArray).readDelimited()))
       // ProtoWire-delimited -> protobuf parseDelimitedFrom: the body is
       // a full ProtoWire re-encoding, the length prefix a ProtoWire varint
       val body = protoWireEncode(m)

@@ -16,7 +16,7 @@ class ScaleCorpusSpec extends SparkSpec {
   private val src = "/root/testdata/sf0.001"
 
   private lazy val out: String = {
-    val dir = Files.createTempDirectory("graft_scale").toString
+    val dir = TestSpark.tempDir("graft_scale")
     ScaleCorpus.derive(spark, src, dir)
     dir
   }
@@ -76,7 +76,7 @@ class ScaleCorpusSpec extends SparkSpec {
   }
 
   test("probe plant: replicas 0..9 byte-identical, k >= 10 plants the tail") {
-    val dir = Files.createTempDirectory("graft_scale_pl").toString
+    val dir = TestSpark.tempDir("graft_scale_pl")
     ScaleCorpus.derive(spark, src, dir, replicas = 12)
     val srcText = spark.read.parquet(s"$src/documents.parquet")
       .filter(col("doc_id").isin(0L, 1L, 2L))
@@ -146,7 +146,7 @@ class ScaleCorpusSpec extends SparkSpec {
   }
 
   test("replicas parameter: derived counts scale, marker binds the count") {
-    val dir = Files.createTempDirectory("graft_scale_r3").toString
+    val dir = TestSpark.tempDir("graft_scale_r3")
     ScaleCorpus.derive(spark, src, dir, replicas = 3)
     val n0 = spark.read.parquet(s"$src/documents.parquet").count()
     val n1 = spark.read.parquet(s"$dir/documents.parquet").count()
@@ -158,7 +158,7 @@ class ScaleCorpusSpec extends SparkSpec {
   }
 
   test("marker content verification: post-derivation corruption fails ready") {
-    val dir = Files.createTempDirectory("graft_scale_cv").toString
+    val dir = TestSpark.tempDir("graft_scale_cv")
     ScaleCorpus.derive(spark, src, dir, replicas = 2)
     assert(ScaleCorpus.ready(src, dir, replicas = 2))
     // delete ONE data file inside a table dir (marker + dir still exist):
@@ -177,7 +177,7 @@ class ScaleCorpusSpec extends SparkSpec {
     // the already-derived x10 corpus has doc_id up to max+9*5000, far
     // above the 5000 offset — re-deriving FROM it must throw loudly
     // instead of silently producing colliding replica ids
-    val dir = Files.createTempDirectory("graft_scale_dj").toString
+    val dir = TestSpark.tempDir("graft_scale_dj")
     val e = intercept[IllegalArgumentException] {
       ScaleCorpus.derive(spark, out, dir)
     }
@@ -188,7 +188,7 @@ class ScaleCorpusSpec extends SparkSpec {
   test("derive is staged: a valid corpus is never clobbered in place, and re-derive replaces a stale one") {
     // point ensure at a STALE corpus (marker for a different replica
     // count): it must re-derive, publish atomically, and end ready
-    val dir = Files.createTempDirectory("graft_scale_st").toString
+    val dir = TestSpark.tempDir("graft_scale_st")
     ScaleCorpus.derive(spark, src, dir, replicas = 2)
     assert(!ScaleCorpus.ready(src, dir, replicas = 3))
     assert(!ScaleCorpus.ensure(spark, src, dir, replicas = 3), "must re-derive")

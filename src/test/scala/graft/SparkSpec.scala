@@ -20,8 +20,8 @@ object TestSpark {
     s
   }
 
-  /** Temp dirs of the shared fixture writers, deleted at JVM exit: specs
-    * read them lazily, so no test can delete its own.
+  /** Every spec's temp dirs, deleted at JVM exit by one hook: the shared
+    * fixture writers' dirs are read lazily, so no test can delete its own.
     */
   private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
   sys.addShutdownHook(tempDirs.forEach(p => Fs.deleteTree(p)))

@@ -31,7 +31,7 @@ class CrossFileSpec extends SparkSpec {
         LinkDecode.encode(client, port, SyntheticTraffic.Server,
           SyntheticTraffic.Port, payload)).toBytes
 
-    val dir = Files.createTempDirectory("graft_crossfile")
+    val dir = Paths.get(graft.TestSpark.tempDir("graft_crossfile"))
     Files.write(dir.resolve("rot-1.pcap"), pcap(1000L, half1))
     Files.write(dir.resolve("rot-2.pcap"), pcap(2000L, half2))
 
@@ -72,7 +72,7 @@ class CrossFileSpec extends SparkSpec {
     val file2 = (new PcapFile.Writer)
       .record(2000L * 1000L, eth(half2)).toBytes
 
-    val dir = Files.createTempDirectory("graft_msboundary")
+    val dir = Paths.get(graft.TestSpark.tempDir("graft_msboundary"))
     Files.write(dir.resolve("rot-1.pcap"), file1)
     Files.write(dir.resolve("rot-2.pcap"), file2)
 

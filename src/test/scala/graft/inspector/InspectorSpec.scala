@@ -48,7 +48,7 @@ class InspectorSpec extends SparkSpec {
       .record(1000000L, LinkDecode.encode6(v6client, 42000, srv6, 16020, req))
       .record(2000000L, LinkDecode.encode6(srv6, 16020, v6client, 42000, res))
       .toBytes
-    val d = java.nio.file.Files.createTempDirectory("graft_v6")
+    val d = java.nio.file.Paths.get(graft.TestSpark.tempDir("graft_v6"))
     java.nio.file.Files.write(d.resolve("v6.pcap"), pcap)
     val recs6 = Inspector.records(spark, d.toString)
     val rq = Inspector.requests(recs6).collect()
@@ -176,7 +176,7 @@ class InspectorSpec extends SparkSpec {
   test("gzipped captures decode identically through the batch pipeline") {
     import java.nio.file.{Files, Paths}
     val src = Paths.get(dir).resolve("capture-00001.pcap")
-    val gzDir = Files.createTempDirectory("graft_gz")
+    val gzDir = java.nio.file.Paths.get(graft.TestSpark.tempDir("graft_gz"))
     val bos = new java.io.ByteArrayOutputStream()
     val g = new java.util.zip.GZIPOutputStream(bos)
     g.write(Files.readAllBytes(src)); g.close()

@@ -72,7 +72,7 @@ class ReassemblyPropertySpec extends AnyFunSuite {
         case (f, Left(v))  => w.varint(f, v)
         case (f, Right(s)) => w.string(f, s)
       }
-      val m = graft.proto.ProtoWire.parse(w.toBytes)
+      val m = graft.proto.FieldMap.parse(w.toBytes)
       fields.groupBy(_._1).foreach { case (f, occ) =>
         occ.last._2 match {
           case Left(v)  => assert(m.varint(f) === Some(v), s"trial $trial field $f")

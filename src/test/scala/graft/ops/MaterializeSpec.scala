@@ -2,7 +2,7 @@ package graft.ops
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkSpec
+import graft.{SparkSpec, TestSpark}
 
 class MaterializeSpec extends SparkSpec {
 
@@ -54,7 +54,7 @@ class MaterializeSpec extends SparkSpec {
 
   test("sources lists the frames behind nested checkpoints in both modes; free drops them") {
     checkSources()
-    spark.sparkContext.setCheckpointDir(Files.createTempDirectory("graft_ckpt").toString)
+    spark.sparkContext.setCheckpointDir(TestSpark.tempDir("graft_ckpt"))
     spark.conf.set(Materialize.ReliableFlag, "true")
     try checkSources()
     finally spark.conf.unset(Materialize.ReliableFlag)
@@ -77,7 +77,7 @@ class MaterializeSpec extends SparkSpec {
   }
 
   test("reliable flag writes through the SparkContext checkpoint dir") {
-    val dir = Files.createTempDirectory("graft_ckpt").toString
+    val dir = TestSpark.tempDir("graft_ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     spark.conf.set(Materialize.ReliableFlag, "true")
     try {

@@ -1,8 +1,6 @@
 package graft.ops
 
-import java.nio.file.Files
-
-import graft.SparkSpec
+import graft.{SparkSpec, TestSpark}
 
 /** Direct specs for the relational surface's composed operators (the
   * simple aggregates are covered by the driver's DuckDB gate; these cover
@@ -15,7 +13,7 @@ class RelationalSpec extends SparkSpec {
     * the dir. Rows are (event_id, ts_ns, user_id, event_type).
     */
   private def eventsDir(rows: Seq[(Long, Long, Long, String)]): String = {
-    val dir = Files.createTempDirectory("graft_events").toString
+    val dir = TestSpark.tempDir("graft_events")
     val s = spark
     import s.implicits._
     rows.toDF("event_id", "ts", "user_id", "event_type")
@@ -29,7 +27,7 @@ class RelationalSpec extends SparkSpec {
     // the regenerated-testdata spelling: timestamp[us] without the UTC
     // flag, which Spark reads as TIMESTAMP_NTZ — the loader must surface
     // the same epoch-nanos Long the TIMESTAMP(NANOS) generation gave
-    val dir = Files.createTempDirectory("graft_events_ntz").toString
+    val dir = TestSpark.tempDir("graft_events_ntz")
     val s = spark
     import s.implicits._
     Seq((1L, 1234567L, 7L, "view"))

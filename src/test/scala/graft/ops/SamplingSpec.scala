@@ -23,7 +23,7 @@ class SamplingSpec extends SparkSpec {
     val rows = (1L to 37L).map(i => (i, s"text $i"))
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_strat").toString
+    val dir = graft.TestSpark.tempDir("graft_strat")
     // two strata of different sizes: 25 en, 12 fr
     rows.toDF("doc_id", "text")
       .withColumn("lang", when(col("doc_id") <= 25, "en").otherwise("fr"))

@@ -52,7 +52,7 @@ class FixtureOraclesSpec extends SparkSpec {
   // docsDir can't carry a null text through toDF on (Long, String) tuples
   // with length(text); write the null-bearing frame by hand instead
   private lazy val nullDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_fx_docs").toString
+    val d = graft.TestSpark.tempDir("graft_fx_docs")
     val s = spark
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

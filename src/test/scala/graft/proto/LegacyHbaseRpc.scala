@@ -2,13 +2,14 @@ package graft.proto
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import ProtoWire.{Msg, Reader}
+import FieldMap.Msg
+import ProtoWire.Reader
 import HbaseRpc.{DecodeException, RpcAction, RpcInfo, RpcResult}
 
 /** The HBase RPC decoder that [[HbaseRpc]]'s in-place slice decode
   * replaced, kept as the differential oracle of `HbaseRpcDifferentialSpec`:
   * each message walked into a `Map[Int, Vector[Value]]` by
-  * [[ProtoWire.parse]], nested messages copied out, a regex for the method
+  * [[FieldMap.parse]], nested messages copied out, a regex for the method
   * name. Only the output case classes are shared with [[HbaseRpc]]; the
   * byte and name helpers are its own copies.
   *
@@ -142,8 +143,8 @@ object LegacyHbaseRpc {
     */
   private def repeatedVarints(m: Msg, f: Int): Vector[Long] =
     m.fields.getOrElse(f, Vector.empty).flatMap {
-      case ProtoWire.VarintV(v) => Vector(v)
-      case ProtoWire.BytesV(b) =>
+      case FieldMap.VarintV(v) => Vector(v)
+      case FieldMap.BytesV(b) =>
         val r = new Reader(b)
         val out = Vector.newBuilder[Long]
         while (r.hasRemaining) out += r.readVarint()
@@ -252,7 +253,7 @@ object LegacyHbaseRpc {
     * message (reference hbase.clj:208-245 parse-request).
     */
   def parseRequest(r: Reader): RpcInfo = {
-    val header = ProtoWire.parse(r.readDelimited())
+    val header = FieldMap.parse(r.readDelimited())
     val rawMethod = header.string(F.ReqMethodName).getOrElse("")
     if (!rawMethod.matches("[a-zA-Z]+"))
       throw new DecodeException(s"Invalid method name: $rawMethod")
@@ -262,7 +263,7 @@ object LegacyHbaseRpc {
     val base = RpcInfo(method, callId)
     if (!hasParam) base
     else {
-      val body = () => ProtoWire.parse(r.readDelimited())
+      val body = () => FieldMap.parse(r.readDelimited())
       val parsed = method match {
         case "get"             => parseGetRequest(body())
         case "scan"            => parseScanRequest(body())
@@ -284,7 +285,7 @@ object LegacyHbaseRpc {
     * request context comes from the finder (reference hbase.clj:71-99).
     */
   def parseResponse(r: Reader, requestFinder: Int => Option[RpcInfo]): RpcInfo = {
-    val header = ProtoWire.parse(r.readDelimited())
+    val header = FieldMap.parse(r.readDelimited())
     val callId = header.varintOr(F.ResCallId, 0L).toInt
     val error = header.msg(F.ResException).flatMap(_.string(F.ExcClassName))
     val request = requestFinder(callId)
@@ -299,15 +300,15 @@ object LegacyHbaseRpc {
 
     method match {
       case "open-scanner" | "next-rows" | "close-scanner" | "small-scan" =>
-        val resp = ProtoWire.parse(r.readDelimited())
+        val resp = FieldMap.parse(r.readDelimited())
         base.copy(
           scanner = Some(resp.varintOr(F.ScanResScannerId, 0L)),
           cells = Some(repeatedVarints(resp, F.ScanResCellsPerResult).map(_.toInt).sum))
       case "get" =>
-        val resp = ProtoWire.parse(r.readDelimited())
+        val resp = FieldMap.parse(r.readDelimited())
         base.copy(cells = Some(resp.msg(F.GetResResult).map(resultCells).getOrElse(0)))
       case "multi" =>
-        val resp = ProtoWire.parse(r.readDelimited())
+        val resp = FieldMap.parse(r.readDelimited())
         val perAction = for {
           rar <- resp.msgs(F.MultiResRar)
           roe <- rar.msgs(F.RarRoe)

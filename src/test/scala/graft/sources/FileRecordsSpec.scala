@@ -32,7 +32,7 @@ class FileRecordsSpec extends SparkSpec {
 
   test("binaryFile content is never read: every source decodes past maxLength") {
     val pcaps = Paths.get(SyntheticTraffic.ensurePcapDir())
-    val docs = Files.createTempDirectory("graft_file_records")
+    val docs = Paths.get(graft.TestSpark.tempDir("graft_file_records"))
     Files.write(docs.resolve("a.warc"), Warc.render(Seq(
       Warc.WarcRecord("response", "<urn:uuid:1>", "doc://1", "2026-01-01T00:00:00Z",
         "text/plain", "a WARC payload longer than the limit".getBytes(StandardCharsets.UTF_8)))))

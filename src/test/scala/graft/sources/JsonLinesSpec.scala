@@ -19,7 +19,7 @@ class JsonLinesSpec extends SparkSpec {
       (5L, null.asInstanceOf[String]),
       (6L, ""))
     val df = rows.toDF("doc_id", "text")
-    val path = Files.createTempDirectory("graft_jsonl_spec").toString + "/out"
+    val path = graft.TestSpark.tempDir("graft_jsonl_spec") + "/out"
     JsonLines.write(df, path)
     // gzip actually applied (line framing survives compression)
     val files = new java.io.File(path).listFiles()

@@ -134,7 +134,7 @@ class TfRecordSpec extends SparkSpec {
   }
 
   test("read(): one row per record across plain and gzipped shards") {
-    val dir = Files.createTempDirectory("graft_tfrecord").toString
+    val dir = graft.TestSpark.tempDir("graft_tfrecord")
     Files.write(java.nio.file.Paths.get(dir, "a.tfrecord"),
       render(Seq(encodeExample(Seq("doc_id" -> Feature.of(1L))),
         encodeExample(Seq("doc_id" -> Feature.of(2L))))))

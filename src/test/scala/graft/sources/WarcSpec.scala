@@ -63,7 +63,7 @@ class WarcSpec extends SparkSpec {
   }
 
   test("read(): one row per record across plain and gzipped files") {
-    val dir = Files.createTempDirectory("graft_warc").toString
+    val dir = graft.TestSpark.tempDir("graft_warc")
     Files.write(java.nio.file.Paths.get(dir, "a.warc"),
       Warc.render(Seq(rec(1, "alpha"), rec(2, "beta"))))
     Files.write(java.nio.file.Paths.get(dir, "b.warc.gz"),

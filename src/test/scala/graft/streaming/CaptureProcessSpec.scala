@@ -8,8 +8,7 @@ import scala.jdk.CollectionConverters._
 
 class CaptureProcessSpec extends AnyFunSuite {
 
-  private def tmpDir(): String =
-    Files.createTempDirectory("graft_capture").toString
+  private def tmpDir(): String = graft.TestSpark.tempDir("graft_capture")
 
   test("stop terminates the whole process tree, idempotently") {
     val dir = tmpDir()

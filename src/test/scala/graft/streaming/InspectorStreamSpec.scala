@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SparkSpec, TestSpark}
 import graft.inspector.{Inspector, KeyedSegment, SyntheticTraffic}
 
 class InspectorStreamSpec extends SparkSpec {
@@ -111,7 +111,7 @@ class InspectorStreamSpec extends SparkSpec {
       Seq((126000L, "10.8.8.1", false, res(1)), (130000L, "10.8.8.3", true, getReq(31, "c")),
         (130000L, "10.8.8.2", false, res(6)), (131000L, "10.8.8.4", false, res(40))),
       Seq((200000L, "10.8.8.3", true, nextRows), (200000L, "10.8.8.1", false, res(2))))
-    val dir = Files.createTempDirectory("graft_rotation_parity")
+    val dir = Path.of(TestSpark.tempDir("graft_rotation_parity"))
     val mtime0 = System.currentTimeMillis() - 60000L
     files.zipWithIndex.foreach { case (recs, i) =>
       val w = new PcapFile.Writer
@@ -159,7 +159,7 @@ class InspectorStreamSpec extends SparkSpec {
   test("pcap-dir file source: rotated files processed incrementally, state crosses files") {
     val s = spark
     import java.nio.file.{Files, Paths}
-    val srcDir = Files.createTempDirectory("graft_stream_pcap")
+    val srcDir = Paths.get(TestSpark.tempDir("graft_stream_pcap"))
     val pcaps = Paths.get(SyntheticTraffic.ensurePcapDir())
     val query = InspectorStream
       .recordsFromPcapDir(s, srcDir.toString, withIdleTimeout = false)
@@ -213,7 +213,7 @@ class InspectorStreamSpec extends SparkSpec {
   test("bounded replay: maxFilesPerTrigger + AvailableNow terminates after the dir") {
     val s = spark
     import java.nio.file.{Files, Paths}
-    val srcDir = Files.createTempDirectory("graft_bounded_replay")
+    val srcDir = Paths.get(TestSpark.tempDir("graft_bounded_replay"))
     val pcaps = Paths.get(SyntheticTraffic.ensurePcapDir())
     Files.copy(pcaps.resolve("capture-00001.pcap"), srcDir.resolve("c1.pcap"))
     Files.copy(pcaps.resolve("capture-00002.pcap"), srcDir.resolve("c2.pcap"))
@@ -260,9 +260,9 @@ class InspectorStreamSpec extends SparkSpec {
     import java.nio.charset.StandardCharsets.UTF_8
     import graft.pcap.{LinkDecode, PcapFile}
     import graft.proto.ProtoWire.writer
-    val src = Files.createTempDirectory("graft_ckpt_src")
-    val ckpt = Files.createTempDirectory("graft_ckpt_state")
-    val outDir = Files.createTempDirectory("graft_ckpt_out")
+    val src = java.nio.file.Path.of(TestSpark.tempDir("graft_ckpt_src"))
+    val ckpt = TestSpark.tempDir("graft_ckpt_state")
+    val outDir = TestSpark.tempDir("graft_ckpt_out")
     val rowKey = "r" * 400
     val reqBody = writer.varint(1, 9L).string(3, "Get").bool(4, true).toDelimitedBytes ++
       writer.msg(1, writer.varint(1, 1L)
@@ -291,8 +291,8 @@ class InspectorStreamSpec extends SparkSpec {
         .select(col("ts"), col("client"), col("call_id"), col("method"),
           col("row"), col("inbound"), col("elapsed"))
         .writeStream.format("parquet")
-        .option("path", outDir.toString)
-        .option("checkpointLocation", ckpt.toString)
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -303,7 +303,7 @@ class InspectorStreamSpec extends SparkSpec {
     Files.write(src.resolve("c2.pcap"),
       pcap((1005L, true, reqB), (1010L, false, frame(resBody))))
     runOnce() // NEW query instance restores the connection from the checkpoint
-    val rows = s.read.parquet(outDir.toString).collect()
+    val rows = s.read.parquet(outDir).collect()
     assert(rows.length === 2, rows.mkString("; "))
     val req = rows.find(_.getAs[Boolean]("inbound")).get
     assert(req.getAs[String]("row") === rowKey) // reassembled ACROSS the restart
@@ -316,7 +316,7 @@ class InspectorStreamSpec extends SparkSpec {
   test("record cap (-c streaming form): tracker reports per trigger, awaitCapped stops at the cap") {
     val s = spark
     import java.nio.file.{Files, Paths}
-    val srcDir = Files.createTempDirectory("graft_record_cap")
+    val srcDir = Paths.get(TestSpark.tempDir("graft_record_cap"))
     val pcaps = Paths.get(SyntheticTraffic.ensurePcapDir())
     Files.copy(pcaps.resolve("capture-00001.pcap"), srcDir.resolve("c1.pcap"))
     Files.copy(pcaps.resolve("capture-00002.pcap"), srcDir.resolve("c2.pcap"))
@@ -348,14 +348,48 @@ class InspectorStreamSpec extends SparkSpec {
 
   test("awaitCapped with no cap stops a continuous query at its budget") {
     val s = spark
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_duration_bound")
+    val srcDir = TestSpark.tempDir("graft_duration_bound")
     val query = InspectorStream
-      .recordsFromPcapDir(s, srcDir.toString, withIdleTimeout = false)
+      .recordsFromPcapDir(s, srcDir, withIdleTimeout = false)
       .writeStream.format("memory").queryName("duration_bound")
       .outputMode("append").start()
     InspectorStream.awaitCapped(query,
       new InspectorStream.ProgressTracker("duration_bound"), Long.MaxValue,
       durationMs = Some(1500L))
     assert(!query.isActive)
+  }
+
+  test("live -k trigger: an idle query with the idle timeout armed runs at most one batch per interval") {
+    // the CLI's live query shape: idle timeout armed (recordsFromPcapDir's
+    // default) on the trigger Main.runKafka starts it with; on Spark's
+    // default trigger this drained directory ran dozens of empty batches
+    val s = spark
+    import java.nio.file.{Files, Paths}
+    val srcDir = Paths.get(TestSpark.tempDir("graft_idle_src"))
+    val ckpt = Paths.get(TestSpark.tempDir("graft_idle_ckpt"))
+    Files.copy(Paths.get(SyntheticTraffic.ensurePcapDir()).resolve("capture-00001.pcap"),
+      srcDir.resolve("c1.pcap"))
+    val query = InspectorStream.recordsFromPcapDir(s, srcDir.toString).toDF()
+      .writeStream.format("noop").queryName("idle_trigger")
+      .option("checkpointLocation", ckpt.toString)
+      .trigger(graft.Main.kafkaTrigger(capped = false))
+      .start()
+    def batches(): Int = Option(ckpt.resolve("commits").toFile.list())
+      .fold(0)(_.count(n => !n.startsWith(".")))
+    try {
+      // processAllAvailable would never return: with the idle timeout
+      // armed every trigger runs a batch. The first batch drains the
+      // file, so what follows its commit is idle.
+      def drained = query.recentProgress.exists(_.numInputRows > 0)
+      val deadline = System.nanoTime() + 120000000000L
+      while (!drained && query.isActive && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(drained, "the first batch never processed the capture file")
+      val windowMs = 12000L
+      val before = batches()
+      Thread.sleep(windowMs)
+      val idle = batches() - before
+      assert(idle <= windowMs / graft.Main.LiveTriggerMs + 1,
+        s"$idle batches in an idle ${windowMs / 1000} s window")
+    } finally query.stop()
   }
 }

@@ -103,7 +103,7 @@ class StreamingOpsSpec extends SparkSpec {
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
     import graft.sources.TfRecord
-    val outDir = java.nio.file.Files.createTempDirectory("graft_stream_tfr")
+    val outDir = java.nio.file.Paths.get(graft.TestSpark.tempDir("graft_stream_tfr"))
     val ms = MemoryStream[(Long, String)]
     val query = ms.toDS().toDF("doc_id", "text").writeStream
       .outputMode("append")

@@ -97,7 +97,7 @@ class StreamingSoakSpec extends SparkSpec {
       val span = "a1 a2 a3 a4 a5 a6 a7 a8" // one bench gram
       val bg = graft.ops.Decontam.benchGramIds(
         Seq((20L, span)).toDF("doc_id", "text"))
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_leak_ckpt").toString
+      val ckpt = graft.TestSpark.tempDir("graft_leak_ckpt")
       val ms = MemoryStream[(Timestamp, Long, String)]
       // batchId -> latest cumulative count delivered in that batch; the
       // assertions use max(count), not batch ids — update mode may slip a
@@ -165,7 +165,7 @@ class StreamingSoakSpec extends SparkSpec {
       val s = spark
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_funnel_ckpt").toString
+      val ckpt = graft.TestSpark.tempDir("graft_funnel_ckpt")
       val ms = MemoryStream[(Long, String, Long)]
       // append-only advance log: replays would surface as duplicates
       val advances = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
@@ -220,7 +220,7 @@ class StreamingSoakSpec extends SparkSpec {
       val s = spark
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_dedup_ckpt").toString
+      val ckpt = graft.TestSpark.tempDir("graft_dedup_ckpt")
       val ms = MemoryStream[(Timestamp, Long, String)]
       val emitted = scala.collection.mutable.ArrayBuffer.empty[Long] // doc_ids
       val crashArmed = new java.util.concurrent.atomic.AtomicBoolean(false)
@@ -273,7 +273,7 @@ class StreamingSoakSpec extends SparkSpec {
     val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet"
     val index = graft.ops.Dedup.buildRefIndex(
       Seq((10L, base)).toDF("doc_id", "text"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_screen_ckpt").toString
+    val ckpt = graft.TestSpark.tempDir("graft_screen_ckpt")
     val ms = MemoryStream[(Long, String)]
     // APPEND-only log (never keyed overwrite): a replayed batch after the
     // restart would surface as a duplicate (batchId, doc_id) entry here
