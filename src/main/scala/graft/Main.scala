@@ -85,10 +85,11 @@ object Main {
       |  -k SPEC    stream records to Kafka (SERVERS/T1/T2[?k=v&...])
       |  -o PREFIX  persist the 4 tables as bucketed catalog tables; exit
       |  -p PORTS   comma-separated RegionServer ports (default 16020,60020)
-      |  -t DIR     checkpoint dir for -k (default: a temp dir)
+      |  -t DIR     checkpoint dir for -k (default: a temp dir); Spark refuses
+      |             to resume a live run's with -c, or a -c run's without
       |  -d MS      bound a -k run; with -i and no -k: capture MS then load
-      |  -c N       max records to process (batch take-bound; -k: stop
-      |             once N records are emitted, one file per trigger)
+      |  -c N       max records to process (batch take-bound; -k: one file per
+      |             trigger, stop at N records or once the dir is drained)
       |  -i [IFACE] launch staged tcpdump capture into CAPTURE_DIR first;
       |             with no IFACE: list the devices and prompt for one
       |  -n         with -i: print the capture command instead of running
@@ -316,20 +317,26 @@ object Main {
   }
 
   /** Trigger interval of a live `-k` run, well under tcpdump's 60 s
-    * rotation and the 120 s idle timeout. The records query arms the
-    * idle timeout, and Spark runs another micro-batch after every batch
-    * of such a query, data or not; on the default trigger that spins a
-    * drained capture dir through back-to-back empty batches and
-    * checkpoint writes. A fixed interval bounds it to one per interval.
+    * rotation and the 120 s idle timeout. With the timeout armed, Spark
+    * runs a micro-batch after every batch, data or not, so on the default
+    * trigger a drained capture dir spins through back-to-back empty
+    * batches and checkpoint writes; a fixed interval bounds that.
     */
   val LiveTriggerMs = 10000L
 
-  /** `-k`'s trigger: a `-c` run replays the directory's current contents
-    * and terminates (AvailableNow); a live run fires every
-    * [[LiveTriggerMs]].
+  /** `-k`'s trigger and records, both from whether `-c` caps the run. A
+    * capped run replays the directory one file per trigger, so the cap
+    * reacts per capture file, and terminates (AvailableNow) with the idle
+    * timeout off: an armed one runs a batch after every batch, and the
+    * replay never ends. A live run arms it, firing every [[LiveTriggerMs]].
     */
   private[graft] def kafkaTrigger(capped: Boolean): Trigger =
     if (capped) Trigger.AvailableNow() else Trigger.ProcessingTime(LiveTriggerMs)
+
+  private[graft] def kafkaRecords(spark: SparkSession, dir: String,
+                                  ports: Set[Int], capped: Boolean): DataFrame =
+    InspectorStream.recordsFromPcapDir(spark, dir, withIdleTimeout = !capped,
+      maxFilesPerTrigger = if (capped) Some(1) else None, ports = ports).toDF()
 
   /** `-v` load preamble: the capture files the pipeline is about to read,
     * listed by the `binaryFile` source itself, so its exclusions (hidden
@@ -365,11 +372,9 @@ object Main {
                        verbose: Boolean, out: PrintStream): Int =
     try {
       val parsed = KafkaSink.parseSpec(spec)
-      // -c: one file per trigger so the emitted-record cap reacts at file
-      // granularity, under an AvailableNow replay that terminates once the
-      // directory's current contents are drained
-      val records = InspectorStream.recordsFromPcapDir(spark, dir, ports = ports,
-        maxFilesPerTrigger = maxRecords.map(_ => 1)).toDF()
+      // -c: a replay that ends at the cap or once the directory is drained
+      val capped = maxRecords.isDefined
+      val records = kafkaRecords(spark, dir, ports, capped)
       val json = KafkaSink.jsonRecords(records, parsed,
         java.net.InetAddress.getLocalHost.getHostName)
       // self-created temp checkpoints are deleted in the finally below —
@@ -382,7 +387,7 @@ object Main {
       val checkpoint = ckpt.getOrElse(ownCkpt.get.toString)
       val name = s"graft-kafka-${java.util.UUID.randomUUID()}"
       val writer = KafkaSink.writeStream(json, parsed, checkpoint).queryName(name)
-        .trigger(kafkaTrigger(capped = maxRecords.isDefined))
+        .trigger(kafkaTrigger(capped))
       val report: (Long, Long, Long) => Unit =
         if (verbose) (batch, n, total) =>
           out.println(s"[v] trigger $batch: $n records ($total total)")
@@ -443,7 +448,8 @@ object Main {
   /** Plain fixed-width render (driver-side; capped — an interactive shell
     * shows a page, it does not collect an unbounded result).
     */
-  private def render(df: DataFrame, out: PrintStream, maxRows: Int = 1000): Unit = {
+  private def render(df: DataFrame, out: PrintStream): Unit = {
+    val maxRows = 1000
     val rows = df.take(maxRows + 1)
     val shown = rows.take(maxRows)
     val header = df.columns

@@ -59,12 +59,12 @@ object Bpe {
   }
 
   /** Learn `numMerges` merges from the corpus's word-frequency table
-    * (bounded to the `maxWordTable` most frequent words; ties broken by
+    * (bounded to the `maxWordTable` (50,000) most frequent words; ties broken by
     * word for determinism). Merge ties break on (count desc, pair asc).
     * Stops early when no adjacent pair occurs twice.
     */
-  def learn(docs: DataFrame, numMerges: Int = 200,
-      maxWordTable: Int = 50000): Model = {
+  def learn(docs: DataFrame, numMerges: Int = 200): Model = {
+    val maxWordTable = 50000
     require(numMerges > 0, s"numMerges must be positive, got $numMerges")
     val freqs = docs.filter(col("text").isNotNull)
       .select(explode(TextAnalysis.words).as("w"))

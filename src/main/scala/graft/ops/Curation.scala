@@ -563,7 +563,7 @@ object Curation {
         col("norm_len"))
 
   /** Cross-document boilerplate-line profile (q129): a LINE (newline
-    * split, space-trimmed, non-empty) occurring in >= `minDf` DISTINCT
+    * split, space-trimmed, non-empty) occurring in >= `minDf` (3) DISTINCT
     * documents is boilerplate — the CCNet/RefinedWeb-style cross-doc
     * complement of q55's doc-local prose filter (navigation chrome,
     * cookie banners, footers repeat across a crawl, and doc-local
@@ -586,7 +586,8 @@ object Curation {
     * (hash, len) pair only renames lines (the q33 argument), so
     * DuckDB's GROUP BY over line STRINGS is the exact oracle.
     */
-  def boilerplateStats(docs: DataFrame, minDf: Int = 3): DataFrame = {
+  def boilerplateStats(docs: DataFrame): DataFrame = {
+    val minDf = 3
     val lines = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), explode(split(col("text"), "\n", -1)).as("raw"))
       .select(col("doc_id"), trim(col("raw"), " ").as("l"))
@@ -611,7 +612,7 @@ object Curation {
   /** Screen-overlap calibration: are the vocabulary-diversity filter and
     * the duplicated-span screen redundant or orthogonal? Per
     * diversity-decile bucket (floor(uniq_ratio·10), clamped to 9), over
-    * the span-eligible docs (≥ w tokens): doc count, window counts, and
+    * the span-eligible docs (≥ [[Dedup.SpanW]] tokens): doc count, window counts, and
     * the duplicated-window share. A pipeline reads this to decide
     * whether a cheap quality gate already removes the content the
     * expensive dedup stage would — the stage-ordering question every
@@ -632,11 +633,11 @@ object Curation {
     least(floor(size(array_distinct(toks)).cast("double")
       / size(toks) * 10).cast("long"), lit(9L))
 
-  def screenCalibration(docs: DataFrame, w: Int = 16): DataFrame = {
+  def screenCalibration(docs: DataFrame): DataFrame = {
     val toks = Dedup.tokens
     val buckets = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), diversityBucket(toks).as("bucket"))
-    Dedup.dupSpans(docs, w)
+    Dedup.dupSpans(docs)
       .join(buckets, "doc_id")
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_docs"),
@@ -749,8 +750,8 @@ object Curation {
     * scale-0 rounding is cross-engine safe because half-integers are
     * exact doubles, where a 6-dp half boundary is not (the q109 lesson).
     */
-  def truncationYield(docs: DataFrame,
-                      limits: Seq[Int] = Seq(128, 512, 2048)): DataFrame = {
+  def truncationYield(docs: DataFrame): DataFrame = {
+    val limits = Seq(128, 512, 2048)
     val base = docs.filter(col("text").isNotNull)
       .select(col("source"),
         size(TextAnalysis.words).cast("long").as("n_tok"))

@@ -32,11 +32,11 @@ object Decontam {
   /** THE decontam gram space as a column — the single definition both the
     * batch screens and the streaming monitor explode (the stream keeps
     * event_time, so it can't reuse the (doc_id, g) projection below). */
-  private[graft] def gramArray(n: Int = GramN): org.apache.spark.sql.Column =
-    array_distinct(graft.functions.TextFunctions.hashedGrams(Dedup.tokens, n))
+  private[graft] def gramArray: org.apache.spark.sql.Column =
+    array_distinct(graft.functions.TextFunctions.hashedGrams(Dedup.tokens, GramN))
 
-  private def grams(df: DataFrame, n: Int) = df
-    .select(col("doc_id"), explode(gramArray(n)).as("g"))
+  private def grams(df: DataFrame) = df
+    .select(col("doc_id"), explode(gramArray).as("g"))
 
   /** Distinct xxhash64 n-gram set of the benchmark (`g` column).
     * Precompute (and cache) this once when screening REPEATEDLY against
@@ -44,19 +44,18 @@ object Decontam {
     * micro-batch would re-scan/re-tokenize/re-dedup the benchmark
     * thousands of times for no new information.
     */
-  def benchGramSet(bench: DataFrame, n: Int = GramN): DataFrame =
-    grams(bench, n).select(col("g")).distinct()
+  def benchGramSet(bench: DataFrame): DataFrame =
+    grams(bench).select(col("g")).distinct()
 
   /** [[contaminated]] against an already-derived [[benchGramSet]]. */
-  def contaminatedWithGrams(train: DataFrame, benchGrams: DataFrame,
-                            n: Int = GramN): DataFrame =
-    grams(train, n).join(broadcast(benchGrams), "g")
+  def contaminatedWithGrams(train: DataFrame, benchGrams: DataFrame): DataFrame =
+    grams(train).join(broadcast(benchGrams), "g")
       // grams are distinct per doc and the bench side is distinct, so the
       // join multiplicity is 1 and a plain count is the distinct count
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
 
-  def contaminated(train: DataFrame, bench: DataFrame, n: Int = GramN): DataFrame =
-    contaminatedWithGrams(train, benchGramSet(bench, n), n)
+  def contaminated(train: DataFrame, bench: DataFrame): DataFrame =
+    contaminatedWithGrams(train, benchGramSet(bench))
 
   /** q49's semantics at benchmark sizes PAST the broadcast budget: the
     * exact gram set is replaced by a bloom filter
@@ -77,18 +76,18 @@ object Decontam {
     * bench gram; undersizing costs confirm-join traffic, never
     * correctness.
     */
-  def bloomContaminated(train: DataFrame, bench: DataFrame, n: Int = GramN,
-                        numBits: Long = 1L << 23, numHashes: Int = 5): DataFrame = {
+  def bloomContaminated(train: DataFrame, bench: DataFrame,
+                        numBits: Long = 1L << 23): DataFrame = {
     import graft.functions.BloomFunctions
     // materialized once: the gram set feeds BOTH the bloom build (an
     // eager action here) and the confirm join in the returned plan —
     // without the boundary the bench-side scan+tokenize+distinct pipeline
     // runs twice
-    val bg = Materialize(benchGramSet(bench, n))
+    val bg = Materialize(benchGramSet(bench))
     val bloomBytes = bg
-      .agg(BloomFunctions.bloomAgg(col("g"), numBits, numHashes).as("bf"))
+      .agg(BloomFunctions.bloomAgg(col("g"), numBits).as("bf"))
       .head.getAs[Array[Byte]](0)
-    grams(train, n)
+    grams(train)
       .filter(BloomFunctions.mightContain(bloomBytes, col("g")))
       .join(bg, "g") // exact confirm — kills the false positives
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
@@ -113,12 +112,12 @@ object Decontam {
     * keeping item identity, for leak ATTRIBUTION rather than a yes/no
     * screen. Derive once and cache when screening repeatedly (the
     * [[benchGramSet]] contract). */
-  def benchGramIds(bench: DataFrame, n: Int = GramN): DataFrame =
-    grams(bench, n).select(col("doc_id").as("bench_id"), col("g")).distinct()
+  def benchGramIds(bench: DataFrame): DataFrame =
+    grams(bench).select(col("doc_id").as("bench_id"), col("g")).distinct()
 
-  def leakProfile(train: DataFrame, bench: DataFrame, n: Int = GramN): DataFrame = {
-    val bg = benchGramIds(bench, n)
-    grams(train, n).join(broadcast(bg), "g")
+  def leakProfile(train: DataFrame, bench: DataFrame): DataFrame = {
+    val bg = benchGramIds(bench)
+    grams(train).join(broadcast(bg), "g")
       .groupBy(col("bench_id"))
       .agg(count_distinct(col("doc_id")).as("n_train_docs"),
         count_distinct(col("g")).as("n_shared_grams"))
@@ -128,8 +127,8 @@ object Decontam {
     * REMOVED (left-anti join on the q49 report — the report is bounded by
     * the contamination rate, so the anti join's right side is small).
     */
-  def decontaminate(train: DataFrame, bench: DataFrame, n: Int = GramN): DataFrame =
-    train.join(contaminated(train, bench, n).select(col("doc_id")),
+  def decontaminate(train: DataFrame, bench: DataFrame): DataFrame =
+    train.join(contaminated(train, bench).select(col("doc_id")),
       Seq("doc_id"), "left_anti")
 
   /** Width-sensitivity sweep of the screen: q49's contamination report at
@@ -150,8 +149,8 @@ object Decontam {
     * ≤|widths| key space. The rate divides by a 1-row broadcast count.
     * Cross-width hash collisions can't pollute: the join key carries w.
     */
-  def widthSweep(train: DataFrame, bench: DataFrame,
-                 widths: Seq[Int] = Seq(8, 12, 16)): DataFrame = {
+  def widthSweep(train: DataFrame, bench: DataFrame): DataFrame = {
+    val widths = Seq(8, 12, 16)
     def tagged(df: DataFrame): DataFrame = df
       .select(col("doc_id"), explode(
         graft.functions.TextFunctions.hashedGramsTagged(Dedup.tokens, widths))
@@ -171,7 +170,7 @@ object Decontam {
   }
 
   /** Contamination growth curve (q126): cumulative benchmark-leaked
-    * train docs and leak ppm at each of `checkpoints` equal train
+    * train docs and leak ppm at each of [[Sampling.Checkpoints]] equal train
     * slices in doc_id (intake) order — "WHEN did the eval set enter the
     * crawl". q49 says which docs leak and q104 which benchmark items
     * they leak; this localizes the leak in INTAKE TIME: a flat-then-
@@ -191,20 +190,18 @@ object Decontam {
     * n_docs = 0 (sparse id remapping) case to 0 instead of failing the
     * ANSI division.
     */
-  def leakGrowth(train: DataFrame, bench: DataFrame, checkpoints: Int = 10,
-                 n: Int = GramN): DataFrame = {
-    require(checkpoints >= 1, s"checkpoints must be >= 1: $checkpoints")
+  def leakGrowth(train: DataFrame, bench: DataFrame): DataFrame = {
     val horizon = train.agg(max(col("doc_id")).as("max_id"))
-    val leakB = contaminated(train, bench, n)
+    val leakB = contaminated(train, bench)
       .crossJoin(broadcast(horizon))
-      .groupBy(Sampling.checkpointOf("doc_id", checkpoints).as("bk"))
+      .groupBy(Sampling.checkpointOf("doc_id", Sampling.Checkpoints).as("bk"))
       .agg(count(lit(1)).as("c"))
     val docB = train.select(col("doc_id")).crossJoin(broadcast(horizon))
-      .groupBy(Sampling.checkpointOf("doc_id", checkpoints).as("bk"))
+      .groupBy(Sampling.checkpointOf("doc_id", Sampling.Checkpoints).as("bk"))
       .agg(count(lit(1)).as("c"))
     val session = train.sparkSession
-    Sampling.cumOverSpine(session, checkpoints, docB, "n_docs")
-      .join(Sampling.cumOverSpine(session, checkpoints, leakB, "n_leaked"),
+    Sampling.cumOverSpine(session, Sampling.Checkpoints, docB, "n_docs")
+      .join(Sampling.cumOverSpine(session, Sampling.Checkpoints, leakB, "n_leaked"),
         Seq("k"))
       .select(col("k").as("checkpoint"), col("n_docs"), col("n_leaked"),
         when(col("n_docs") === 0, lit(0L)).otherwise(

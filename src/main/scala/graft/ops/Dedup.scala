@@ -39,6 +39,12 @@ object Dedup {
   private val DfCap     = 50
   private[graft] val BucketCap = 200
 
+  /** Near-dup cutoffs: n-gram Jaccard (q33 and the incremental screens)
+    * and [[containmentPairs]] in ppm; token width of the span family. */
+  private val MinJaccard = 0.8
+  private val MinContainPpm = 900000L
+  private[ops] val SpanW = 16
+
   /** Whitespace tokens of `text`. */
   private[graft] def tokens: Column = split(trim(col("text")), "\\s+")
 
@@ -109,10 +115,9 @@ object Dedup {
     * bounded by the cap — Σ over buckets of |bucket|² ≤ cap · Σ|bucket|.
     * Shared by q31/q32 banding and q34's embedding-LSH bands (the round-3
     * verdict's scale-killer: q34 bypassed this cap). Output: (a, b) with
-    * a < b, from the `idCol` column of `banded`.
+    * a < b, from the `doc_id` column of `banded`.
     */
-  private[ops] def bucketPairs(banded: DataFrame, keyCols: Seq[String], cap: Int,
-                               idCol: String = "doc_id"): DataFrame = {
+  private[ops] def bucketPairs(banded: DataFrame, keyCols: Seq[String], cap: Int): DataFrame = {
     val keys = keyCols.map(col)
     val smallBuckets = banded.groupBy(keys: _*)
       .agg(count(lit(1)).as("bsz"))
@@ -124,8 +129,8 @@ object Dedup {
     // sides read it, keeping full lineage (resilient at 100 TB) and the
     // cap filter visible to the plan audit
     val kept = banded.join(smallBuckets, keyCols)
-    val l = kept.select(keys :+ col(idCol).as("a"): _*)
-    val r = kept.select(keys :+ col(idCol).as("b"): _*)
+    val l = kept.select(keys :+ col("doc_id").as("a"): _*)
+    val r = kept.select(keys :+ col("doc_id").as("b"): _*)
     l.join(r, keyCols).where(col("a") < col("b"))
       .select(col("a"), col("b"))
       .distinct()
@@ -743,7 +748,7 @@ object Dedup {
     * but their positions DO count as duplicated spans, exactly like the
     * old positional join counted them.
     */
-  def dupSpans(docs: DataFrame, w: Int = 16): DataFrame = {
+  def dupSpans(docs: DataFrame, w: Int = SpanW): DataFrame = {
     // r21 restructure (guide §2.3/§2.4): the old shape fed the
     // un-materialized positional gram frame to THREE consumers (distinct →
     // gdf, per-doc totals, and the shared-join probe), so the corpus-scale
@@ -778,7 +783,7 @@ object Dedup {
   }
 
   /** Source-level mirror detection: for every unordered source pair, how
-    * many distinct `w`-token spans appear in BOTH — plus the overlap
+    * many distinct [[SpanW]]-token spans appear in BOTH — plus the overlap
     * coefficient shared/min(|A|,|B|), the containment form that flags a
     * small crawl that is a subset-mirror of a big one even when the big
     * side dwarfs it. The source×source view catches systematic copying
@@ -793,7 +798,7 @@ object Dedup {
     * ≤ catalog² count rows. Sizes join is a broadcast of catalog-many
     * rows. NULL sources excluded (a pair needs two named sides).
     */
-  def sourceOverlap(docs: DataFrame, w: Int = 16): DataFrame = {
+  def sourceOverlap(docs: DataFrame): DataFrame = {
     // Materialize: sg feeds THREE branches (pair expansion + both sizes
     // aliases) and AQE replans consumers independently — without it the
     // corpus-scale tokenize/gram/distinct subtree can run three times
@@ -801,7 +806,7 @@ object Dedup {
     val sg = Materialize(docs
       .filter(col("text").isNotNull && col("source").isNotNull)
       .select(col("source"), explode(array_distinct(
-        graft.functions.TextFunctions.hashedGrams(tokens, w))).as("g"))
+        graft.functions.TextFunctions.hashedGrams(tokens, SpanW))).as("g"))
       .distinct())
     sourcePairCounts(sg, Seq("g"))
       .select(col("src_a"), col("src_b"), col("shared"),
@@ -971,7 +976,7 @@ object Dedup {
   }
 
   /** Exact-duplication growth curve (q124): cumulative duplicate-doc
-    * count and share at each of `checkpoints` equal corpus slices in
+    * count and share at each of [[Sampling.Checkpoints]] equal corpus slices in
     * doc_id (intake) order. q118/q101 report what dedup saves on the
     * corpus as it stands; this reports how the savings TREND as the
     * crawl grows — a dup_ppm curve still accelerating at 100% means the
@@ -997,22 +1002,21 @@ object Dedup {
     * the k-before-first-doc case (n_docs = 0) to 0 rather than failing
     * the ANSI division.
     */
-  def dupGrowth(docs: DataFrame, checkpoints: Int = 10): DataFrame = {
-    require(checkpoints >= 1, s"checkpoints must be >= 1: $checkpoints")
+  def dupGrowth(docs: DataFrame): DataFrame = {
     val live = docs.filter(col("text").isNotNull)
     val horizon = live.agg(max(col("doc_id")).as("max_id"))
     val groups = live
       .groupBy(xxhash64(col("text")), length(col("text")))
       .agg(min(col("doc_id")).as("first_id"))
     val newGroups = groups.crossJoin(broadcast(horizon))
-      .groupBy(Sampling.checkpointOf("first_id", checkpoints).as("bk"))
+      .groupBy(Sampling.checkpointOf("first_id", Sampling.Checkpoints).as("bk"))
       .agg(count(lit(1)).as("c"))
     val docBuckets = live.select(col("doc_id")).crossJoin(broadcast(horizon))
-      .groupBy(Sampling.checkpointOf("doc_id", checkpoints).as("bk"))
+      .groupBy(Sampling.checkpointOf("doc_id", Sampling.Checkpoints).as("bk"))
       .agg(count(lit(1)).as("c"))
     val session = docs.sparkSession
-    Sampling.cumOverSpine(session, checkpoints, docBuckets, "n_docs")
-      .join(Sampling.cumOverSpine(session, checkpoints, newGroups,
+    Sampling.cumOverSpine(session, Sampling.Checkpoints, docBuckets, "n_docs")
+      .join(Sampling.cumOverSpine(session, Sampling.Checkpoints, newGroups,
         "n_groups"), Seq("k"))
       .select(col("k").as("checkpoint"), col("n_docs"), col("n_groups"),
         (col("n_docs") - col("n_groups")).as("dup_docs"),
@@ -1045,7 +1049,7 @@ object Dedup {
   }
 
   /** Marginal-novelty attribution per source: walk the corpus in doc_id
-    * (acquisition) order and credit each distinct `w`-token span to the
+    * (acquisition) order and credit each distinct [[SpanW]]-token span to the
     * source of the document where it FIRST appears. Per source: distinct
     * spans present, spans owned (first seen here — exactly the spans this
     * source contributes to a dedup-in-acquisition-order corpus), spans
@@ -1062,11 +1066,11 @@ object Dedup {
     * feeds two aggregation branches → [[Materialize]] (the q96 AQE-replan
     * precedent: without it the tokenize/gram subtree runs per consumer).
     */
-  def gramNovelty(docs: DataFrame, w: Int = 16): DataFrame = {
+  def gramNovelty(docs: DataFrame): DataFrame = {
     val gs = Materialize(docs
       .filter(col("text").isNotNull && col("source").isNotNull)
       .select(col("doc_id"), col("source"), explode(
-        graft.functions.TextFunctions.hashedGrams(tokens, w)).as("g"))
+        graft.functions.TextFunctions.hashedGrams(tokens, SpanW)).as("g"))
       .groupBy(col("g"), col("source")).agg(min(col("doc_id")).as("mindoc")))
     val present = gs.groupBy(col("source")).agg(count(lit(1)).as("n_spans"))
     val owned = gs.groupBy(col("g"))
@@ -1197,7 +1201,7 @@ object Dedup {
     * corpus-scale state); the strip itself is the fused codegen
     * [[graft.functions.StripSpans]] sweep in a map-side projection.
     */
-  def stripDupSpans(docs: DataFrame, w: Int = 16): DataFrame = {
+  def stripDupSpans(docs: DataFrame, w: Int = SpanW): DataFrame = {
     val live = docs.filter(col("text").isNotNull)
     // r21 MEASURED DEAD END, kept as the two-pass shape deliberately: a
     // one-gram-pass restructure (checkpointed (g, doc_id) aggregate with
@@ -1295,7 +1299,7 @@ object Dedup {
     * and the Jaccard sets (a self-consistent approximation — ubiquitous
     * grams carry no signal).
     */
-  def jaccardPairs(docs: DataFrame, minJaccard: Double = 0.8): DataFrame =
+  def jaccardPairs(docs: DataFrame, minJaccard: Double = MinJaccard): DataFrame =
     pairsFromGrams(gramsOf(docs), minJaccard)
 
   /** The hashed 3-gram inverted frame (doc_id, g) of a (doc_id, text)
@@ -1361,7 +1365,7 @@ object Dedup {
     * mirrors — needs the min-denominator form. Output is all-integer
     * (floored ppm, the q122 exactness convention): (a, b, contain_ppm,
     * jaccard_ppm) for every capped candidate pair with containment ≥
-    * `minContainPpm`; jaccard_ppm rides along so the consumer can
+    * [[MinContainPpm]]; jaccard_ppm rides along so the consumer can
     * separate subset pairs (high contain, low jaccard) from plain
     * near-dups (both high).
     *
@@ -1375,13 +1379,12 @@ object Dedup {
     * across documents) the asymmetry is visible; the spec pins it with
     * a third doc keeping the big side's grams alive.
     */
-  def containmentPairs(docs: DataFrame,
-                       minContainPpm: Long = 900000L): DataFrame =
+  def containmentPairs(docs: DataFrame): DataFrame =
     pairStats(gramsOf(docs))
       .select(col("a"), col("b"),
         expr("(1000000 * inter) div least(sz_a, sz_b)").as("contain_ppm"),
         expr("(1000000 * inter) div (sz_a + sz_b - inter)").as("jaccard_ppm"))
-      .filter(col("contain_ppm") >= minContainPpm)
+      .filter(col("contain_ppm") >= MinContainPpm)
 
   /** Incremental (cross-snapshot) dedup: flag each INCREMENT doc that is
     * an n-gram-Jaccard near-dup of any REFERENCE doc — the screen a
@@ -1399,13 +1402,11 @@ object Dedup {
     * Requires non-negative doc_ids (< 2^62 for encoding headroom), and
     * ids must not collide across the two inputs.
     */
-  def incrementalDedup(reference: DataFrame, increment: DataFrame,
-                       minJaccard: Double = 0.8): DataFrame =
+  def incrementalDedup(reference: DataFrame, increment: DataFrame): DataFrame =
     incrementalDedupTagged(
       reference.select((col("doc_id") * 2).as("doc_id"), col("text"))
         .unionByName(
-          increment.select((col("doc_id") * 2 + 1).as("doc_id"), col("text"))),
-      minJaccard)
+          increment.select((col("doc_id") * 2 + 1).as("doc_id"), col("text"))))
 
   /** [[incrementalDedup]] over a frame whose ids are ALREADY side-encoded
     * (id·2 + side, side 1 = increment) — the q133/q86 one-scan pattern
@@ -1415,10 +1416,9 @@ object Dedup {
     * time); a caller that encodes the side in one projection feeds a
     * single scan. Same id arithmetic, same pairs, same tie-break.
     */
-  private[ops] def incrementalDedupTagged(tagged: DataFrame,
-      minJaccard: Double = 0.8): DataFrame = {
+  private[ops] def incrementalDedupTagged(tagged: DataFrame): DataFrame = {
     val newSide = pmod(col("a"), lit(2L)) === 1L
-    val cross = jaccardPairs(tagged, minJaccard)
+    val cross = jaccardPairs(tagged)
       .filter(pmod(col("a"), lit(2L)) =!= pmod(col("b"), lit(2L)))
       .select(
         shiftright(when(newSide, col("a")).otherwise(col("b")), 1).as("doc_id"),
@@ -1475,8 +1475,7 @@ object Dedup {
     * is ever expanded. Same output shape as [[incrementalDedup]]:
     * (doc_id, dup_of, jaccard), best match per flagged increment doc.
     */
-  def screenAgainstIndex(index: RefIndex, increment: DataFrame,
-                         minJaccard: Double = 0.8): DataFrame = {
+  def screenAgainstIndex(index: RefIndex, increment: DataFrame): DataFrame = {
     // gramsOf is already distinct per doc (gram3of applies array_distinct)
     val bGrams = gramsOf(increment).withColumnRenamed("doc_id", "b")
     // no broadcast HINT: a typical micro-batch's gram set broadcasts on
@@ -1497,7 +1496,7 @@ object Dedup {
       .join(index.sizes.select(col("doc_id").as("r"), col("sz").as("sz_r")), "r")
       .withColumn("jaccard", col("inter").cast("double") /
         (col("sz_b") + col("sz_r") - col("inter")))
-      .filter(col("jaccard") >= minJaccard)
+      .filter(col("jaccard") >= MinJaccard)
       .select(col("b").as("doc_id"), col("r").as("dup_of"), col("jaccard")))
   }
 

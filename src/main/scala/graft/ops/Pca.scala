@@ -179,7 +179,7 @@ object Pca {
   }
 
   /** [[fit]]'s DETERMINISTIC bounded-sample form (the q43/q87 fit class):
-    * moments come from a sequential driver fold over the `cap` live rows
+    * moments come from a sequential driver fold over the `cap` (4096) live rows
     * with the smallest (xxhash64(vec_id), vec_id) — a distributed top-k
     * (TakeOrderedAndProject), never a full sort — so the model is
     * bit-reproducible across partitionings, which is what lets q60 carry
@@ -188,7 +188,8 @@ object Pca {
     * this form wherever reproducibility matters more than the sampling
     * error of a `cap`-row moment estimate.
     */
-  def fitSampled(embs: DataFrame, k: Int, cap: Int = 4096): PcaModel = {
+  def fitSampled(embs: DataFrame, k: Int): PcaModel = {
+    val cap = 4096
     val s = embs.sparkSession
     import s.implicits._
     val rows = embs.filter(col("embedding").isNotNull)
@@ -213,15 +214,14 @@ object Pca {
   /** Project (and optionally whiten) every embedding onto the model's
     * components: pure map over a broadcast k×d matrix.
     */
-  def project(embs: DataFrame, model: PcaModel, whiten: Boolean,
-              idCol: String = "vec_id"): DataFrame = {
+  def project(embs: DataFrame, model: PcaModel, whiten: Boolean): DataFrame = {
     val s = embs.sparkSession
     import s.implicits._
     val bc = s.sparkContext.broadcast(model)
     val eps = 1e-12
     // same NULL contract as fit(): a NULL embedding has no projection —
     // the row is excluded rather than NPE-ing on an executor
-    embs.select(col(idCol), col("embedding"))
+    embs.select(col("vec_id"), col("embedding"))
       .filter(col("embedding").isNotNull).as[(Long, Array[Float])]
       .mapPartitions { it =>
         val m = bc.value
@@ -246,7 +246,7 @@ object Pca {
           (id, out)
         }
       }
-      .toDF(idCol, "pc")
+      .toDF("vec_id", "pc")
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

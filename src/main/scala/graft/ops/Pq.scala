@@ -186,12 +186,12 @@ object Pq {
     * Returns (query_id, vec_id, rank, adc_dist) for the q43-style query
     * set (first [[Similarity.QueryK]] vectors).
     */
-  def ivfPqTopK(s: SparkSession, e: DataFrame, nlist: Int, m: Int = 8,
-      k: Int = 16, nprobe: Int = 2, topK: Int = 10): DataFrame = {
+  def ivfPqTopK(s: SparkSession, e: DataFrame, nlist: Int, nprobe: Int = 2,
+      topK: Int = 10): DataFrame = {
     import s.implicits._
     val cents = Similarity.fitCentroids(e, nlist)
     val bcCents = s.sparkContext.broadcast(cents)
-    val model = fit(e, m, k)
+    val model = fit(e)
     val assigned = Similarity.assignClusters(s, e, bcCents)
     // the index relation: (vec_id, bucket, pq_code) — what a production
     // deployment persists once and queries forever

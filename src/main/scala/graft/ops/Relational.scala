@@ -346,15 +346,15 @@ object Relational {
 
   /** The 100 TB form of q06: `approx_percentile` keeps a bounded sketch
     * per group instead of buffering every value (not oracled — the sketch
-    * is not bit-identical to quantile_cont; q06 stays the exact gate).
-    */
-  def latencyPctlApprox(s: SparkSession, dir: String, accuracy: Int = 10000): DataFrame =
+    * is not bit-identical to quantile_cont; q06 stays the exact gate),
+    * at Spark's default sketch accuracy, 10000. */
+  def latencyPctlApprox(s: SparkSession, dir: String): DataFrame =
     Tables.events(s, dir)
       .groupBy(col("event_type"))
       .agg(
-        expr(s"approx_percentile(value, 0.5, $accuracy)").as("p50"),
-        expr(s"approx_percentile(value, 0.95, $accuracy)").as("p95"),
-        expr(s"approx_percentile(value, 0.99, $accuracy)").as("p99"))
+        expr("approx_percentile(value, 0.5)").as("p50"),
+        expr("approx_percentile(value, 0.95)").as("p95"),
+        expr("approx_percentile(value, 0.99)").as("p99"))
 
   def oracles: Map[String, String] = Map(
     "q01_method_counts" ->

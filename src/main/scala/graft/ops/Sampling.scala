@@ -236,7 +236,8 @@ object Sampling {
     * RDD hop is the documented exception to DataFrame-only: Spark has no
     * partition-offset rank primitive, and this is the standard shape.
     */
-  def vocabIds(docs: DataFrame, minCount: Long = 2L): DataFrame = {
+  def vocabIds(docs: DataFrame): DataFrame = {
+    val minCount = 2L
     val s = docs.sparkSession
     val counts = docs.filter(col("text").isNotNull)
       .select(explode(TextAnalysis.words).as("token"))
@@ -332,7 +333,7 @@ object Sampling {
   }
 
   /** Heaps-law vocabulary growth curve (q121): distinct-token count at
-    * each of `checkpoints` equal slices of the corpus in doc_id order —
+    * each of [[Checkpoints]] equal slices of the corpus in doc_id order —
     * the curve a tokenizer budget is planned against (vocab still
     * climbing steeply at 100% means the corpus under-covers its
     * domain; a flat tail means diminishing returns per crawl). doc_id
@@ -356,12 +357,11 @@ object Sampling {
     * makes the oracle non-vacuous on the synthetic corpus, whose 31
     * words all appear in the first slice).
     */
-  def vocabGrowth(docs: DataFrame, checkpoints: Int = 10): DataFrame = {
-    require(checkpoints >= 1, s"checkpoints must be >= 1: $checkpoints")
+  def vocabGrowth(docs: DataFrame): DataFrame = {
     val session = docs.sparkSession
     val live = docs.filter(col("text").isNotNull)
     val horizon = live.agg(max(col("doc_id")).as("max_id"))
-    def bucket(idCol: String) = checkpointOf(idCol, checkpoints)
+    def bucket(idCol: String) = checkpointOf(idCol, Checkpoints)
     def firstBuckets(first: DataFrame) = first
       .crossJoin(broadcast(horizon))
       .groupBy(bucket("first_id").as("bk")).agg(count(lit(1)).as("c"))
@@ -375,7 +375,7 @@ object Sampling {
       .select(col("doc_id")).crossJoin(broadcast(horizon))
       .groupBy(bucket("doc_id").as("bk")).agg(count(lit(1)).as("c"))
     def cum(buckets: DataFrame, as: String) =
-      cumOverSpine(session, checkpoints, buckets, as)
+      cumOverSpine(session, Checkpoints, buckets, as)
     cum(docBuckets, "n_docs")
       .join(cum(tokenBuckets, "vocab"), Seq("k"))
       .join(cum(bigramBuckets, "bigram_types"), Seq("k"))
@@ -406,6 +406,9 @@ object Sampling {
         element_at(col("t"), col("i") + 1).as("w2"))
   }
 
+  /** Slices of the growth-curve family's intake axis (q121/q124/q125/q126). */
+  private[ops] val Checkpoints = 10
+
   /** k = ⌈checkpoints·id/max_id⌉ clamped to ≥ 1: the intake-checkpoint
     * index shared by the growth-curve family (q121/q124/q125) — pure
     * integer ceil-division against a `max_id` column expected in scope
@@ -429,7 +432,7 @@ object Sampling {
       .agg(coalesce(sum(col("c")), lit(0L)).as(as))
   }
 
-  /** Source-mix stationarity (q125): per intake checkpoint (`checkpoints`
+  /** Source-mix stationarity (q125): per intake checkpoint ([[Checkpoints]]
     * equal doc_id slices), the total-variation distance in integer ppm
     * between the slice's source-share distribution and the whole
     * corpus's — "is my crawl's mix stationary, or did the last 10%
@@ -444,7 +447,7 @@ object Sampling {
     * bit-identical integers.
     *
     * Scale shape: ONE corpus-scale pass — the (checkpoint, source)
-    * partial agg, map-side combined, output ≤ checkpoints·|catalog|
+    * partial agg, map-side combined, output ≤ Checkpoints·|catalog|
     * rows — MATERIALIZED once ([[Materialize]], the multi-consumer
     * contract) with everything downstream arithmetic on catalog-bounded
     * frames riding broadcasts. Absent sources (in the corpus but not in
@@ -454,12 +457,11 @@ object Sampling {
     * under sparse id remapping) has no distribution to score and emits
     * no row — identically on both engines.
     */
-  def mixDrift(docs: DataFrame, checkpoints: Int = 10): DataFrame = {
-    require(checkpoints >= 1, s"checkpoints must be >= 1: $checkpoints")
+  def mixDrift(docs: DataFrame): DataFrame = {
     val horizon = docs.agg(max(col("doc_id")).as("max_id"))
     val sb = Materialize(docs.select(col("doc_id"), col("source"))
       .crossJoin(broadcast(horizon))
-      .groupBy(checkpointOf("doc_id", checkpoints).as("k"), col("source"))
+      .groupBy(checkpointOf("doc_id", Checkpoints).as("k"), col("source"))
       .agg(count(lit(1)).as("c")))
     val slice = sb.groupBy(col("k")).agg(sum(col("c")).as("n_k"))
     val srcTot = sb.groupBy(col("source")).agg(sum(col("c")).as("n_s"))

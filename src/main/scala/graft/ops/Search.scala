@@ -44,8 +44,8 @@ object Search {
     * doc_id tiebreak, so a 1-ulp Σ-order divergence can't flip the cut
     * (q63/q65 discipline).
     */
-  def bm25(docs: DataFrame, terms: Seq[String], k: Int = 20,
-           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25(docs: DataFrame, terms: Seq[String], k: Int = 20): DataFrame = {
+    val (k1, b) = (1.2, 0.75) // the Lucene defaults
     require(terms.nonEmpty && terms.forall(t => t.nonEmpty && !t.exists(_.isWhitespace)),
       s"query terms must be non-empty, whitespace-free tokens: $terms")
     // q65's live-doc contract: NULL and whitespace-only docs excluded
@@ -120,7 +120,7 @@ object Search {
     *     map-side combine, so stopword-pair skew ("of the" everywhere)
     *     collapses to one partial row per partition before either
     *     exchange;
-    *   - `minCount` prunes the long tail BEFORE the joins, so the join
+    *   - `minCount` (3) prunes the long tail BEFORE the joins, so the join
     *     input is the (vocab × vocab ∩ observed, support ≥ minCount)
     *     frame — vocab-scale, not corpus-scale; AQE broadcasts the
     *     unigram side when it fits, and in the shuffle regime the two
@@ -137,7 +137,8 @@ object Search {
     * ~4.6·10¹² occurrences of one bigram; past that, lift the ppm
     * multiply to decimal(38,0) (ANSI mode fails loudly, not silently).
     */
-  def collocations(docs: DataFrame, minCount: Long = 3, k: Int = 100): DataFrame = {
+  def collocations(docs: DataFrame, k: Int = 100): DataFrame = {
+    val minCount = 3L
     // empty tokens (leading tab/LF whitespace) are dropped so a bigram
     // can never contain the empty word; NULL docs carry no bigrams
     val toks = docs.filter(col("text").isNotNull)

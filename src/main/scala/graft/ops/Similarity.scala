@@ -80,16 +80,17 @@ object Similarity {
   def lshBucket(vec: Column, nbits: Int, seed: Long = 42L): Column =
     graft.functions.VectorFunctions.lshBucket(vec, nbits, seed)
 
-  /** Bucket-count sizing: aim for ~`targetBucket` vectors per bucket, with
+  /** Bucket-count sizing: aim for ~`targetBucket` (64) vectors per bucket, with
     * enough planes that all-pairs work inside a bucket stays bounded as the
     * corpus grows. Clamped: ≥4 (don't over-split tiny corpora), ≤24 (16M
-    * buckets — enough for ~10⁹ vectors at the default target; each extra
+    * buckets — enough for ~10⁹ vectors at that target; each extra
     * plane is one more multiply-add pass inside the fused LshBucket loop).
     * Past the clamp the [[Dedup.bucketPairs]] cap — not the bit count — is
     * what bounds per-bucket work: oversized buckets are skipped, never
     * exploded.
     */
-  private[ops] def lshBitsFor(n: Long, targetBucket: Int = 64): Int = {
+  private[ops] def lshBitsFor(n: Long): Int = {
+    val targetBucket = 64
     val raw = math.ceil(math.log(math.max(1.0, n.toDouble / targetBucket)) / math.log(2.0)).toInt
     math.min(24, math.max(4, raw))
   }
@@ -158,13 +159,11 @@ object Similarity {
   }
 
   /** Embedding-cosine near-duplicate pairs, banded-LSH-blocked and
-    * cap-bounded; exact cosine verify on candidates only. `nHint`: corpus
-    * row count if the caller knows it (skips the statistics estimate).
+    * cap-bounded; exact cosine verify on candidates only.
     */
-  def embedNearDup(s: SparkSession, dir: String, nHint: Option[Long] = None): DataFrame = {
+  def embedNearDup(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(s, dir)
-    val n = nHint.getOrElse(estimatedRowCount(base, EmbeddingRowBytes))
-    val bits = lshBitsFor(n)
+    val bits = lshBitsFor(estimatedRowCount(base, EmbeddingRowBytes))
     // (doc_id, band, bucket): NumBands independent signatures per vector,
     // all computed map-side in one projection (one fused loop per band)
     val banded = base.select(col("vec_id").as("doc_id"),
@@ -194,9 +193,9 @@ object Similarity {
     * fan-out rides the tiny broadcast query side — the corpus is still
     * touched once.
     */
-  def annLsh(s: SparkSession, dir: String, nHint: Option[Long] = None): DataFrame = {
+  def annLsh(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(s, dir)
-    val bits = lshBitsFor(nHint.getOrElse(estimatedRowCount(base, EmbeddingRowBytes)))
+    val bits = lshBitsFor(estimatedRowCount(base, EmbeddingRowBytes))
     val e = Materialize(base.select(col("vec_id"), col("embedding"),
       lshBucket(col("embedding"), bits).as("bucket")))
     val probes = e.filter(col("vec_id") < QueryK)
@@ -454,7 +453,7 @@ object Similarity {
     * MODAL embedding length (one tiny agg, total order: count desc then
     * length asc) and ragged rows are excluded from both the sample and
     * the scoring on both engines; the mean comes from a bounded UNBIASED
-    * deterministic sample — the `sampleN` smallest
+    * deterministic sample — the `sampleN` (2048) smallest
     * `md5Prefix(vec_id)` (the shared q46 hash, so the oracle reproduces
     * the sample exactly) — summed in sample order as a left fold on the
     * driver (bounded step, ≤ sampleN·d doubles); the per-row distance is
@@ -467,7 +466,8 @@ object Similarity {
     * q43 fit contract); the scoring pass is map-side-only inside the scan
     * projection; nothing else shuffles.
     */
-  def embedOutliers(e: DataFrame, k: Int = 50, sampleN: Int = 2048): DataFrame = {
+  def embedOutliers(e: DataFrame, k: Int = 50): DataFrame = {
+    val sampleN = 2048
     val live = e.filter(col("embedding").isNotNull)
     // the corpus dimension = the MODAL embedding length (count desc, then
     // smallest length — a total, engine-independent order). Ragged rows

@@ -26,22 +26,18 @@ object Snapshot {
     * making NULL indistinguishable from a seed-colliding text): two NULLs
     * compare equal via `<=>`, NULL vs text is a change.
     */
-  def diff(a: DataFrame, b: DataFrame, idCol: String = "doc_id",
-      contentCol: String = "text"): DataFrame = {
-    def h(c: String) =
-      when(col(c).isNull, lit(null)).otherwise(xxhash64(col(c)))
-    val av = a.select(col(idCol).as("id"),
-      h(contentCol).as("ha"), lit(1).as("in_a"))
-    val bv = b.select(col(idCol).as("id"),
-      h(contentCol).as("hb"), lit(1).as("in_b"))
-    av.join(bv, Seq("id"), "full_outer")
+  def diff(a: DataFrame, b: DataFrame): DataFrame = {
+    val h = when(col("text").isNull, lit(null)).otherwise(xxhash64(col("text")))
+    val av = a.select(col("doc_id"), h.as("ha"), lit(1).as("in_a"))
+    val bv = b.select(col("doc_id"), h.as("hb"), lit(1).as("in_b"))
+    av.join(bv, Seq("doc_id"), "full_outer")
       .withColumn("status",
         when(col("in_b").isNull, lit("removed"))
           .when(col("in_a").isNull, lit("added"))
           .when(col("ha") <=> col("hb"), lit(null)) // unchanged
           .otherwise(lit("changed")))
       .filter(col("status").isNotNull)
-      .select(col("id").as("doc_id"), col("status"))
+      .select(col("doc_id"), col("status"))
   }
 
   /** Token-distribution drift between two corpus snapshots (q86) — the

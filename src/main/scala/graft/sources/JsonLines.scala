@@ -28,20 +28,22 @@ import graft.Tables
   */
 object JsonLines {
 
-  def write(df: DataFrame, path: String, compress: Boolean = true): Unit =
-    df.write.mode("overwrite")
-      .option("compression", if (compress) "gzip" else "none")
-      .json(path)
+  def write(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").option("compression", "gzip").json(path)
 
   def read(s: SparkSession, path: String, schema: StructType): DataFrame =
     s.read.schema(schema).json(path)
 
   /** Deterministic scratch dir for the driver query's roundtrip (per sf
-    * dir, reused across Verify/Bench calls).
-    */
-  private def scratch(dir: String): String =
-    sys.props("java.io.tmpdir") +
-      s"/graft_jsonl_${Integer.toHexString(dir.hashCode)}"
+    * dir, reused across Verify/Bench calls, marked live on each use); the
+    * other dirs' go once idle, by [[graft.Fs]]'s rule. */
+  private def scratch(dir: String): String = {
+    val path = graft.Fs.tmpRoot.resolve(s"graft_jsonl_${Integer.toHexString(dir.hashCode)}")
+    graft.Fs.touch(path)
+    graft.Fs.sweepIdle(graft.Fs.tmpRoot, graft.Fs.IdleMs)(p =>
+      p.getFileName.toString.startsWith("graft_jsonl_") && p != path)
+    path.toString
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Roundtrip fidelity probe: documents → gzip JSONL → read back with

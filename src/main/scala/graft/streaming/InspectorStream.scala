@@ -87,7 +87,7 @@ object InspectorStream {
     * equal [[Inspector.records]] over the same files.
     */
   def recordsFromPcapDir(spark: SparkSession, path: String,
-                         withIdleTimeout: Boolean = true,
+                         withIdleTimeout: Boolean,
                          maxFilesPerTrigger: Option[Int] = None,
                          ports: Set[Int] = Inspector.HbasePorts): Dataset[RecordInfo] =
     records(segmentsFromPcapDir(spark, path, ports, maxFilesPerTrigger), withIdleTimeout)
@@ -184,18 +184,18 @@ chmod +x ${shq(rotate)} && tcpdump $tcpdump"""
   /** POSIX single-quote: safe for any content including quotes/spaces/`$`. */
   private def shq(s: String): String = "'" + s.replace("'", "'\\''") + "'"
 
-  /** `withIdleTimeout = true` (production) arms the per-connection
+  /** `withIdleTimeout = true` (a live query) arms the per-connection
     * ProcessingTime timeout (120 s idle → state dropped). Spark then runs
-    * another micro-batch after every batch, data or not, to check the
-    * timeouts, so on the default trigger a drained directory spins
-    * through back-to-back empty batches; the CLI's live `-k` run pins a
-    * fixed interval ([[graft.Main.LiveTriggerMs]]) for that reason.
-    * Deterministic tests pass `false` and rely on the event-ts-relative
+    * another micro-batch after every batch, data or not: on the default
+    * trigger a drained directory spins through back-to-back empty batches
+    * (the CLI's live `-k` run pins [[graft.Main.LiveTriggerMs]]), and a
+    * `Trigger.AvailableNow` query never finishes. Replays, benchmarks and
+    * deterministic tests pass `false` and rely on the event-ts-relative
     * expiry [[ConnTracker.run]] applies after each capture file, which
     * runs either way.
     */
   def records(segments: Dataset[KeyedSegment],
-              withIdleTimeout: Boolean = true): Dataset[RecordInfo] = {
+              withIdleTimeout: Boolean): Dataset[RecordInfo] = {
     // The state row is the flat StateEnvelope (version int, payload
     // binary): the snapshot is already serialized inside it, and a product
     // encoder for the deeply nested ConnSnapshot itself would make

@@ -20,11 +20,17 @@ import org.apache.spark.sql.functions._
   */
 object StreamingOps {
 
+  /** Event-time horizon of the stateful screens; [[leakIntakeMonitor]]'s
+    * intake bucket; [[nearDupScreen]]'s estimated-Jaccard flag threshold. */
+  private val Watermark = "10 minutes"
+  private val IntakeBucket = "1 minute"
+  private val NearDupMinEst = 0.5
+
   /** Streaming exact dedup. `docs` needs `event_time` (timestamp) and
     * `text`; emits the first-seen row per distinct text within the
     * watermark horizon.
     */
-  def exactDedup(docs: DataFrame, watermark: String = "10 minutes"): DataFrame =
+  def exactDedup(docs: DataFrame, watermark: String = Watermark): DataFrame =
     docs
       .withColumn("text_key", xxhash64(col("text")))
       .withColumn("text_len", length(col("text")))
@@ -41,8 +47,7 @@ object StreamingOps {
     * batch. `sink` receives each batch's `(doc_id, n_shared)` frame —
     * write it, anti-join it against the batch, alert on it.
     */
-  def contaminationScreen(docs: DataFrame, benchGrams: DataFrame,
-                          n: Int = graft.ops.Decontam.GramN)(
+  def contaminationScreen(docs: DataFrame, benchGrams: DataFrame)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     // `benchGrams` is the caller-derived (and caller-cached/freed)
     // [[graft.ops.Decontam.benchGramSet]] — derived ONCE, like
@@ -50,7 +55,7 @@ object StreamingOps {
     // method would have no unpersist path and would pin executor storage
     // for the application lifetime after the query stops.
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.ops.Decontam.contaminatedWithGrams(batch, benchGrams, n), batchId)
+      sink(graft.ops.Decontam.contaminatedWithGrams(batch, benchGrams), batchId)
     }
 
   /** Streaming incremental dedup: screen each micro-batch of incoming
@@ -66,27 +71,24 @@ object StreamingOps {
     * upstream for exact copies). `sink` receives each batch's
     * `(doc_id, dup_of, jaccard)` frame.
     */
-  def incrementalScreen(docs: DataFrame, index: graft.ops.Dedup.RefIndex,
-                        minJaccard: Double = 0.8)(
+  def incrementalScreen(docs: DataFrame, index: graft.ops.Dedup.RefIndex)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.ops.Dedup.screenAgainstIndex(index, batch, minJaccard), batchId)
+      sink(graft.ops.Dedup.screenAgainstIndex(index, batch), batchId)
     }
 
   /** Stateless streaming quality filter: keep docs under the repetition
     * thresholds (Gopher-style dup_gram_ratio / top_token_ratio cuts).
     * Pure projection + filter — no state, no watermark needed.
     */
-  def qualityFiltered(docs: DataFrame,
-                      maxDupGramRatio: Double = graft.ops.TextAnalysis.MaxDupGramRatio,
-                      maxTopTokenRatio: Double = graft.ops.TextAnalysis.MaxTopTokenRatio): DataFrame =
+  def qualityFiltered(docs: DataFrame): DataFrame =
     docs
       .withColumn("st", graft.functions.RepetitionStats(col("text")))
       // ratio definitions shared with batch q44 — one source of truth
       .withColumn("dup_gram_ratio", graft.ops.TextAnalysis.dupGramRatio(col("st")))
       .withColumn("top_token_ratio", graft.ops.TextAnalysis.topTokenRatio(col("st")))
-      .filter(col("dup_gram_ratio") <= maxDupGramRatio &&
-        col("top_token_ratio") <= maxTopTokenRatio)
+      .filter(col("dup_gram_ratio") <= graft.ops.TextAnalysis.MaxDupGramRatio &&
+        col("top_token_ratio") <= graft.ops.TextAnalysis.MaxTopTokenRatio)
       .drop("st")
 
   /** Cumulative streaming leak monitor — the live form of batch q104
@@ -110,12 +112,11 @@ object StreamingOps {
     * its distinct-state is gram-scale, not doc-scale.
     */
   def leakMonitor(docs: DataFrame, benchGramIds: DataFrame,
-                  n: Int = graft.ops.Decontam.GramN,
-                  watermark: String = "10 minutes"): DataFrame =
+                  watermark: String = Watermark): DataFrame =
     docs
       .withWatermark("event_time", watermark)
       .select(col("event_time"), col("doc_id"),
-        explode(graft.ops.Decontam.gramArray(n)).as("g"))
+        explode(graft.ops.Decontam.gramArray).as("g"))
       .join(broadcast(benchGramIds), "g")
       .dropDuplicatesWithinWatermark("bench_id", "doc_id")
       .groupBy(col("bench_id")).agg(count(lit(1)).as("n_train_docs"))
@@ -141,17 +142,14 @@ object StreamingOps {
     * (closed buckets evict). Same watermark trade: a leaked doc
     * re-arriving after the horizon can double-count.
     */
-  def leakIntakeMonitor(docs: DataFrame, benchGramIds: DataFrame,
-                        n: Int = graft.ops.Decontam.GramN,
-                        watermark: String = "10 minutes",
-                        bucket: String = "1 minute"): DataFrame =
+  def leakIntakeMonitor(docs: DataFrame, benchGramIds: DataFrame): DataFrame =
     docs
-      .withWatermark("event_time", watermark)
+      .withWatermark("event_time", Watermark)
       .select(col("event_time"), col("doc_id"),
-        explode(graft.ops.Decontam.gramArray(n)).as("g"))
+        explode(graft.ops.Decontam.gramArray).as("g"))
       .join(broadcast(benchGramIds), "g")
       .dropDuplicatesWithinWatermark("doc_id")
-      .groupBy(window(col("event_time"), bucket))
+      .groupBy(window(col("event_time"), IntakeBucket))
       .agg(count(lit(1)).as("n_leaked_docs"))
       .select(col("window.start").as("intake_start"), col("n_leaked_docs"))
 
@@ -179,7 +177,7 @@ object StreamingOps {
     *
     * Geometry is IDENTICAL to batch q31 — same hashedGrams(3) space,
     * same 16-permutation minhash family, same hash-of-4-minima band
-    * keys, same est = matching-minima/16, same ≥ 0.5 default flag
+    * keys, same est = matching-minima/16, same ≥ 0.5 flag
     * threshold ([[graft.ops.Dedup.rowMinhashSig]] /
     * [[graft.ops.Dedup.rowBandKeys]] — the per-row twins of the batch
     * aggregate form) — so a hit here means "batch q31 would pair these
@@ -202,15 +200,13 @@ object StreamingOps {
     * and a near-dup arriving after its twin left the horizon is missed,
     * the standard watermark trade.
     */
-  def nearDupScreen(docs: DataFrame, watermark: String = "10 minutes",
-                    minEst: Double = 0.5,
-                    cap: Int = graft.ops.Dedup.BucketCap): DataFrame = {
+  def nearDupScreen(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import java.sql.Timestamp
     val s = docs.sparkSession
     import s.implicits._
     val banded = docs
-      .withWatermark("event_time", watermark)
+      .withWatermark("event_time", Watermark)
       .select(col("event_time"), col("doc_id"),
         graft.ops.Dedup.rowMinhashSig.as("sig"))
       // all-sentinel = no gram (< 3 tokens): the aggregate form has no
@@ -234,12 +230,12 @@ object StreamingOps {
             // "earlier doc = dup_of" is deterministic within a batch
             for ((ts, id, sig, band, _) <-
                  it.toArray.sortBy(r => (r._1.getTime, r._2))) {
-              if (members.size < cap) {
+              if (members.size < graft.ops.Dedup.BucketCap) {
                 for (m <- members if m.docId != id) {
                   val matches = sig.iterator.zip(m.sig.iterator)
                     .count { case (x, y) => x == y }
                   val est = matches.toDouble / sig.length
-                  if (est >= minEst) out += NearDupHit(id, m.docId, band, est)
+                  if (est >= NearDupMinEst) out += NearDupHit(id, m.docId, band, est)
                 }
                 members = members :+ BandMember(id, sig, ts.getTime)
               }
@@ -248,7 +244,7 @@ object StreamingOps {
             else {
               state.update(BandBucket(members))
               // evict the bucket one horizon after its newest member
-              state.setTimeoutTimestamp(members.map(_.tsMs).max, watermark)
+              state.setTimeoutTimestamp(members.map(_.tsMs).max, Watermark)
             }
             out.result().iterator
           }

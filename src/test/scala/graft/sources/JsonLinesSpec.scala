@@ -43,4 +43,19 @@ class JsonLinesSpec extends SparkSpec {
       .orderBy("lang").collect().map(_.toSeq).toSeq
     assert(viaJson === direct)
   }
+
+  test("q67 sweeps idle graft_jsonl_* roundtrip dirs and keeps live ones") {
+    import java.nio.file.attribute.FileTime
+    val tag = java.util.UUID.randomUUID().toString.take(8)
+    val idle = Files.createDirectories(graft.Fs.tmpRoot.resolve(s"graft_jsonl_idle_$tag"))
+    val live = Files.createDirectories(graft.Fs.tmpRoot.resolve(s"graft_jsonl_live_$tag"))
+    try {
+      val twoHoursAgo = FileTime.fromMillis(System.currentTimeMillis() - 2 * 3600 * 1000L)
+      Files.setLastModifiedTime(Files.write(idle.resolve("part"), Array[Byte](1)), twoHoursAgo)
+      Files.setLastModifiedTime(idle, twoHoursAgo)
+      graft.SparkEntry.queries("q67_jsonl")(spark, docsDir(Seq((1L, "alpha"))))
+      assert(!Files.exists(idle), "an idle roundtrip dir survived q67")
+      assert(Files.exists(live), "q67 swept a live roundtrip dir")
+    } finally Seq(idle, live).foreach(graft.Fs.deleteTree)
+  }
 }

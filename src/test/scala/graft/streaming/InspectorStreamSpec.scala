@@ -140,19 +140,35 @@ class InspectorStreamSpec extends SparkSpec {
     assert(find("10.8.8.4", true, 40).row === Some("d" * 400))
     assert(find("10.8.8.4", false, 40).elapsed === Some(30999L)) // from the completing half
 
-    for (perTrigger <- Seq(Some(1), Some(2), None)) {
-      val name = s"rotation_parity_${perTrigger.getOrElse(0)}"
-      val query = InspectorStream
-        .recordsFromPcapDir(s, dir.toString, withIdleTimeout = false,
+    import org.apache.spark.sql.streaming.Trigger
+    for ((perTrigger, armed) <- Seq((Some(1), false), (Some(2), false), (None, false),
+                                    (Some(1), true))) {
+      val name = s"rotation_parity_${perTrigger.getOrElse(0)}_$armed"
+      val writer = InspectorStream
+        .recordsFromPcapDir(s, dir.toString, withIdleTimeout = armed,
           maxFilesPerTrigger = perTrigger)
         .writeStream.format("memory").queryName(name)
         .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      assert(query.awaitTermination(120000), "AvailableNow replay must terminate")
+      if (armed) {
+        // the live CLI's setting. An armed idle timeout has Spark run a
+        // batch after every batch, so neither an AvailableNow replay nor
+        // processAllAvailable() ever returns: run on a short trigger until
+        // every file has been a batch of its own, then stop
+        val query = writer.trigger(Trigger.ProcessingTime(200)).start()
+        try {
+          val deadline = System.nanoTime() + 120000000000L
+          while (query.recentProgress.count(_.numInputRows > 0) < files.size &&
+              query.isActive && System.nanoTime() < deadline) Thread.sleep(50)
+          assert(query.recentProgress.count(_.numInputRows > 0) === files.size,
+            "the armed query did not take every capture file")
+        } finally query.stop()
+      } else {
+        val query = writer.trigger(Trigger.AvailableNow()).start()
+        assert(query.awaitTermination(120000), "AvailableNow replay must terminate")
+      }
       import graft.inspector.RecordEncoders._
       val streamed = ordered(s.table(name).as[RecordInfo].collect().toSeq)
-      assert(streamed === batch, s"maxFilesPerTrigger = $perTrigger")
+      assert(streamed === batch, s"maxFilesPerTrigger = $perTrigger, idle timeout armed = $armed")
     }
   }
 
@@ -359,17 +375,33 @@ class InspectorStreamSpec extends SparkSpec {
     assert(!query.isActive)
   }
 
+  test("-k -c configuration: the capped replay terminates on a directory holding fewer than N records") {
+    // Main.runKafka's -c shape, one file per trigger under AvailableNow;
+    // with the idle timeout armed Spark ran a batch after every batch, so
+    // the replay never finished and kept writing checkpoint files
+    val s = spark
+    val query = graft.Main
+      .kafkaRecords(s, SyntheticTraffic.ensurePcapDir(), Inspector.HbasePorts, capped = true)
+      .writeStream.format("noop").queryName("capped_replay")
+      .option("checkpointLocation", TestSpark.tempDir("graft_capped_ckpt"))
+      .trigger(graft.Main.kafkaTrigger(capped = true))
+      .start()
+    try assert(query.awaitTermination(60000), "the -c replay did not terminate within 60 s")
+    finally query.stop()
+  }
+
   test("live -k trigger: an idle query with the idle timeout armed runs at most one batch per interval") {
-    // the CLI's live query shape: idle timeout armed (recordsFromPcapDir's
-    // default) on the trigger Main.runKafka starts it with; on Spark's
-    // default trigger this drained directory ran dozens of empty batches
+    // the CLI's live query shape (idle timeout armed) on the trigger
+    // Main.runKafka starts it with; on Spark's default trigger this
+    // drained directory ran dozens of empty batches
     val s = spark
     import java.nio.file.{Files, Paths}
     val srcDir = Paths.get(TestSpark.tempDir("graft_idle_src"))
     val ckpt = Paths.get(TestSpark.tempDir("graft_idle_ckpt"))
     Files.copy(Paths.get(SyntheticTraffic.ensurePcapDir()).resolve("capture-00001.pcap"),
       srcDir.resolve("c1.pcap"))
-    val query = InspectorStream.recordsFromPcapDir(s, srcDir.toString).toDF()
+    val query = graft.Main
+      .kafkaRecords(s, srcDir.toString, Inspector.HbasePorts, capped = false)
       .writeStream.format("noop").queryName("idle_trigger")
       .option("checkpointLocation", ckpt.toString)
       .trigger(graft.Main.kafkaTrigger(capped = false))
