@@ -23,8 +23,9 @@ import java.nio.file.{Files, Paths}
   * wide projections. Failures are recorded per-query (`"status"`) instead of
   * being silently timed as successes.
   *
-  * Between queries the harness unpersists every persistent RDD and clears
-  * the plan cache (outside the timed region): localCheckpoint blocks from
+  * Between queries the harness releases every persistent RDD and clears
+  * the plan cache ([[Sessions.dropPersisted]], outside the timed region;
+  * the release logs no per-RDD warning): localCheckpoint blocks from
   * [[graft.ops.Materialize]] consumers otherwise accumulate for the whole
   * 80+-query run — ContextCleaner only reclaims them on a driver GC, which
   * a 128 GiB heap rarely triggers — and the block-manager pressure taxes
@@ -52,20 +53,6 @@ import java.nio.file.{Files, Paths}
   * protocol of tools/r16/GATE_SF10.md, now one command).
   */
 object Bench {
-
-  /** The per-query block sweep unpersists localCheckpoint'd RDDs once
-    * their query has fully materialized; RDD.unpersist then warns "was
-    * locally checkpointed ... cannot be recomputed" through the concrete
-    * RDD class logger, dozens of which would land in the same pre-JSON
-    * stderr tail the WindowExec warnings polluted in round 8. Silenced
-    * HERE (Bench/Verify processes only), not in log4j2.properties — the
-    * interactive CLI keeps the whole org.apache.spark.rdd WARN surface
-    * (corrupt-input skips etc. are actionable there).
-    */
-  private[graft] def quietRddWarnings(): Unit =
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd", org.apache.logging.log4j.Level.ERROR)
-    catch { case _: Throwable => () }
 
   /** Unique qNN prefix of a query name ("q66_semdedup" → "q66"): the
     * stdout JSON key and the floor-map key.
@@ -359,7 +346,6 @@ object Bench {
         " no concurrent JVMs during gate runs")
     val spark = Sessions.local(defaultCpus = 32)
     spark.sparkContext.setLogLevel("WARN")
-    quietRddWarnings()
 
     // Scale resolution (round-13 verdict item #1): the official gate
     // hands us sf0.1, where 80+ queries run sub-second and three

@@ -417,7 +417,7 @@ object Main {
     Inspector.registerViews(spark, dir, ports, maxRecords)
     graft.functions.VectorFunctions.register(spark)
     if (verbose) {
-      // materializes the shared cache once; every later statement reuses it
+      // materializes the shared records once; every later statement reuses them
       val nReq = spark.table("requests").count()
       val nRes = spark.table("responses").count()
       out.println(s"[v] decoded $nReq requests, $nRes responses" +

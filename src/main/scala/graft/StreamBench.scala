@@ -100,7 +100,6 @@ object StreamBench {
 
     val spark = Sessions.local(defaultCpus = 32)
     spark.sparkContext.setLogLevel("WARN")
-    Bench.quietRddWarnings()
 
     val legs = scala.collection.mutable.ArrayBuffer.empty[Leg]
     val jvm0 = JvmTelemetry.snapshot()
@@ -179,7 +178,7 @@ object StreamBench {
         // caller-owned gram-set lifecycle (the contaminationScreen contract)
         val bench = spark.read.parquet(docsPath)
           .filter(col("doc_id") % 41 === 0).select(col("doc_id"), col("text"))
-        val benchGrams = graft.ops.Decontam.benchGramSet(bench).cache()
+        val benchGrams = graft.ops.Materialize(graft.ops.Decontam.benchGramSet(bench))
         benchGrams.count() // materialize outside the timed region
         val contaminated = new java.util.concurrent.atomic.LongAdder
         try {
@@ -193,7 +192,7 @@ object StreamBench {
                 .trigger(Trigger.AvailableNow()).start()
           }
           legs += Leg("decontam", nDocs, contaminated.sum(), sec, stRows, stMb)
-        } finally benchGrams.unpersist()
+        } finally graft.ops.Materialize.free(benchGrams)
       }
 
       // ---- leg 4: streaming near-dup screen (r20 — the live q31) ----

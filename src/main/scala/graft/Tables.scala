@@ -64,16 +64,17 @@ object Sessions {
       .getOrCreate()
   }
 
-  /** The per-query block sweep of Bench and Verify: unpersists every
+  /** The per-query block sweep of Bench and Verify: releases every
     * persisted RDD (the `localCheckpoint` blocks of
-    * [[graft.ops.Materialize]] consumers) and clears the plan cache, so
-    * no query's blocks pressure the block manager for the rest of the
-    * run (Bench class doc). A failure is reported on stderr, not thrown.
+    * [[graft.ops.Materialize]] consumers, which the plan cache does not
+    * hold) and clears the plan cache, so no query's blocks pressure the
+    * block manager for the rest of the run (Bench class doc). A failure
+    * is reported on stderr, not thrown.
     */
   def dropPersisted(spark: SparkSession, after: String): Unit =
     try {
       spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+        .foreach(org.apache.spark.sql.graft.Bridge.releaseBlocks)
       spark.catalog.clearCache()
     } catch { case e: Throwable =>
       System.err.println(s"[graft] post-$after cleanup failed: $e")

@@ -8,7 +8,6 @@ object Verify {
     val Array(sfDir, outDir) = args
     val spark = Sessions.local(defaultCpus = 4)
     spark.sparkContext.setLogLevel("WARN")
-    Bench.quietRddWarnings() // the per-query sweep's unpersist warnings
     new java.io.File(outDir).mkdirs()
     // the q20-q24 oracle SQL references expected_* parquet fixtures in
     // /tmp: write them HERE, not only as a side effect of the paired

@@ -32,4 +32,10 @@ object Bridge {
       : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] =
     org.apache.spark.util.SerializableConfiguration.broadcast(spark.sparkContext,
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.newHadoopConf())
+
+  /** Drop an RDD's blocks, as `ContextCleaner` does for a collected RDD:
+    * unlike `RDD.unpersist`, no "was locally checkpointed" WARN.
+    */
+  def releaseBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -27,8 +27,9 @@ import graft.sources.FileRecords
   *     the state bounds (120 s expiry, byte and entry caps) apply after
   *     every capture file here as there;
   *   - everything downstream of `records` is plain DataFrame work that
-  *     Catalyst optimizes (the 4 views are projections of one cached
-  *     dataset, not four pipeline replays).
+  *     Catalyst optimizes (the 4 tables are projections of one records
+  *     dataset held by [[graft.ops.Materialize]], not four pipeline
+  *     replays).
   */
 object Inspector {
 
@@ -109,25 +110,28 @@ object Inspector {
     "actions" -> actionsTable(records), "results" -> resultsTable(records))
 
   /** The records under `path`, cut to the first `maxRecords` if given,
-    * cached so the 4 tables share one pipeline run. `maxRecords` is the
+    * held by [[graft.ops.Materialize]] so the 4 tables share one pipeline
+    * run; release them with `Materialize.free`. `maxRecords` is the
     * reference's `-c` count cap (core.clj:51-53): a take-bound on the
     * record stream for "grab the first N and look" runs — which N is
     * processing-order-dependent, exactly like the reference's packet cap.
     */
-  private def cachedRecords(spark: SparkSession, path: String, ports: Set[Int],
+  private def sharedRecords(spark: SparkSession, path: String, ports: Set[Int],
                             maxRecords: Option[Int]): Dataset[RecordInfo] = {
     val all = records(spark, path, ports)
-    maxRecords.fold(all)(n => all.limit(n)).cache()
+    graft.ops.Materialize(maxRecords.fold(all)(n => all.limit(n)))
   }
 
-  /** SQL surface: 4 temp views over one cached pipeline run + spark.sql
+  /** SQL surface: 4 temp views over one shared pipeline run + spark.sql
     * passthrough (reference sink/db.clj:101-113 shell/web — arbitrary SQL
-    * over requests/responses/actions/results).
+    * over requests/responses/actions/results). The views read the shared
+    * records' blocks until `graft.Sessions.dropPersisted` releases them;
+    * `spark.catalog.clearCache()` does not reach those blocks.
     */
   def registerViews(spark: SparkSession, path: String,
                     ports: Set[Int] = HbasePorts,
                     maxRecords: Option[Int] = None): Unit =
-    tables(cachedRecords(spark, path, ports, maxRecords))
+    tables(sharedRecords(spark, path, ports, maxRecords))
       .foreach { case (name, df) => df.createOrReplaceTempView(name) }
 
   /** Persist the 4 tables bucketed by the join key — the Spark
@@ -139,7 +143,7 @@ object Inspector {
   def saveTables(spark: SparkSession, pcapPath: String, prefix: String,
                  buckets: Int = 32, ports: Set[Int] = HbasePorts,
                  maxRecords: Option[Int] = None): Seq[String] = {
-    val recs = cachedRecords(spark, pcapPath, ports, maxRecords)
+    val recs = sharedRecords(spark, pcapPath, ports, maxRecords)
     val saved = tables(recs).map { case (name, df) =>
       // saveAsTable lowercases unquoted identifiers — build the leftover
       // path from the same casing or a stale dir slips past the check
@@ -160,7 +164,7 @@ object Inspector {
         .saveAsTable(table)
       table
     }
-    recs.unpersist()
+    graft.ops.Materialize.free(recs)
     saved
   }
 

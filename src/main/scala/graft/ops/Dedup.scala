@@ -1440,7 +1440,8 @@ object Dedup {
 
   /** Precomputed reference index for REPEATED screening (the streaming
     * form of incremental dedup): df-capped posting lists and
-    * reference-scope doc sizes, derived, shuffled and cached ONCE.
+    * reference-scope doc sizes, derived and shuffled ONCE and held by
+    * [[Materialize]].
     *
     * Documented semantic difference from the one-shot [[incrementalDedup]]
     * (union-scope df): here the gram space is FIXED BY THE REFERENCE —
@@ -1452,24 +1453,22 @@ object Dedup {
     * its micro-batch.
     */
   final case class RefIndex private[ops] (postings: DataFrame, sizes: DataFrame) {
-    /** Release the cached frames once screening is done. */
-    def free(): Unit = { postings.unpersist(); sizes.unpersist() }
+    /** Release the held frames once screening is done. */
+    def free(): Unit = { Materialize.free(postings); Materialize.free(sizes) }
   }
 
   def buildRefIndex(reference: DataFrame): RefIndex = {
-    val postings = gramsOf(reference)
+    val postings = Materialize(gramsOf(reference)
       .groupBy(col("g"))
       .agg(graft.functions.CappedCollectSetLong(col("doc_id"), DfCap).as("ids"))
-      .filter(size(col("ids")) <= DfCap) // reference df in [1, DfCap]
-      .cache()
-    val sizes = postings.select(explode(col("ids")).as("doc_id"))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      .cache()
+      .filter(size(col("ids")) <= DfCap)) // reference df in [1, DfCap]
+    val sizes = Materialize(postings.select(explode(col("ids")).as("doc_id"))
+      .groupBy(col("doc_id")).agg(count(lit(1)).as("sz")))
     RefIndex(postings, sizes)
   }
 
   /** Screen an increment against a prebuilt [[RefIndex]]: per-call cost
-    * is a map-side scan of the cached postings (the small increment gram
+    * is a map-side scan of the held postings (the small increment gram
     * set is BROADCAST into the join) plus increment-scale aggregation —
     * the reference is never re-shuffled and no reference-reference pair
     * is ever expanded. Same output shape as [[incrementalDedup]]:

@@ -1,14 +1,17 @@
 package graft.ops
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.Bridge
 
-/** Lineage-breaking materialization for multiply-consumed intermediates
-  * (minhash/simhash signatures, LSH-bucketed vectors, posting lists): the
-  * signature pipeline would otherwise be replayed once per consumer
-  * (banding + both join-back sides), and `CollapseProject` would re-inline
-  * any CodegenFallback expression into each of them.
+/** The one way `src/main` holds an intermediate read more than once: the
+  * ops' multiply-consumed frames (signatures, LSH-bucketed vectors,
+  * posting lists, iteration labels), `Inspector`'s shared records behind
+  * its four tables, `Dedup.buildRefIndex`'s postings and sizes, and
+  * `StreamBench`'s leg-3 bench grams. Without it each consumer would
+  * replay the pipeline, and `CollapseProject` would re-inline any
+  * CodegenFallback expression into each of them.
   *
   * Two modes, selected by `spark.graft.reliableCheckpoint`:
   *   - `false` (default): `localCheckpoint` — executor-local blocks, fast,
@@ -19,9 +22,10 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     loss by re-reading the checkpoint instead of dying. Requires
   *     `SparkContext.setCheckpointDir`.
   *
-  * Both are LAZY (`eager = false`): plan construction stays job-free — the
-  * materialization runs as part of the query's own first execution, and the
-  * persisted blocks are shared by every consumer from then on.
+  * Both are LAZY (`eager = false`): the checkpoint's own stage runs as part
+  * of the query's first execution, and its blocks are shared by every
+  * consumer from then on. Under AQE, building the checkpoint runs the
+  * shuffle-map stages below it.
   *
   * Every checkpoint is taken: there is no session switch that turns them
   * off. Plan evidence for the pipeline a checkpoint hides behind its
@@ -38,9 +42,9 @@ private[graft] object Materialize {
   // its attributes, not its RDD). Weak keys: a dropped result frame lets
   // its entry be collected.
   private val behind = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[RDD[_], DataFrame]())
+    new java.util.WeakHashMap[RDD[_], Dataset[_]]())
 
-  def apply(df: DataFrame): DataFrame = {
+  def apply[T](df: Dataset[T]): Dataset[T] = {
     val out =
       if (df.sparkSession.conf.getOption(ReliableFlag).exists(_.toBoolean))
         // persist first: an unpersisted reliable checkpoint re-executes the
@@ -54,18 +58,18 @@ private[graft] object Materialize {
     out
   }
 
-  private def checkpointRdds(df: DataFrame): Seq[RDD[_]] =
+  private def checkpointRdds(df: Dataset[_]): Seq[RDD[_]] =
     df.queryExecution.analyzed.collectWithSubqueries { case lr: LogicalRDD => lr.rdd }
 
-  private def behindOf(df: DataFrame): Seq[DataFrame] =
+  private def behindOf(df: Dataset[_]): Seq[Dataset[_]] =
     checkpointRdds(df).flatMap(r => Option(behind.get(r)))
 
   /** The frames behind every checkpoint `df` reads, transitively, nearest
     * first — read-only plan evidence: `explain` on them shows the
     * pipeline each checkpoint replaced.
     */
-  def sources(df: DataFrame): Seq[DataFrame] =
-    Iterator.iterate(Seq(df))(_.flatMap(behindOf)).drop(1).takeWhile(_.nonEmpty)
+  def sources(df: Dataset[_]): Seq[Dataset[_]] =
+    Iterator.iterate(Seq[Dataset[_]](df))(_.flatMap(behindOf)).drop(1).takeWhile(_.nonEmpty)
       .flatten.toSeq.distinct
 
   /** Eagerly free the block storage behind a frame returned by [[apply]]
@@ -78,9 +82,9 @@ private[graft] object Materialize {
     * post-checkpoint blocks are released. Either way the frame drops out
     * of [[sources]]. No-op for non-checkpointed plans.
     */
-  def free(df: DataFrame): Unit = df.queryExecution.analyzed match {
+  def free(df: Dataset[_]): Unit = df.queryExecution.analyzed match {
     case lr: LogicalRDD =>
-      lr.rdd.unpersist(blocking = false)
+      Bridge.releaseBlocks(lr.rdd)
       // never cached in local mode, so unpersist is a no-op there
       Option(behind.remove(lr.rdd)).foreach(_.unpersist(blocking = false))
     case _ => ()

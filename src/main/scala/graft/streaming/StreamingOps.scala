@@ -49,10 +49,10 @@ object StreamingOps {
     */
   def contaminationScreen(docs: DataFrame, benchGrams: DataFrame)(
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    // `benchGrams` is the caller-derived (and caller-cached/freed)
+    // `benchGrams` is the caller-derived (and caller-held/freed)
     // [[graft.ops.Decontam.benchGramSet]] — derived ONCE, like
-    // [[incrementalScreen]]'s RefIndex: an op-owned cache inside this
-    // method would have no unpersist path and would pin executor storage
+    // [[incrementalScreen]]'s RefIndex: an op-owned copy inside this
+    // method would have no release path and would pin executor storage
     // for the application lifetime after the query stops.
     docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       sink(graft.ops.Decontam.contaminatedWithGrams(batch, benchGrams), batchId)
@@ -62,7 +62,7 @@ object StreamingOps {
     * documents against a prebuilt STATIC reference index
     * ([[graft.ops.Dedup.buildRefIndex]] — the caller builds it once and
     * `free()`s it after the query stops). Per trigger this costs a
-    * map-side scan of the cached postings plus batch-scale work — the
+    * map-side scan of the held postings plus batch-scale work — the
     * reference corpus is never re-tokenized, re-shuffled, or pair-
     * expanded ([[graft.ops.Dedup.screenAgainstIndex]]; the gram space is
     * reference-scope, see its doc). What this does NOT flag — by
@@ -101,7 +101,7 @@ object StreamingOps {
     *
     * State discipline (the 100 TB question): `benchGramIds` is the
     * caller-derived broadcast index (the [[contaminationScreen]]
-    * contract — derived once, caller-cached/freed); the corpus-side gram
+    * contract — derived once, caller-held/freed); the corpus-side gram
     * stream is map-side and stateless. The two stateful operators are
     * both bounded: dropDuplicatesWithinWatermark on (bench_id, doc_id)
     * holds pairs for the watermark horizon only (contamination-rate-

@@ -332,6 +332,30 @@ class BenchSpec extends AnyFunSuite {
     assert(stray.isEmpty, s"env reads outside the deployment settings: $stray")
   }
 
+  test("src/main holds reused intermediates only through Materialize") {
+    // one module decides how an intermediate read more than once is held
+    // and released; everything else calls ops.Materialize
+    val holds = """\.cache\(\)|\.persist\(|localCheckpoint\(|\.checkpoint\(|\.unpersist\(""".r
+    // string and char literals are matched (and kept) so that a "/*" in
+    // a glob does not open a comment
+    val lexemes = """(?s)"{3}.*?"{3}|'(?:\\.|[^'\\\n])'|"(?:\\.|[^"\\\n])*"|/\*.*?\*/|//[^\n]*""".r
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val files = java.nio.file.Files.walk(root)
+    val found = try files.iterator().asScala.toSeq
+      .filter(f => f.toString.endsWith(".scala") && f != root.resolve("ops/Materialize.scala"))
+      .flatMap { f =>
+        // blank out comments but keep their line breaks, so line numbers hold
+        val code = lexemes.replaceAllIn(java.nio.file.Files.readString(f), m =>
+          java.util.regex.Matcher.quoteReplacement(
+            if (m.matched.startsWith("/")) m.matched.replaceAll("[^\n]", "") else m.matched))
+        code.linesIterator.zipWithIndex.collect {
+          case (line, i) if holds.findFirstIn(line).nonEmpty => s"$f:${i + 1}: ${line.trim}"
+        }
+      } finally files.close()
+    assert(found.isEmpty,
+      s"intermediates held outside ops.Materialize:\n${found.mkString("\n")}")
+  }
+
   test("jsonStr escapes quotes, backslashes and control chars") {
     assert(Bench.jsonStr("""/plain/path""") === "/plain/path")
     assert(Bench.jsonStr("""a"b""") === """a\"b""")

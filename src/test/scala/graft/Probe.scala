@@ -82,7 +82,7 @@ object Probe {
       say(f"[probe] $n rep$i: $sec%.2f s ${JvmTelemetry.delta(jvm0)}")
       // the rep's checkpoints must not serve the next rep
       (spark.sparkContext.getPersistentRDDs -- persisted).values
-        .foreach(_.unpersist(blocking = false))
+        .foreach(org.apache.spark.sql.graft.Bridge.releaseBlocks)
     }
     spark.sparkContext.setJobDescription(null)
     names.foreach { n =>

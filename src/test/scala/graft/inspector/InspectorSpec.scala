@@ -227,4 +227,45 @@ class InspectorSpec extends SparkSpec {
     assert(spark.sql("SELECT count(*) FROM actions").collect()(0).getLong(0) === 3L)
     assert(spark.sql("SELECT count(*) FROM results").collect()(0).getLong(0) === 3L)
   }
+
+  test("saveTables and a capped registerViews share one records run") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val nFiles = spark.read.format("binaryFile").load(dir).count()
+    // capture paths read by file scans: one row per capture file opened
+    val scanStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val pathsRead = new java.util.concurrent.atomic.LongAdder
+    val l = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scanStages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (scanStages.contains(e.stageId) && e.taskMetrics != null)
+          pathsRead.add(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    val persisted = sc.getPersistentRDDs.keySet
+    sc.addSparkListener(l)
+    val saved =
+      try Inspector.saveTables(spark, dir, "share", buckets = 2)
+      finally {
+        org.apache.spark.graft.TestBridge.waitUntilListenerBusEmpty(sc)
+        sc.removeSparkListener(l)
+      }
+    assert(pathsRead.sum() === nFiles, "each capture file read once for the 4 tables")
+    assert(sc.getPersistentRDDs.keySet === persisted, "saveTables released what it held")
+    assert(spark.table("share_requests").count() === SyntheticTraffic.ExpectedRequests)
+    saved.foreach(t => spark.sql(s"DROP TABLE $t"))
+
+    val n = 7
+    Inspector.registerViews(spark, dir, maxRecords = Some(n))
+    def one(sql: String): Long = spark.sql(sql).collect()(0).getLong(0)
+    assert(one("SELECT count(*) FROM requests") +
+      one("SELECT count(*) FROM responses") === n)
+    val keys = """SELECT client, port, call_id, 'q' FROM requests
+                 |UNION ALL SELECT client, port, call_id, 's' FROM responses
+                 |ORDER BY 1, 2, 3, 4""".stripMargin
+    val first = spark.sql(keys).collect().toSeq
+    assert(first.size === n)
+    assert(spark.sql(keys).collect().toSeq === first, "a later statement saw other records")
+  }
 }

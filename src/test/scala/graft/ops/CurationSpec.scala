@@ -363,6 +363,28 @@ class CurationSpec extends SparkSpec {
     (1L to 10L).foreach(id => assert(packs2(id) >= packs1(id), s"doc $id moved back"))
   }
 
+  test("q57 default shard count: a README-shaped kept frame packs as nShards = 32") {
+    // README's training-data example: a filtered frame joined back onto
+    // the NDJSON documents, packed with the statistics-sized shard count
+    import org.apache.spark.sql.types.StructType
+    val s = spark
+    import s.implicits._
+    val path = graft.TestSpark.tempDir("graft_pack_readme") + "/corpus"
+    graft.sources.JsonLines.write((1L to 300L)
+      .map(i => (i, Seq.fill((i % 13 + 1).toInt)(s"w$i").mkString(" ")))
+      .toDF("doc_id", "text"), path)
+    val docs = graft.sources.JsonLines.read(spark, path,
+      new StructType().add("doc_id", "long").add("text", "string"))
+    val dups = docs.filter(col("doc_id") % 7 === 0).select(col("doc_id"))
+    val kept = docs.join(dups, Seq("doc_id"), "left_anti")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(col("doc_id")).collect().toSeq
+    val packed = rows(Curation.packedSequences(kept, "doc_id", budget = 2048))
+    assert(packed.size === 300 - 300 / 7)
+    assert(packed.map(_.getAs[Long]("shard")).distinct.size > 1)
+    assert(packed === rows(Curation.packedSequences(kept, "doc_id", budget = 2048, nShards = 32)))
+  }
+
   test("q64 chunked: window boundaries, overlap, short docs, never-empty last chunk") {
     val s = spark
     import s.implicits._
